@@ -30,7 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sfs3_kinesis_spark.plans import REGISTRY  # noqa: E402
-from sfs3_kinesis_spark.session import get_spark  # noqa: E402
+from sfs3_kinesis_spark.session import default_parallelism, get_spark  # noqa: E402
 
 #: the headline set: one per operator family + the heavy LLM ops.
 HEADLINE = [
@@ -238,7 +238,7 @@ def main() -> None:
         # the core count the harness was ASKED to run at (master
         # local[N]) — r10 verdict: low-core runs self-mislabeled
         # because sched_getaffinity still reports the box's 32
-        "cpus_requested": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus_requested": default_parallelism(),
         "load_start_1m": load_start,
         "load_1m": load_1m,
     }

@@ -9,11 +9,14 @@ state document back from S3.  :class:`Engine` exposes exactly those
 verbs over the streaming pipeline:
 
 * :meth:`submit` — assign a txn id (the reference's flake-id hex,
-  pollingsvc.js:15-26) and append the request row to the watched
-  ingest directory (the stream source's S3-prefix twin);
-* :meth:`await_completion` — the polling variant (EP1): watch the
-  process-state store for the terminal status, bounded by the
-  reference's 20 s request budget (pollingsvc.js:133);
+  pollingsvc.js:15-26) and publish the request row to the watched
+  ingest directory (the stream source's S3-prefix twin) as one
+  atomic file: written under a hidden ``.``-prefixed name the file
+  index skips, then renamed to its visible name — no Spark job;
+* :meth:`await_completion` — the polling variant (EP1): look the
+  txn up in the process-state store, then sleep until the store's
+  next commit (a status only changes when a micro-batch commits),
+  bounded by the reference's 20 s request budget (pollingsvc.js:133);
 * :meth:`status` / :meth:`state_document` — the Step Functions
   ``describeExecution`` status read (pollingsvc.js:95-111) and the
   whole-document S3 read (aprocess.js:21-24);
@@ -21,7 +24,7 @@ verbs over the streaming pipeline:
   (svckinesis.js:188-212), here an exactly-once parquet event log
   with idempotent event ids instead of fire-and-forget Kinesis.
 
-Driver-side work is strictly O(1) per verb — a one-row file append
+Driver-side work is strictly O(1) per verb — a one-row file publish
 or a keyed point lookup; all transformation happens in the streaming
 query.  At scale the ingest dir becomes an object-store prefix (or a
 Kafka/Kinesis topic via ``sources.stream``), and the state store a
@@ -31,12 +34,12 @@ keyed table — the facade does not change.
 from __future__ import annotations
 
 import os
-import threading
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sfs3_kinesis_spark.operators.pipeline import Step
 from sfs3_kinesis_spark.sources.sinks import KeyedUpsertSink
@@ -69,28 +72,29 @@ class Engine:
             self._sink, steps=steps, on_events=self._append_events
         )
         self._query = None
-        # concurrent submits share requests_dir/_temporary (Hadoop's
-        # FileOutputCommitter cleans it per job) — one job's commit
-        # can delete another's in-flight task files, silently losing
-        # an accepted request.  The facade serializes the one-row
-        # appends; real concurrent ingress is the stream source's
-        # job, not this veneer.
-        self._submit_lock = threading.Lock()
 
     # -- service verbs ------------------------------------------------ #
 
     def submit(self, payload_json: str) -> str:
         """Accept a request, assign the txn id, enqueue it.  Returns
         the txn id immediately (the reference returns it only with
-        the terminal response; exposing it enables the polling path)."""
+        the terminal response; exposing it enables the polling path).
+
+        The row lands as its own parquet file.  Spark's file index
+        skips ``.``-prefixed names, so the stream never sees the file
+        half-written; the rename publishes it whole.  Each submit owns
+        its file, so concurrent submits share no staging state."""
         txn_id = f"0x{uuid.uuid4().hex[:16]}"  # flake-id-shaped hex key
-        with self._submit_lock:
-            (
-                self.spark.createDataFrame([(txn_id, payload_json)], REQUEST_SCHEMA)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(self.requests_dir)
-            )
+        name = f"part-{txn_id}.parquet"
+        hidden = os.path.join(self.requests_dir, "." + name)
+        table = pa.table({"txn_id": [txn_id], "request": [payload_json]})
+        try:
+            pq.write_table(table, hidden)
+            os.rename(hidden, os.path.join(self.requests_dir, name))
+        except BaseException:
+            if os.path.exists(hidden):
+                os.remove(hidden)
+            raise
         return txn_id
 
     def status(self, txn_id: str) -> str | None:
@@ -130,18 +134,23 @@ class Engine:
             return None
         return self.spark.read.parquet(self.events_dir).drop("epoch")
 
-    def await_completion(self, txn_id: str, timeout_s: float = 20.0, poll_s: float = 0.25) -> str:
-        """EP1 polling semantics: poll the state store until terminal
-        or the request budget lapses (pollingsvc.js:123,133).  One
-        final check after the deadline: the terminal status may have
-        landed during the last sleep — reporting TIMEOUT when
-        status() already answers is a misreport, not a timeout."""
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
+    def await_completion(self, txn_id: str, timeout_s: float = 20.0) -> str:
+        """EP1 polling semantics: look the txn up until terminal or
+        the request budget lapses (pollingsvc.js:123,133).  A status
+        only changes when a micro-batch commits to the state store,
+        so between lookups the wait blocks on the store's next commit
+        instead of a timer.  One final check after the deadline: the
+        terminal status may have landed during the last wait —
+        reporting TIMEOUT when status() already answers is a
+        misreport, not a timeout."""
+        deadline = time.monotonic() + timeout_s
+        while True:
+            seen = self._sink.version  # read before the lookup: no lost wakeup
             s = self.status(txn_id)
             if s is not None:
                 return s
-            time.sleep(poll_s)
+            if not self._sink.wait_for_version(seen + 1, deadline - time.monotonic()):
+                break
         s = self.status(txn_id)
         return s if s is not None else "TIMEOUT"
 

@@ -13,7 +13,9 @@ verb (``Engine.submit``); this module closes that gap with
 
 * ``POST /p1``             — submit, await terminal, answer
   200/400/500 exactly like the reference (body carries txn_id +
-  status JSON either way);
+  status JSON either way).  The submit publishes one request file
+  atomically and runs no Spark job; the held request wakes on each
+  state-store commit, not on a timer;
 * ``POST /p1?mode=async``  — submit and answer 202 immediately with
   the txn id (the affordance the reference lacks: its client holds
   the socket for the whole pipeline);
@@ -24,9 +26,10 @@ verb (``Engine.submit``); this module closes that gap with
   (aprocess.js:21-24).
 
 Threading: ``ThreadingHTTPServer`` on a daemon thread; each request
-thread calls Engine verbs, which are thread-safe (a one-row parquet
-append or a keyed point lookup through the shared SparkSession — the
-JVM session is designed for concurrent Python callers).  At scale
+thread calls Engine verbs, which are thread-safe (an atomic one-row
+file publish, a keyed point lookup through the shared SparkSession —
+the JVM session is designed for concurrent Python callers — or a wait
+on the state store's commit condition).  At scale
 this facade stays O(1) per request exactly like the library verbs;
 the HTTP layer is a veneer, never a data plane.
 """
@@ -57,15 +60,10 @@ class EngineHttpService:
         host: str = "127.0.0.1",
         port: int = 0,
         request_budget_s: float = REQUEST_BUDGET_S,
-        poll_s: float = 0.25,
     ):
         self.engine = engine
         self._host, self._port = host, port
         self.budget = request_budget_s
-        #: per-held-request poll cadence; each poll is one point
-        #: lookup, so under heavy concurrency (hundreds of held
-        #: sockets) a coarser cadence trades latency for poll load
-        self.poll_s = poll_s
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
 
@@ -129,9 +127,7 @@ class EngineHttpService:
                 if "mode=async" in (url.query or ""):
                     self._reply(202, {"txn_id": txn_id, "status": "RUNNING"})
                     return
-                status = service.engine.await_completion(
-                    txn_id, timeout_s=service.budget, poll_s=service.poll_s
-                )
+                status = service.engine.await_completion(txn_id, timeout_s=service.budget)
                 # the reference's terminal routing (svckinesis.js:102-124):
                 # SUCCEEDED → 200, FAILED → 400, budget lapse → 500
                 code = {"SUCCEEDED": 200, "FAILED": 400}.get(status, 500)

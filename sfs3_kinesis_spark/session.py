@@ -20,7 +20,9 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may
+    run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "sfs3_kinesis_spark", *, shuffle_partitions: int | None = None) -> SparkSession:

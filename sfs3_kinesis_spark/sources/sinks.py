@@ -16,10 +16,12 @@
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
@@ -93,6 +95,12 @@ class KeyedUpsertSink:
     * reads (``current`` / ``read_version``) merge base + deltas
       with last-writer-wins per key ordered by delta version — the
       MERGE INTO contract, unchanged from round 2.
+    * every version directory's schema is recorded when the sink
+      writes it, so a read passes ``.schema(...)`` and runs no
+      schema-inference job.  A directory found on disk at restart is
+      inferred once, on its first read, and cached.
+    * ``version`` plus :meth:`wait_for_version` let a reader sleep
+      until the next commit instead of polling on a timer.
 
     On a cluster the same ``foreachBatch`` body becomes a
     Delta/Iceberg ``MERGE INTO`` whose transaction log plays the
@@ -120,6 +128,10 @@ class KeyedUpsertSink:
         self._recover_partial_swaps()
         self._snapshots, self._deltas = self._scan_disk()
         self._version = max(self._snapshots + self._deltas, default=0)
+        #: version directory -> its schema (see ``_read``)
+        self._schemas: dict[str, StructType] = {}
+        #: notified on every committed delta (see ``wait_for_version``)
+        self._commit = threading.Condition()
 
     def _recover_partial_swaps(self) -> None:
         """Finish a ``forget_keys`` swap interrupted between its two
@@ -171,6 +183,15 @@ class KeyedUpsertSink:
     def _delta_dir(self, version: int) -> str:
         return os.path.join(self.path, f"d{version}")
 
+    def _read(self, d: str) -> DataFrame:
+        """One version directory with its recorded schema.  Inferring
+        it instead costs a Spark job per directory per read."""
+        schema = self._schemas.get(d)
+        if schema is None:  # written before this instance: infer once
+            # (readers racing here both infer the same schema; harmless)
+            schema = self._schemas[d] = self.spark.read.parquet(d).schema
+        return self.spark.read.schema(schema).parquet(d)
+
     def _merged_as_of(self, version: int, key: str | None = None) -> DataFrame:
         """base snapshot (newest <= version) + the delta tail, merged
         last-writer-wins per key on the monotone delta version.
@@ -183,9 +204,9 @@ class KeyedUpsertSink:
         base_v = max((s for s in self._snapshots if s <= version), default=0)
         parts = []
         if base_v:
-            parts.append(self.spark.read.parquet(self._snapshot_dir(base_v)))
+            parts.append(self._read(self._snapshot_dir(base_v)))
         parts.extend(
-            self.spark.read.parquet(self._delta_dir(v))
+            self._read(self._delta_dir(v))
             for v in self._deltas
             if base_v < v <= version
         )
@@ -202,6 +223,18 @@ class KeyedUpsertSink:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
+
+    @property
+    def version(self) -> int:
+        """The latest committed version (0: nothing written yet)."""
+        return self._version
+
+    def wait_for_version(self, version: int, timeout_s: float) -> bool:
+        """Block until ``version`` is committed or ``timeout_s``
+        lapses; True if it is committed.  A commit wakes every waiter
+        as soon as its delta is readable, before any compaction."""
+        with self._commit:
+            return self._commit.wait_for(lambda: self._version >= version, timeout_s)
 
     def current(self, key: str | None = None) -> DataFrame | None:
         if self._version == 0:
@@ -232,9 +265,13 @@ class KeyedUpsertSink:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        delta.write.mode("overwrite").parquet(self._delta_dir(next_version))
-        self._deltas.append(next_version)
-        self._version = next_version
+        d = self._delta_dir(next_version)
+        self._schemas[d] = delta.schema
+        delta.write.mode("overwrite").parquet(d)
+        with self._commit:
+            self._deltas.append(next_version)
+            self._version = next_version
+            self._commit.notify_all()
         if next_version % self.compact_every == 0:
             self._compact(next_version)
 
@@ -243,9 +280,10 @@ class KeyedUpsertSink:
         read path never merges more than ``compact_every`` deltas.
         Deltas stay on disk for time travel (a retention policy would
         GC them past a horizon; irrelevant at test scale)."""
-        self._merged_as_of(version).write.mode("overwrite").parquet(
-            self._snapshot_dir(version)
-        )
+        merged = self._merged_as_of(version)
+        d = self._snapshot_dir(version)
+        self._schemas[d] = merged.schema
+        merged.write.mode("overwrite").parquet(d)
         self._snapshots.append(version)
 
     def vacuum(self, keep_from_version: int | None = None) -> int:
@@ -279,11 +317,13 @@ class KeyedUpsertSink:
         for v in list(self._deltas):
             if v <= anchor:
                 shutil.rmtree(self._delta_dir(v), ignore_errors=True)
+                self._schemas.pop(self._delta_dir(v), None)
                 self._deltas.remove(v)
                 removed += 1
         for s in list(self._snapshots):
             if s < anchor:
                 shutil.rmtree(self._snapshot_dir(s), ignore_errors=True)
+                self._schemas.pop(self._snapshot_dir(s), None)
                 self._snapshots.remove(s)
                 removed += 1
         return removed
@@ -321,7 +361,8 @@ class KeyedUpsertSink:
             self._delta_dir(v) for v in self._deltas
         ]
         for d in dirs:
-            df = self.spark.read.parquet(d)
+            # the rewrite keeps the columns, so d keeps its recorded schema
+            df = self._read(d)
             kept = df.join(F.broadcast(key_df), self.key_col, "left_anti").persist()
             try:
                 n_kept = kept.count()

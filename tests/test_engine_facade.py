@@ -42,7 +42,7 @@ def test_unknown_txn_and_timeout_paths(spark, tmp_path):
     # pipeline not started: the request budget lapses (pollingsvc 20 s
     # semantics, shortened for the test)
     t1 = eng.submit('{"foo": true}')
-    assert eng.await_completion(t1, timeout_s=1.0, poll_s=0.2) == "TIMEOUT"
+    assert eng.await_completion(t1, timeout_s=1.0) == "TIMEOUT"
 
 
 def test_event_log_redelivery_is_idempotent(spark, tmp_path):
@@ -67,10 +67,10 @@ def test_event_log_redelivery_is_idempotent(spark, tmp_path):
 
 
 def test_concurrent_submits_all_land(spark, tmp_path):
-    """Concurrent submit() calls share the ingest directory; without
-    serialization Hadoop's shared _temporary staging dir lets one
-    job's commit delete another's in-flight files (a lost accepted
-    request).  Eight threads x two submits each must all land."""
+    """Concurrent submit() calls share the ingest directory; each
+    publishes its own uniquely named file, so no submit can clobber or
+    hide another's (a lost accepted request).  Eight threads x two
+    submits each must all land."""
     import concurrent.futures
 
     eng = Engine(spark, str(tmp_path / "eng"))
@@ -91,3 +91,54 @@ def test_empty_steps_rejected_loudly(spark, tmp_path):
     df = spark.createDataFrame([("0x1", "{}")], "txn_id string, request string")
     with pytest.raises(ValueError, match="non-empty"):
         run_pipeline(df, [])
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_submit_runs_no_spark_job_and_leaves_no_temp_file(spark, tmp_path):
+    """submit() publishes its one-row file with pyarrow and a rename:
+    no Spark job, and only the visible ``part-<txn>.parquet`` stays."""
+    import os
+
+    eng = Engine(spark, str(tmp_path / "eng"))
+    jobs0 = _next_job_id(spark)
+    txn = eng.submit('{"foo": true}')
+    assert _next_job_id(spark) - jobs0 == 0
+    assert os.listdir(eng.requests_dir) == [f"part-{txn}.parquet"]
+    assert [tuple(r) for r in spark.read.parquet(eng.requests_dir).collect()] == [
+        (txn, '{"foo": true}')
+    ]
+
+
+def test_hidden_partial_file_is_never_read(spark, tmp_path):
+    """A ``.``-prefixed file in the ingest directory is a publish still
+    in flight: neither the running stream nor a batch read of the
+    directory may see it, whole or truncated."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    eng = Engine(spark, str(tmp_path / "eng"))
+    # a complete hidden file (its row must never surface) and a
+    # truncated one (reading it would fail the stream)
+    whole = os.path.join(eng.requests_dir, ".part-0xhidden.parquet")
+    pq.write_table(pa.table({"txn_id": ["0xhidden"], "request": ["{}"]}), whole)
+    with open(whole, "rb") as fh:
+        data = fh.read()
+    with open(os.path.join(eng.requests_dir, ".part-0xpartial.parquet"), "wb") as fh:
+        fh.write(data[: len(data) // 2])
+
+    txn = eng.submit('{"foo": true}')
+    q = eng.start()
+    try:
+        assert eng.await_completion(txn, timeout_s=60) == "SUCCEEDED"
+        q.processAllAvailable()
+        assert q.exception() is None and q.isActive
+        assert eng.status("0xhidden") is None
+        assert {r.txn_id for r in eng.events().collect()} == {txn}
+    finally:
+        eng.stop()
+    assert [r.txn_id for r in spark.read.parquet(eng.requests_dir).collect()] == [txn]

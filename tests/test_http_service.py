@@ -148,16 +148,15 @@ def test_http_listener_under_concurrent_load(spark, tmp_path):
     )
     eng = Engine(spark, str(tmp_path / "eng"), steps=steps)
     eng.start()
-    # 1 s poll cadence: 32 held sockets x 4 polls/s would hammer the
-    # local driver with ~128 point-lookup jobs/s — the cadence knob is
-    # exactly what a deployment would tune under this fan-in
-    svc = EngineHttpService(eng, request_budget_s=120, poll_s=1.0)
+    # held sockets wake on state-store commits, not on a timer, so
+    # 32 of them add no lookup load while the stream is idle
+    svc = EngineHttpService(eng, request_budget_s=120)
     port = svc.start()
     # second listener over an engine that is NEVER started: its held
     # responses must lapse to 500 TIMEOUT after exactly their budget,
     # concurrently with the main listener's live traffic
     eng_stale = Engine(spark, str(tmp_path / "eng_stale"))
-    svc_stale = EngineHttpService(eng_stale, request_budget_s=3.0, poll_s=1.0)
+    svc_stale = EngineHttpService(eng_stale, request_budget_s=3.0)
     port_stale = svc_stale.start()
     base, base_stale = (
         f"http://127.0.0.1:{port}",
@@ -192,8 +191,8 @@ def test_http_listener_under_concurrent_load(spark, tmp_path):
     assert all(c == 400 and p["status"] == "FAILED" for c, p, _ in fails), fails
     assert all(c == 500 and p["status"] == "TIMEOUT" for c, p, _ in lapses), lapses
     # the lapse responses were HELD for their budget (not failed
-    # fast); the upper bound allows the submit serialization the
-    # engine lock imposes under a 32-socket burst on local[32]
+    # fast); the upper bound allows for a 32-socket burst contending
+    # for the shared driver
     assert all(3.0 <= dt < 240.0 for _, _, dt in lapses), [d for *_, d in lapses]
     # every live response landed inside its 90 s budget; the whole
     # 40-request burst resolves in well under the per-request worst

@@ -288,3 +288,140 @@ def test_forget_keys_swap_crash_recovery(spark, tmp_path):
     KeyedUpsertSink(spark, path, key_col="txn_id", compact_every=100)
     assert not os.path.exists(d1 + ".tmp") and not os.path.exists(d1 + ".old")
     assert {r.txn_id for r in spark.read.parquet(d1).collect()} == {"b"}
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _snapshot_plus_deltas(spark, path):
+    """compact_every=3 over five batches: snapshot v3 + deltas d4, d5
+    on the current read path."""
+    sink = KeyedUpsertSink(spark, path, key_col="k", compact_every=3)
+    for i in range(5):
+        sink.apply_batch(
+            spark.createDataFrame([(f"k{i % 2}", i)], "k string, val int"), epoch_id=i
+        )
+    return sink
+
+
+def test_upsert_sink_point_read_runs_no_schema_inference(spark, tmp_path):
+    """Every version directory's schema is recorded at write time, so
+    building a read runs no job and a point lookup runs only the jobs
+    of its own query: the merge shuffle's map stage and the result
+    stage.  Inferring the schema of each part would add one job for
+    each of the three directories."""
+    sink = _snapshot_plus_deltas(spark, str(tmp_path / "st"))
+    assert sink._snapshots == [3] and sink._deltas == [1, 2, 3, 4, 5]
+    jobs0 = _next_job_id(spark)
+    cur = sink.current("k0")
+    assert _next_job_id(spark) - jobs0 == 0
+    row = cur.first()
+    assert row.val == 4
+    assert _next_job_id(spark) - jobs0 == 2
+
+
+def test_upsert_sink_reopened_infers_each_schema_once(spark, tmp_path):
+    """A sink reopened over directories it did not write infers each
+    directory's schema on its first read only."""
+    path = str(tmp_path / "st")
+    _snapshot_plus_deltas(spark, path)
+    resumed = KeyedUpsertSink(spark, path, key_col="k", compact_every=3)
+    jobs0 = _next_job_id(spark)
+    resumed.current("k0")
+    inferred = _next_job_id(spark) - jobs0
+    assert 1 <= inferred <= 3  # v3, d4, d5
+    assert set(resumed._schemas) == {
+        resumed._snapshot_dir(3), resumed._delta_dir(4), resumed._delta_dir(5)
+    }
+    jobs0 = _next_job_id(spark)
+    cur = resumed.current("k1")
+    assert _next_job_id(spark) - jobs0 == 0
+    assert cur.first().val == 3
+    # the cached schema reads the same rows inference does
+    assert {r.k: r.val for r in resumed.current().collect()} == {"k0": 4, "k1": 3}
+
+
+def test_upsert_sink_vacuum_drops_cached_schemas(spark, tmp_path):
+    """vacuum forgets the schemas of the directories it removes, so
+    the cache holds exactly the directories on disk."""
+    import os
+
+    path = str(tmp_path / "st")
+    sink = KeyedUpsertSink(spark, path, key_col="k", compact_every=2)
+    for i in range(7):
+        sink.apply_batch(
+            spark.createDataFrame([(f"k{i % 3}", i)], "k string, val int"), epoch_id=i
+        )
+        if sink._snapshots:
+            sink.vacuum()
+        on_disk = {os.path.join(path, d) for d in os.listdir(path)}
+        assert set(sink._schemas) == on_disk
+    assert len(sink._schemas) == 2  # v6 + d7
+    assert {r.k: r.val for r in sink.current().collect()} == {"k0": 6, "k1": 4, "k2": 5}
+
+
+def test_upsert_sink_wait_for_version(spark, tmp_path):
+    """wait_for_version wakes on the commit of the awaited version,
+    before that batch's compaction runs, and returns False once its
+    timeout lapses with nothing committed."""
+    import threading
+    import time
+
+    sink = KeyedUpsertSink(spark, str(tmp_path / "st"), key_col="k", compact_every=1)
+    t0 = time.monotonic()
+    assert sink.wait_for_version(1, 0.3) is False
+    assert time.monotonic() - t0 >= 0.3
+
+    woke = threading.Event()
+    real_compact = sink._compact
+
+    def compact_after_wake(version):
+        # the commit must already have woken the waiter: a notify
+        # after compaction would leave this wait to time out
+        assert woke.wait(30), "waiter was not woken before compaction"
+        real_compact(version)
+
+    sink._compact = compact_after_wake
+    waiter = threading.Thread(
+        target=lambda: sink.wait_for_version(1, 60) and woke.set(), daemon=True
+    )
+    waiter.start()
+    assert not woke.wait(0.2)  # nothing committed yet
+    sink.apply_batch(spark.createDataFrame([("a", 1)], "k string, v int"), epoch_id=0)
+    waiter.join(5)
+    assert not waiter.is_alive()
+    assert woke.is_set() and sink.version == 1 and sink._snapshots == [1]
+
+
+def test_upsert_sink_commits_wake_every_waiter(spark, tmp_path):
+    """More waiters than cores, on several versions, with a short
+    thread switch interval: every commit wakes its waiters and none
+    misses a wakeup or wakes early."""
+    import sys
+    import threading
+
+    sink = KeyedUpsertSink(spark, str(tmp_path / "st"), key_col="k", compact_every=100)
+    woke: dict[int, int] = {}
+    lock = threading.Lock()
+
+    def wait(i):
+        target = 1 + i % 4
+        ok = sink.wait_for_version(target, 120)
+        with lock:
+            woke[i] = sink.version if ok else -1
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        waiters = [threading.Thread(target=wait, args=(i,), daemon=True) for i in range(16)]
+        for w in waiters:
+            w.start()
+        for e in range(4):
+            sink.apply_batch(spark.createDataFrame([(f"k{e}", e)], "k string, v int"), e)
+        for w in waiters:
+            w.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(w.is_alive() for w in waiters)
+    assert all(woke[i] >= 1 + i % 4 for i in range(16)), woke
