@@ -19,16 +19,19 @@ verbs over the streaming pipeline:
   bounded by the reference's 20 s request budget (pollingsvc.js:133);
 * :meth:`status` / :meth:`state_document` — the Step Functions
   ``describeExecution`` status read (pollingsvc.js:95-111) and the
-  whole-document S3 read (aprocess.js:21-24);
+  whole-document S3 read (aprocess.js:21-24), each one keyed read of
+  the state store's parquet files with pyarrow — no Spark job;
 * :meth:`events` — the consumer view of the status-event stream
   (svckinesis.js:188-212), here an exactly-once parquet event log
   with idempotent event ids instead of fire-and-forget Kinesis.
 
 Driver-side work is strictly O(1) per verb — a one-row file publish
-or a keyed point lookup; all transformation happens in the streaming
-query.  At scale the ingest dir becomes an object-store prefix (or a
-Kafka/Kinesis topic via ``sources.stream``), and the state store a
-keyed table — the facade does not change.
+or a keyed point read of at most one snapshot and its delta tail; all
+transformation happens in the streaming query, whose micro-batch is
+the only Spark job a request causes.  At scale the ingest dir becomes
+an object-store prefix (or a Kafka/Kinesis topic via
+``sources.stream``), and the state store a keyed table — the facade
+does not change.
 """
 
 from __future__ import annotations
@@ -100,24 +103,18 @@ class Engine:
     def status(self, txn_id: str) -> str | None:
         """Terminal status for a txn, or None while still in flight
         (the 3-way RUNNING/SUCCEEDED/FAILED branch, pollingsvc.js:77-93).
-        The key filter is pushed below the state-store merge, so a
-        poll is a point lookup, not a full-table merge."""
-        cur = self._sink.current(key=txn_id)
-        if cur is None:
-            return None
-        row = cur.select("status").first()
-        return row["status"] if row is not None else None
+        A keyed point read of the state store's parquet files: no
+        Spark job."""
+        doc = self._sink.lookup(txn_id, ["status"])
+        return doc["status"] if doc is not None else None
 
     def state_document(self, txn_id: str) -> dict | None:
-        """The whole enriched process-state document (aprocess.js:24).
-        Store bookkeeping columns (``_v``, ``_epoch``) are dropped:
-        they are LSM version counters whose meaning shifts on
-        compaction, not part of the client-facing document."""
-        cur = self._sink.current(key=txn_id)
-        if cur is None:
-            return None
-        row = cur.drop("_v", "_epoch").first()
-        return row.asDict(recursive=True) if row is not None else None
+        """The whole enriched process-state document (aprocess.js:24),
+        read like :meth:`status`.  Store bookkeeping columns (``_v``,
+        ``_epoch``) are left out: they are LSM version counters whose
+        meaning shifts on compaction, not part of the client-facing
+        document."""
+        return self._sink.lookup(txn_id)
 
     def events(self) -> DataFrame | None:
         """The status-event log (txn_id, status, event_id, event_time)

@@ -26,10 +26,10 @@ verb (``Engine.submit``); this module closes that gap with
   (aprocess.js:21-24).
 
 Threading: ``ThreadingHTTPServer`` on a daemon thread; each request
-thread calls Engine verbs, which are thread-safe (an atomic one-row
-file publish, a keyed point lookup through the shared SparkSession —
-the JVM session is designed for concurrent Python callers — or a wait
-on the state store's commit condition).  At scale
+thread calls Engine verbs, which are thread-safe and run no Spark job
+(an atomic one-row file publish, a keyed pyarrow read of the state
+store under its commit lock, or a wait on that lock's commit
+condition).  At scale
 this facade stays O(1) per request exactly like the library verbs;
 the HTTP layer is a veneer, never a data plane.
 """

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from sfs3_kinesis_spark.operators.scale import pin_shared
+
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 NORM = "sqrt(aggregate(transform({a}, x -> x * x), 0D, (acc, x) -> acc + x))"
 
@@ -475,7 +477,9 @@ def kmeans_lloyd(
     is the exact integer sum of squared distances to the final
     centroid set.
     """
-    dfv = _quantized(embeddings, vec_col, id_col, scale).cache()
+    dfv = pin_shared(
+        _quantized(embeddings, vec_col, id_col, scale), bounded=False, tag="kmeans_quantized"
+    )
     cents = _lloyd_centroids(dfv, k, iterations)
     if not cents:  # empty corpus → empty result, stable schema
         return embeddings.sparkSession.createDataFrame(

@@ -25,6 +25,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def default_driver_memory() -> str:
+    """Half the box's physical memory in whole GB, within [1g, 48g]:
+    the JVM heap must leave room for its own off-heap use and for the
+    Python workers, or the kernel kills it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, total // 2**31))}g"
+
+
 def get_spark(app_name: str = "sfs3_kinesis_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -61,7 +69,7 @@ def get_spark(app_name: str = "sfs3_kinesis_spark", *, shuffle_partitions: int |
         # (sources.batch.load_table)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # reliable-checkpoint files are reclaimed when their RDD is GC'd
         # (otherwise every lineage_pin call leaks a checkpoint dir)

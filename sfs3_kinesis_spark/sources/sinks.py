@@ -18,6 +18,8 @@ from __future__ import annotations
 import os
 import threading
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -92,13 +94,19 @@ class KeyedUpsertSink:
       deltas into snapshot ``v{v}`` (read amplification stays
       bounded: a read touches one snapshot + at most
       ``compact_every`` deltas).
-    * reads (``current`` / ``read_version``) merge base + deltas
-      with last-writer-wins per key ordered by delta version — the
-      MERGE INTO contract, unchanged from round 2.
+    * table reads (``current`` / ``read_version``) merge base +
+      deltas with last-writer-wins per key ordered by delta version —
+      the MERGE INTO contract, unchanged from round 2.
+    * a point read of one key (:meth:`lookup`) runs no Spark job: it
+      scans the same directories newest first with pyarrow and stops
+      at the first that holds the key.
     * every version directory's schema is recorded when the sink
-      writes it, so a read passes ``.schema(...)`` and runs no
+      writes it, so a table read passes ``.schema(...)`` and runs no
       schema-inference job.  A directory found on disk at restart is
-      inferred once, on its first read, and cached.
+      inferred once, on its first table read, and cached.
+    * every change to the set of readable directories (a commit, a
+      compaction, ``vacuum``, a ``forget_keys`` swap) happens under
+      the commit lock that :meth:`lookup` holds while it scans.
     * ``version`` plus :meth:`wait_for_version` let a reader sleep
       until the next commit instead of polling on a timer.
 
@@ -183,6 +191,14 @@ class KeyedUpsertSink:
     def _delta_dir(self, version: int) -> str:
         return os.path.join(self.path, f"d{version}")
 
+    def _columns(self, d: str) -> list[str]:
+        """The column names of version directory ``d``: its recorded
+        schema's, else its parquet footer's (no Spark job)."""
+        schema = self._schemas.get(d)
+        if schema is not None:
+            return schema.fieldNames()
+        return pq.ParquetDataset(d).schema.names
+
     def _read(self, d: str) -> DataFrame:
         """One version directory with its recorded schema.  Inferring
         it instead costs a Spark job per directory per read."""
@@ -192,15 +208,9 @@ class KeyedUpsertSink:
             schema = self._schemas[d] = self.spark.read.parquet(d).schema
         return self.spark.read.schema(schema).parquet(d)
 
-    def _merged_as_of(self, version: int, key: str | None = None) -> DataFrame:
+    def _merged_as_of(self, version: int) -> DataFrame:
         """base snapshot (newest <= version) + the delta tail, merged
-        last-writer-wins per key on the monotone delta version.
-
-        ``key`` pushes a single-key point-lookup filter into EVERY
-        part BEFORE the union and window, so a poll for one txn reads
-        only the row groups whose min/max statistics can contain that
-        key instead of merging the whole table (the facade's O(1)
-        claim; parquet predicate pushdown does the pruning)."""
+        last-writer-wins per key on the monotone delta version."""
         base_v = max((s for s in self._snapshots if s <= version), default=0)
         parts = []
         if base_v:
@@ -212,8 +222,6 @@ class KeyedUpsertSink:
         )
         if not parts:
             raise ValueError(f"no state at version {version}")
-        if key is not None:
-            parts = [p.filter(F.col(self.key_col) == key) for p in parts]
         merged = parts[0]
         for p in parts[1:]:
             merged = merged.unionByName(p, allowMissingColumns=True)
@@ -236,10 +244,52 @@ class KeyedUpsertSink:
         with self._commit:
             return self._commit.wait_for(lambda: self._version >= version, timeout_s)
 
-    def current(self, key: str | None = None) -> DataFrame | None:
+    def current(self) -> DataFrame | None:
         if self._version == 0:
             return None
-        return self._merged_as_of(self._version, key=key)
+        return self._merged_as_of(self._version)
+
+    def lookup(self, key, columns: list[str] | None = None) -> dict | None:
+        """One key's current row as a dict, read with pyarrow: no Spark
+        job.  ``columns`` narrows the read; ``_v``/``_epoch`` are never
+        returned.  None when the key has no row.
+
+        The read path's directories are scanned newest first, each with
+        the key filter pushed into the parquet reader.  A directory
+        holds at most one row per key and a newer one carries a larger
+        ``_v``, so the first hit is the row :meth:`current` keeps.  The
+        dict equals ``current()``'s row for the key, ``asDict(
+        recursive=True)``: columns of the read path a directory lacks
+        are None, maps are dicts, and Spark's INT96 timestamps read as
+        naive UTC, the session time zone.  The scan runs under the
+        commit lock, which every change to the set of directories also
+        takes, so no directory vanishes mid-read."""
+        with self._commit:
+            base_v = max(self._snapshots, default=0)
+            path = [self._snapshot_dir(base_v)] if base_v else []
+            path += [self._delta_dir(v) for v in self._deltas if v > base_v]
+            have = {d: self._columns(d) for d in path}
+            # unionByName's column order: base first, then each delta's new ones
+            names = dict.fromkeys(n for d in path for n in have[d])
+            if columns is not None:
+                names = dict.fromkeys(n for n in columns if n in names)
+            for n in ("_v", "_epoch"):
+                names.pop(n, None)
+            for d in reversed(path):
+                hit = pq.read_table(
+                    d,
+                    columns=[n for n in names if n in have[d]],
+                    filters=[(self.key_col, "==", key)],
+                    coerce_int96_timestamp_unit="us",
+                )
+                if hit.num_rows:
+                    break
+            else:
+                return None
+        row = dict.fromkeys(names)
+        for field in hit.schema:
+            row[field.name] = _to_py(hit.column(field.name)[0].as_py(), field.type)
+        return row
 
     def read_version(self, version: int) -> DataFrame:
         """Time-travel read: the table AS OF version ``version``
@@ -284,7 +334,8 @@ class KeyedUpsertSink:
         d = self._snapshot_dir(version)
         self._schemas[d] = merged.schema
         merged.write.mode("overwrite").parquet(d)
-        self._snapshots.append(version)
+        with self._commit:
+            self._snapshots.append(version)
 
     def vacuum(self, keep_from_version: int | None = None) -> int:
         """Garbage-collect history: drop snapshots and deltas no
@@ -313,20 +364,15 @@ class KeyedUpsertSink:
                 "compact first or raise the horizon"
             )
         anchor = max(anchors, default=0)
-        removed = 0
-        for v in list(self._deltas):
-            if v <= anchor:
-                shutil.rmtree(self._delta_dir(v), ignore_errors=True)
-                self._schemas.pop(self._delta_dir(v), None)
-                self._deltas.remove(v)
-                removed += 1
-        for s in list(self._snapshots):
-            if s < anchor:
-                shutil.rmtree(self._snapshot_dir(s), ignore_errors=True)
-                self._schemas.pop(self._snapshot_dir(s), None)
-                self._snapshots.remove(s)
-                removed += 1
-        return removed
+        with self._commit:
+            gone = [self._delta_dir(v) for v in self._deltas if v <= anchor]
+            gone += [self._snapshot_dir(s) for s in self._snapshots if s < anchor]
+            self._deltas = [v for v in self._deltas if v > anchor]
+            self._snapshots = [s for s in self._snapshots if s >= anchor]
+            for d in gone:
+                shutil.rmtree(d, ignore_errors=True)
+                self._schemas.pop(d, None)
+        return len(gone)
 
     def forget_keys(self, keys) -> int:
         """GDPR right-to-be-forgotten: physically erase every row for
@@ -357,9 +403,9 @@ class KeyedUpsertSink:
                 [(k,) for k in keys], [self.key_col]
             ).distinct()
         removed = 0
-        dirs = [self._snapshot_dir(s) for s in self._snapshots] + [
-            self._delta_dir(v) for v in self._deltas
-        ]
+        with self._commit:
+            dirs = [self._snapshot_dir(s) for s in self._snapshots]
+            dirs += [self._delta_dir(v) for v in self._deltas]
         for d in dirs:
             # the rewrite keeps the columns, so d keeps its recorded schema
             df = self._read(d)
@@ -382,8 +428,9 @@ class KeyedUpsertSink:
                 kept.write.mode("overwrite").parquet(tmp)
             finally:
                 kept.unpersist()
-            os.rename(d, old)
-            os.rename(tmp, d)
+            with self._commit:  # a lookup never finds d missing
+                os.rename(d, old)
+                os.rename(tmp, d)
             shutil.rmtree(old)
             removed += n_all - n_kept
         if removed:
@@ -395,6 +442,23 @@ class KeyedUpsertSink:
 
     def writer(self, stream_df: DataFrame):
         return stream_df.writeStream.foreachBatch(self.apply_batch).outputMode("update")
+
+
+def _to_py(value, typ: pa.DataType):
+    """A pyarrow ``as_py`` value in the shape Spark's ``collect`` +
+    ``asDict(recursive=True)`` gives it: maps as dicts (pyarrow gives
+    lists of pairs), recursively through structs and lists."""
+    if value is None:
+        return None
+    if pa.types.is_map(typ):
+        return {
+            _to_py(k, typ.key_type): _to_py(v, typ.item_type) for k, v in value
+        }
+    if pa.types.is_struct(typ):
+        return {f.name: _to_py(value[f.name], f.type) for f in typ}
+    if pa.types.is_list(typ):
+        return [_to_py(v, typ.value_type) for v in value]
+    return value
 
 
 def write_partitioned(

@@ -142,3 +142,78 @@ def test_hidden_partial_file_is_never_read(spark, tmp_path):
     finally:
         eng.stop()
     assert [r.txn_id for r in spark.read.parquet(eng.requests_dir).collect()] == [txn]
+
+
+def test_status_and_state_reads_run_no_spark_job(spark, tmp_path):
+    """Once a txn is committed, the status poll, the state-document
+    read and the wait on a finished txn are pyarrow point reads of the
+    state store: none of them runs a Spark job."""
+    eng = Engine(spark, str(tmp_path / "eng"))
+    txn = eng.submit('{"foo": true}')
+    eng.start()
+    try:
+        assert eng.await_completion(txn, timeout_s=60) == "SUCCEEDED"
+    finally:
+        eng.stop()  # no micro-batch jobs while counting
+    jobs0 = _next_job_id(spark)
+    assert eng.status(txn) == "SUCCEEDED"
+    doc = eng.state_document(txn)
+    assert eng.await_completion(txn, timeout_s=5) == "SUCCEEDED"
+    assert eng.status("0xdoesnotexist") is None
+    assert _next_job_id(spark) - jobs0 == 0
+    assert doc["txn_id"] == txn and doc["status"] == "SUCCEEDED"
+    assert "_v" not in doc and "_epoch" not in doc
+
+
+def test_lookup_races_commits_compactions_and_vacuum(spark, tmp_path):
+    """More readers than cores loop on lookup, with a short thread
+    switch interval, while one thread commits deltas, compacts every
+    second version and vacuums: no lookup raises, and no key's value
+    ever goes backwards."""
+    import sys
+    import threading
+
+    from sfs3_kinesis_spark.sources.sinks import KeyedUpsertSink
+
+    sink = KeyedUpsertSink(spark, str(tmp_path / "st"), key_col="k", compact_every=2)
+    keys = ["k0", "k1", "k2"]
+    sink.apply_batch(spark.createDataFrame([(k, 0) for k in keys], "k string, val int"), 0)
+    stop = threading.Event()
+    errors: list[str] = []
+    reads = [0]
+
+    def reader():
+        last = dict.fromkeys(keys, 0)
+        while not stop.is_set():
+            for k in keys:
+                try:
+                    row = sink.lookup(k)
+                except Exception as exc:  # noqa: BLE001
+                    errors.append(repr(exc))
+                    return
+                if row is None or row["val"] < last[k]:
+                    errors.append(f"{k}: {row} after val {last[k]}")
+                    return
+                last[k] = row["val"]
+                reads[0] += 1
+
+    readers = [threading.Thread(target=reader, daemon=True) for _ in range(6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    for r in readers:
+        r.start()
+    try:
+        for e in range(1, 13):
+            sink.apply_batch(
+                spark.createDataFrame([(keys[e % 3], e)], "k string, val int"), e
+            )
+            sink.vacuum()  # after each compaction, drops the previous read path
+    finally:
+        stop.set()
+        for r in readers:
+            r.join(30)
+        sys.setswitchinterval(interval)
+    assert not any(r.is_alive() for r in readers)
+    assert not errors, errors
+    assert reads[0] > 0
+    assert {k: sink.lookup(k)["val"] for k in keys} == {"k0": 12, "k1": 10, "k2": 11}

@@ -307,39 +307,111 @@ def _snapshot_plus_deltas(spark, path):
 
 def test_upsert_sink_point_read_runs_no_schema_inference(spark, tmp_path):
     """Every version directory's schema is recorded at write time, so
-    building a read runs no job and a point lookup runs only the jobs
-    of its own query: the merge shuffle's map stage and the result
-    stage.  Inferring the schema of each part would add one job for
-    each of the three directories."""
+    building a read runs no job and reading it runs only the jobs of
+    its own query: the merge shuffle's map stage and the result stage.
+    Inferring the schema of each part would add one job for each of
+    the three directories.  A point read (lookup) runs no job at all."""
     sink = _snapshot_plus_deltas(spark, str(tmp_path / "st"))
     assert sink._snapshots == [3] and sink._deltas == [1, 2, 3, 4, 5]
     jobs0 = _next_job_id(spark)
-    cur = sink.current("k0")
+    cur = sink.current()
     assert _next_job_id(spark) - jobs0 == 0
-    row = cur.first()
-    assert row.val == 4
+    assert {r.k: r.val for r in cur.collect()} == {"k0": 4, "k1": 3}
+    assert _next_job_id(spark) - jobs0 == 2
+    assert sink.lookup("k0") == {"k": "k0", "val": 4}
     assert _next_job_id(spark) - jobs0 == 2
 
 
 def test_upsert_sink_reopened_infers_each_schema_once(spark, tmp_path):
-    """A sink reopened over directories it did not write infers each
-    directory's schema on its first read only."""
+    """A sink reopened over directories it did not write answers a
+    lookup from the parquet footers with no job, and infers each
+    directory's schema on its first Spark read only."""
     path = str(tmp_path / "st")
     _snapshot_plus_deltas(spark, path)
     resumed = KeyedUpsertSink(spark, path, key_col="k", compact_every=3)
     jobs0 = _next_job_id(spark)
-    resumed.current("k0")
+    assert resumed.lookup("k0") == {"k": "k0", "val": 4}
+    assert _next_job_id(spark) - jobs0 == 0
+    resumed.current()
     inferred = _next_job_id(spark) - jobs0
     assert 1 <= inferred <= 3  # v3, d4, d5
     assert set(resumed._schemas) == {
         resumed._snapshot_dir(3), resumed._delta_dir(4), resumed._delta_dir(5)
     }
     jobs0 = _next_job_id(spark)
-    cur = resumed.current("k1")
+    cur = resumed.current()
     assert _next_job_id(spark) - jobs0 == 0
-    assert cur.first().val == 3
+    assert cur.filter(F.col("k") == "k1").first().val == 3
     # the cached schema reads the same rows inference does
     assert {r.k: r.val for r in resumed.current().collect()} == {"k0": 4, "k1": 3}
+
+
+def _spark_rows(sink) -> dict:
+    """Every key's merged row from the Spark read, as lookup returns it."""
+    return {
+        r[sink.key_col]: {
+            c: v for c, v in r.asDict(recursive=True).items() if c not in ("_v", "_epoch")
+        }
+        for r in sink.current().collect()
+    }
+
+
+def test_upsert_sink_lookup_equals_spark_merge(spark, tmp_path):
+    """lookup reads the newest directory holding the key with pyarrow
+    and must return exactly the row the Spark merge keeps, through a
+    snapshot plus deltas, overwritten keys, nested / map / timestamp /
+    null values, a column missing from older directories, a reopened
+    sink and a forget_keys erasure."""
+    import datetime as dt
+
+    path = str(tmp_path / "st")
+    sink = KeyedUpsertSink(spark, path, key_col="k", compact_every=3)
+    assert sink.lookup("k0") is None  # empty store
+
+    plain = "k string, val int"
+    rich = plain + (
+        ", doc struct<a:int, tags:array<string>>, attrs map<string,int>,"
+        " at timestamp, note string"
+    )
+    batches = [
+        ([("k0", 0), ("k1", 1), ("k2", 2)], plain),
+        ([("k1", 11)], plain),
+        ([("k3", 3, (1, ["x", "y"]), {"p": 1, "q": None}, dt.datetime(2024, 1, 2, 3, 4, 5, 678), None)], rich),
+        # d4 adds a column no older directory has
+        ([("k0", 40, (2, []), {}, dt.datetime(2025, 6, 7), "n", "e")], rich + ", extra string"),
+        ([("k2", 52), ("k3", 33), ("k4", 4)], plain),  # d5 lacks the rich columns
+    ]
+    for epoch, (rows, schema) in enumerate(batches):
+        sink.apply_batch(spark.createDataFrame(rows, schema), epoch_id=epoch)
+        if sink.version in (3, 5):  # snapshot v3 alone, then v3 + d4, d5
+            want = _spark_rows(sink)
+            jobs0 = _next_job_id(spark)
+            for k, row in want.items():
+                assert sink.lookup(k) == row, k
+                assert sink.lookup(k, ["val", "note"]) == {"val": row["val"], "note": row["note"]}
+            assert sink.lookup("nope") is None
+            assert _next_job_id(spark) - jobs0 == 0
+        if sink.version == 3:
+            assert want["k3"] == {
+                "k": "k3", "val": 3, "doc": {"a": 1, "tags": ["x", "y"]},
+                "attrs": {"p": 1, "q": None}, "at": dt.datetime(2024, 1, 2, 3, 4, 5, 678),
+                "note": None,
+            }
+    assert sink._snapshots == [3] and sink._deltas == [1, 2, 3, 4, 5]
+    assert set(want) == {"k0", "k1", "k2", "k3", "k4"}
+    assert want["k1"]["extra"] is None and want["k3"]["doc"] is None
+    assert want["k0"]["attrs"] == {} and want["k0"]["doc"] == {"a": 2, "tags": []}
+
+    resumed = KeyedUpsertSink(spark, path, key_col="k", compact_every=3)
+    jobs0 = _next_job_id(spark)
+    assert {k: resumed.lookup(k) for k in want} == want
+    assert _next_job_id(spark) - jobs0 == 0
+
+    assert resumed.forget_keys(["k3"]) == 3  # in d3, d5 and snapshot v3
+    want = _spark_rows(resumed)
+    assert "k3" not in want and resumed.lookup("k3") is None
+    for k, row in want.items():
+        assert resumed.lookup(k) == row, k
 
 
 def test_upsert_sink_vacuum_drops_cached_schemas(spark, tmp_path):

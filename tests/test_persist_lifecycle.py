@@ -322,3 +322,36 @@ def test_forget_keys_unpersists_on_failure(spark, tmp_path, monkeypatch):
     assert sink.forget_keys(["a"]) >= 1
     assert _jvm_persistent_count(spark) <= base
     assert {r.txn_id for r in sink.current().collect()} == {"b"}
+
+
+def test_package_has_no_bare_cache():
+    """Every persisted frame goes through the bounded LRU (pin_shared);
+    a bare ``.cache()`` would hold its relation for the session."""
+    import pathlib
+
+    import sfs3_kinesis_spark
+
+    root = pathlib.Path(sfs3_kinesis_spark.__file__).parent
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(root.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if ".cache()" in line
+    ]
+    assert hits == []
+
+
+def test_kmeans_pin_releases_on_clear(spark):
+    """kmeans_lloyd's quantized corpus is pinned through the LRU, so
+    clear_keyed_cache returns the JVM persistent-RDD count to baseline."""
+    from sfs3_kinesis_spark.operators import similarity
+    from sfs3_kinesis_spark.operators.scale import PIN_DECISIONS, clear_keyed_cache
+    from sfs3_kinesis_spark.plans.core import t
+
+    clear_keyed_cache()
+    spark.catalog.clearCache()
+    base = _jvm_persistent_count(spark)
+    similarity.kmeans_lloyd(t(spark, SF_SMOKE, "embeddings"), k=4, iterations=1).collect()
+    assert PIN_DECISIONS["kmeans_quantized"] in ("pinned", "pinned_hit")
+    clear_keyed_cache()
+    assert _jvm_persistent_count(spark) <= base
