@@ -204,40 +204,46 @@ GLOBAL_WINDOW_ALLOWED = {
 }
 
 #: queries whose plan may legitimately carry a LocalRelation leaf
-#: LARGER than LOCAL_ROWS_MAX: their clustering stage runs through
-#: the ADAPTIVE connected-components strategy (operators/dedup.py,
-#: r10) — edge lists at/below SFS3K_DRIVER_CC_MAX_EDGES are solved
-#: driver-side by union-find (the broadcast-join analog: bounded
-#: bytes collected, gated on the MEASURED edge count, value-identical
-#: to the distributed loop per tests/test_dedup_clusters.py's
-#: forced-distributed equivalence case), so the component map
-#: re-enters the plan as a local leaf whose size is the gated graph's
-#: vertex count, not an unbounded collect.  At the audit's default
+#: LARGER than LOCAL_ROWS_MAX, each mapped to the adaptive driver-side
+#: strategy that puts it there.  "cc": the clustering stage runs
+#: through the ADAPTIVE connected-components strategy
+#: (operators/dedup.py, r10) — edge lists at/below
+#: SFS3K_DRIVER_CC_MAX_EDGES are solved driver-side by union-find (the
+#: broadcast-join analog: bounded bytes collected, gated on the
+#: MEASURED edge count, value-identical to the distributed loop per
+#: tests/test_dedup_clusters.py's forced-distributed equivalence
+#: case), so the component map re-enters the plan as a local leaf
+#: whose size is the gated graph's vertex count, not an unbounded
+#: collect.  "dbscan": the DBSCAN cell topology (operators/spatial.py,
+#: r11) is computed driver-side at/below SFS3K_DRIVER_DBSCAN_MAX_CELLS
+#: and re-enters as local cell/edge leaves.  At the audit's default
 #: sf0.001 these stay under LOCAL_ROWS_MAX anyway; the exemption
-#: documents larger-sf audits.  Run with SFS3K_DRIVER_CC_MAX_EDGES=0
-#: to audit the distributed-loop plan shape instead (the 100 TB
-#: path); every OTHER query remains subject to the flag — a new
-#: driver-collected input still trips it.
+#: documents larger-sf audits.  A plan is exempt only while ITS lever
+#: is enabled: run with the matching threshold at 0 to audit the
+#: distributed plan shape instead (the 100 TB path); every OTHER
+#: query remains subject to the flag — a new driver-collected input
+#: still trips it.
 ADAPTIVE_CC_LOCAL_ALLOWED = {
-    "dedup_cluster_assign",
-    "dedup_cluster_exact",
-    "sample_split_leakage_safe",
-    "spatial_dbscan_core",
-    "spatial_dbscan_clusters",
+    "dedup_cluster_assign": "cc",
+    "dedup_cluster_exact": "cc",
+    "sample_split_leakage_safe": "cc",
+    "spatial_dbscan_core": "dbscan",
+    "spatial_dbscan_clusters": "dbscan",
 }
 
 
-def _adaptive_cc_active() -> bool:
-    """The ADAPTIVE_CC_LOCAL_ALLOWED exemption only applies while a
-    driver-side adaptive strategy is actually enabled (r10 ADVICE #1):
-    with BOTH ``SFS3K_DRIVER_CC_MAX_EDGES=0`` and
-    ``SFS3K_DRIVER_DBSCAN_MAX_CELLS=0`` — the forced-distributed
-    audit mode — a large local leaf in those five plans would be a
-    genuine regression and must flag like any other query."""
+def _adaptive_local_allowed(name: str) -> bool:
+    """Whether ``name``'s own driver-side strategy is enabled (r10
+    ADVICE #1, r11 ADVICE): with its threshold at 0 — the
+    forced-distributed audit mode — a large local leaf in that plan
+    would be a genuine regression and must flag like any other
+    query."""
     from sfs3_kinesis_spark.operators.dedup import DRIVER_CC_MAX_EDGES
     from sfs3_kinesis_spark.operators.spatial import DRIVER_DBSCAN_MAX_CELLS
 
-    return DRIVER_CC_MAX_EDGES > 0 or DRIVER_DBSCAN_MAX_CELLS > 0
+    lever = {"cc": DRIVER_CC_MAX_EDGES, "dbscan": DRIVER_DBSCAN_MAX_CELLS}
+    kind = ADAPTIVE_CC_LOCAL_ALLOWED.get(name)
+    return kind is not None and lever[kind] > 0
 
 
 def main() -> None:
@@ -287,9 +293,7 @@ def main() -> None:
             lrows = max_local_rows(df)
         except Exception:  # noqa: BLE001 — connect mode has no _jdf
             lrows = 0
-        if lrows > LOCAL_ROWS_MAX and not (
-            name in ADAPTIVE_CC_LOCAL_ALLOWED and _adaptive_cc_active()
-        ):
+        if lrows > LOCAL_ROWS_MAX and not _adaptive_local_allowed(name):
             flags.append(
                 f"- `{name}`: {lrows}-row LocalRelation leaf — a "
                 "driver-collected input masquerading as a plan "

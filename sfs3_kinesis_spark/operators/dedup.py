@@ -354,9 +354,8 @@ def jaccard_candidates_exact(
 
     ``pref`` lets :func:`jaccard_pairs_exact` pass its already-pinned
     prefix frame through instead of re-entering the pin (r09 ADVICE:
-    in fallback modes — semanticHash failure, SFS3K_KEYED_CACHE_MAX=0
-    forensics — a second pin call persists the corpus-sized frame
-    twice or unpersists the copy the verify stage still references)."""
+    when semanticHash fails the LRU cannot match the second call, so
+    it would persist the corpus-sized frame twice)."""
     if pref is None:
         pref = _jaccard_prefix_frame(docs_with_shingles, threshold_bp=threshold_bp)
     pe = pref.select("doc_id", "n", F.explode("prefix").alias("pr"))
@@ -675,12 +674,12 @@ def simhash_multiprobe_pairs(
 
 
 #: adaptive strategy threshold for :func:`connected_components`: a
-#: pair table at or below this many RAW rows (an upper bound on the
-#: deduped directed edge count — r11 moved the gate before the
-#: orientation-explode/dedup so small graphs skip that shuffle
-#: entirely) is solved DRIVER-SIDE by union-find instead of the
-#: iterative distributed loop.  Rationale (r10): the min-label + pointer-jump
-#: loop converges in ~GRAPH-DIAMETER rounds on mesh-like graphs (the
+#: graph of at most this many DIRECTED edges (2 x the raw pair rows —
+#: r11 moved the gate before the orientation-explode/dedup so small
+#: graphs skip that shuffle entirely) is solved DRIVER-SIDE by
+#: union-find instead of the iterative distributed loop.
+#: Rationale (r10): the min-label + pointer-jump loop converges in
+#: ~GRAPH-DIAMETER rounds on mesh-like graphs (the
 #: label of an intermediate local minimum is itself, so the jump has
 #: no chain to compress and the global min creeps one hop per round —
 #: measured 32 rounds x ~1.1 s of per-round fixed cost on the 5.5k-
@@ -780,15 +779,16 @@ def connected_components(
     # it should be solved driver-side (measured ~1.3 s of fixed
     # multi-job cost per DBSCAN invocation at sf0.1).  Union-find is
     # insensitive to duplicates and orientation, so the driver path
-    # collects the raw (a, b) rows directly; the raw count is an
-    # upper bound on the deduped directed count, so gating on it is
-    # strictly conservative (a duplicate-heavy pair table falls back
-    # to the distributed loop earlier, never later).  The pair table
-    # is persisted so the upstream pair plan (for LSH pairs, the
-    # dominant cost) runs exactly once either way.
+    # collects the raw (a, b) rows directly.  The threshold is in
+    # DIRECTED edges (the pre-r11 gate counted both orientations
+    # after dedup), and producers emit each unordered pair once, so
+    # 2 * n_pairs is that count for a duplicate-free pair table and
+    # an over-count (an earlier fallback to the loop) otherwise.
+    # The pair table is persisted so the upstream pair plan (for LSH
+    # pairs, the dominant cost) runs exactly once either way.
     pairs_nn = pairs.select(f.col(a_col).alias("src"), f.col(b_col).alias("dst")).persist()
     n_pairs = pairs_nn.count()
-    if 0 < DRIVER_CC_MAX_EDGES >= n_pairs:
+    if 0 < DRIVER_CC_MAX_EDGES >= 2 * n_pairs:
         # bounded: collect the raw pairs and union-find on the driver.
         # Arrow toPandas when available: row-object collect() moves
         # ~50-100k rows/s through py4j pickling, Arrow ~millions/s —

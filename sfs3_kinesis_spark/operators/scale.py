@@ -195,40 +195,28 @@ _SAMPLE_PER_BUCKET = 32
 _BOUNDS_MEMO: dict = {}
 _BOUNDS_MEMO_MAX = 256
 
-#: Keyed-frame cache for :func:`_bucketed`.  Each ``global_rank`` /
-#: ``global_cumsum`` call persists its keyed input so the boundary
-#: sample, the count branch and the rank branch share one upstream
-#: materialization — but Spark's CacheManager holds a cached relation
-#: until EXPLICIT unpersist (or session end), so an unbounded series
-#: of calls (a 299-query registry, repeated bench passes, chained
-#: ranks like mine_rfm_segmentation) would leak a cached copy per
-#: call.  Bounded LRU: same semantic plan reuses the live cached
-#: frame; eviction unpersists (safe mid-plan — Spark falls back to
-#: recomputation, and bucketing is value-derived so every
-#: recomputation ranks identically).
-import os as _os
+#: Keyed-frame cache shared by :func:`_bucketed` and :func:`pin_shared`.
+#: Each ``global_rank`` / ``global_cumsum`` call persists its keyed
+#: input so the boundary sample, the count branch and the rank branch
+#: share one upstream materialization, and each pin_shared call
+#: persists a shared intermediate — but Spark's CacheManager holds a
+#: cached relation until EXPLICIT unpersist (or session end), so an
+#: unbounded series of calls (a 299-query registry, repeated bench
+#: passes, chained ranks like mine_rfm_segmentation) would leak a
+#: cached copy per call.  Bounded LRU: same semantic plan reuses the
+#: live cached frame; eviction unpersists (safe mid-plan — Spark falls
+#: back to recomputation, and every cached frame is deterministic, so
+#: every recomputation yields the same values).
 import threading as _threading
 from collections import OrderedDict as _OrderedDict
 
-#: value = (source df, persisted keyed df, creation storage level):
-#: the source is kept so a hit can be confirmed with the full
-#: sameSemantics plan comparison (a bare 32-bit semanticHash
-#: collision between different plans would otherwise silently rank
-#: the WRONG rows) and so frames from a stopped/replaced SparkSession
-#: are detected and dropped.  The storage level (None = Spark's
-#: default deserialized MEMORY_AND_DISK, else the oversize tier the
-#: entry was created at) is what a hit re-persists with after an
-#: external clearCache() — recomputing the level from the hit-time
-#: plan would read InMemoryRelation leaves (estimate 0) and silently
-#: drop the tier (r09).
-_KEYED_CACHE: "_OrderedDict[object, tuple[DataFrame, DataFrame, object]]" = (
-    _OrderedDict()
-)
-#: env-overridable for perf forensics: SFS3K_KEYED_CACHE_MAX=0 turns
-#: reuse off entirely (every call persists fresh and the previous
-#: entry is evicted), which is the A/B lever for ruling the cache
-#: in/out of a regression without editing code.
-_KEYED_CACHE_MAX = int(_os.environ.get("SFS3K_KEYED_CACHE_MAX", "16"))
+#: value = (source df, persisted df): the source is kept so a hit can
+#: be confirmed with the full sameSemantics plan comparison (a bare
+#: 32-bit semanticHash collision between different plans would
+#: otherwise silently substitute the WRONG rows) and so frames from a
+#: stopped/replaced SparkSession are detected and dropped.
+_KEYED_CACHE: "_OrderedDict[object, tuple[DataFrame, DataFrame]]" = _OrderedDict()
+_KEYED_CACHE_MAX = 16
 
 #: ALL mutation of the cache dict happens under this lock (r06
 #: verdict wrong #2): two threads building rank plans concurrently —
@@ -242,6 +230,13 @@ _KEYED_CACHE_MAX = int(_os.environ.get("SFS3K_KEYED_CACHE_MAX", "16"))
 _KEYED_CACHE_LOCK = _threading.RLock()
 
 
+def _release(frame: DataFrame) -> None:
+    try:
+        frame.unpersist(blocking=False)
+    except Exception:  # noqa: BLE001 — session already stopped
+        pass
+
+
 def clear_keyed_cache() -> None:
     """Unpersist every frame the bounded keyed-frame LRU is holding —
     :func:`_bucketed`'s keyed inputs AND every :func:`pin_shared`
@@ -249,11 +244,48 @@ def clear_keyed_cache() -> None:
     executor storage memory; subsequent calls simply re-persist."""
     with _KEYED_CACHE_LOCK:
         while _KEYED_CACHE:
-            _, (_, old, _lvl) = _KEYED_CACHE.popitem(last=False)
+            _release(_KEYED_CACHE.popitem(last=False)[1][1])
+
+
+def _lru_persist(cache_key, df: DataFrame, build) -> tuple[DataFrame, bool]:
+    """The one lookup/validate/re-persist/evict/insert sequence of the
+    keyed-frame LRU.  ``df`` is the source plan the entry is validated
+    against; ``build()`` returns the frame to persist on a miss (``df``
+    itself, or ``df`` plus derived columns).  Returns the live persisted
+    frame and whether it was a hit."""
+    spark = df.sparkSession
+    with _KEYED_CACHE_LOCK:
+        entry = _KEYED_CACHE.get(cache_key)
+        if entry is not None:
+            src, cand = entry
+            # hit-validation, in escalation order of what a stale/false
+            # hit would cost: (1) a frame from a STOPPED/replaced session
+            # crashes on first use — identity-check the session; (2) a
+            # 32-bit semanticHash COLLISION between genuinely different
+            # plans would silently substitute the wrong rows — confirm
+            # with the full plan comparison (sameSemantics), which is
+            # exactly the check Spark's own CacheManager performs after
+            # a hash match.
             try:
-                old.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — session already stopped
+                if src.sparkSession is spark and df.sameSemantics(src):
+                    _KEYED_CACHE.move_to_end(cache_key)
+                    # an external spark.catalog.clearCache() (bench does
+                    # this between queries) unpersists entries behind the
+                    # LRU's back; a "hit" on an evicted frame would
+                    # silently recompute the upstream once per consumer
+                    lvl = cand.storageLevel
+                    if not (lvl.useMemory or lvl.useDisk):
+                        cand.persist()
+                    return cand, True
+            except Exception:  # noqa: BLE001 — stopped context, connect mode
                 pass
+            del _KEYED_CACHE[cache_key]
+            _release(cand)
+        pinned = build().persist()
+        while len(_KEYED_CACHE) >= _KEYED_CACHE_MAX:
+            _release(_KEYED_CACHE.popitem(last=False)[1][1])
+        _KEYED_CACHE[cache_key] = (df, pinned)
+        return pinned, False
 
 
 #: pin_shared size guard (round-8 second-decade stress finding): at
@@ -273,26 +305,16 @@ def clear_keyed_cache() -> None:
 #: documents.parquet 0.6 MB sf0.1 / 6.9 MB sf1 — pinning proven good
 #: through sf1 — 84 MB sf10, where it hurts), so frames whose leaves
 #: read more than this cap are returned UNPINNED and each consumer
-#: recomputes — the scale-safe default.  Env-tunable; set 0 to
-#: disable the guard (always pin, the pre-r8 behavior).
-_PIN_MAX_EST_BYTES = int(
-    _os.environ.get("SFS3K_PIN_MAX_EST_BYTES", str(32 * 1024 * 1024))
-)
-
-#: what to do with a frame ABOVE the size cap (r08 verdict next-round
-#: #4): "none" = return it unpinned, each consumer recomputes (the
-#: round-8 behavior); "disk" = StorageLevel.DISK_ONLY through the
-#: same LRU; "memdiskser" = serialized MEMORY_AND_DISK.  The sf10 A/B
-#: (scripts/pin_tier_ab.py, recorded in SCALE.md round 9) measured
-#: disk-tier reuse vs per-consumer recomputation on the corpus-sized
-#: shingle-prefix table; the default here is the measured winner.
-_PIN_OVERSIZE_LEVEL = _os.environ.get("SFS3K_PIN_OVERSIZE_LEVEL", "none")
+#: recomputes — the scale-safe default.  Caching them at a
+#: spill-friendly tier instead lost to recomputation at sf10 (disk /
+#: serialized tiers 197-223 s steady vs 96.8 s unpinned;
+#: PIN_TIER_AB.json, SCALE.md round 9).
+_PIN_MAX_EST_BYTES = 32 * 1024 * 1024
 
 #: last pin decision per tag — purely observational, read by the
 #: decade-stress harnesses to log which tables the size guard pinned
 #: vs guarded out at each scale (r08 verdict next-round #3).  Values:
-#: "pinned" | "pinned_hit" | "pinned_bounded" |
-#: f"pinned_oversize({level})" | f"guarded_out({est_mb}MB)".
+#: "pinned" | "pinned_hit" | "pinned_bounded" | f"guarded_out({est_mb}MB)".
 #: Writes happen under ``_KEYED_CACHE_LOCK`` so the dict itself stays
 #: consistent under threaded dispatch, but the value is still
 #: last-writer-wins PER TAG: a harness reading it concurrently with
@@ -305,17 +327,6 @@ PIN_DECISIONS: dict[str, str] = {}
 def _record_pin(tag: str, decision: str) -> None:
     with _KEYED_CACHE_LOCK:
         PIN_DECISIONS[tag or "<untagged>"] = decision
-
-
-def _oversize_storage_level():
-    """StorageLevel for above-cap frames, or None = don't pin."""
-    from pyspark import StorageLevel
-
-    if _PIN_OVERSIZE_LEVEL == "disk":
-        return StorageLevel.DISK_ONLY
-    if _PIN_OVERSIZE_LEVEL in ("memdiskser", "ser"):
-        return StorageLevel.MEMORY_AND_DISK  # serialized in PySpark
-    return None
 
 
 def _leaf_scan_bytes(df: DataFrame) -> int:
@@ -340,8 +351,8 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
 
 def pin_shared(df: DataFrame, *, tag: str = "", bounded: bool = False) -> DataFrame:
     """Persist a shared intermediate through the bounded keyed-frame
-    LRU instead of a bare ``.persist()`` (r07 verdict What's-wrong #1:
-    the bare form leaks one cached relation per call — Spark's
+    LRU instead of a bare persist (r07 verdict What's-wrong #1: the
+    bare form leaks one cached relation per call — Spark's
     CacheManager holds it until explicit unpersist or session end, so
     a multi-hundred-query sweep accumulates executor storage pressure
     exactly like the r06 ``_bucketed`` leak).
@@ -352,21 +363,17 @@ def pin_shared(df: DataFrame, *, tag: str = "", bounded: bool = False) -> DataFr
     recomputing it, which must yield the same values.  Every corpus
     consumer qualifies: shingle/prefix/signature tables, distinct
     user-item projections, edge lists.  That contract is also what
-    makes the size guard safe: a frame judged too big to pin
-    (estimate > ``SFS3K_PIN_MAX_EST_BYTES``) is either returned
-    unpinned (``SFS3K_PIN_OVERSIZE_LEVEL=none`` — each consumer
-    recomputes: linear extra scans instead of cache-eviction thrash)
-    or pinned at a spill-friendly storage tier (``disk`` /
-    ``memdiskser``) through the same LRU, per the sf10 A/B recorded
-    in SCALE.md round 9 (see ``_PIN_MAX_EST_BYTES`` for the measured
+    makes the size guard safe: a frame whose leaf scans exceed
+    ``_PIN_MAX_EST_BYTES`` is returned unpinned and each consumer
+    recomputes it — linear extra scans instead of cache-eviction
+    thrash (see ``_PIN_MAX_EST_BYTES`` for the measured
     deserialized-cache inversion that motivates the cap).
 
     Returns the live persisted frame: the same object on a miss, the
     cached twin on a semantic hit (validated with the full
     ``sameSemantics`` plan comparison, never the bare 32-bit hash —
     a collision would silently substitute the WRONG table).  Shares
-    ``_KEYED_CACHE`` (bound, lock, ``clear_keyed_cache``, and the
-    ``SFS3K_KEYED_CACHE_MAX=0`` A/B forensics lever) with
+    ``_KEYED_CACHE`` (bound, lock, ``clear_keyed_cache``) with
     :func:`_bucketed`; the ``"pin"`` key component keeps the two
     families from colliding.  ``tag`` disambiguates call sites that
     pin semantically different stages of one plan.
@@ -378,79 +385,27 @@ def pin_shared(df: DataFrame, *, tag: str = "", bounded: bool = False) -> DataFr
     a 60-row table DERIVED from a 100 GB scan carries the 100 GB leaf
     (r09 verdict What's-wrong #3: pagerank's node table was guarded
     out at 1.4-5.8 GB leaf estimates).  The frame still flows through
-    the same bounded LRU (eviction, clear, forensics lever), so the
-    override can never leak; it only skips the estimate.
+    the same bounded LRU (eviction, clear), so the override can never
+    leak; it only skips the estimate.
     """
-    spark = df.sparkSession
-    level = None  # None = Spark's default deserialized MEMORY_AND_DISK
     if bounded:
-        _record_pin(tag, "pinned_bounded")
-    elif _PIN_MAX_EST_BYTES > 0:
+        decision = "pinned_bounded"
+    else:
         try:
             est = _leaf_scan_bytes(df)
         except Exception:  # noqa: BLE001 — connect mode / stats failure
             est = -1
         if est > _PIN_MAX_EST_BYTES:
-            level = _oversize_storage_level()
-            if level is None:
-                _record_pin(tag, f"guarded_out({est >> 20}MB)")
-                return df
-            _record_pin(tag, f"pinned_oversize({_PIN_OVERSIZE_LEVEL})")
-        else:
-            _record_pin(tag, "pinned")
-    else:
-        _record_pin(tag, "pinned")
+            _record_pin(tag, f"guarded_out({est >> 20}MB)")
+            return df
+        decision = "pinned"
     try:
-        cache_key = (id(spark), df.semanticHash(), "pin", tag)
+        cache_key = (id(df.sparkSession), df.semanticHash(), "pin", tag)
     except Exception:  # noqa: BLE001 — connect mode / exotic plans
         cache_key = object()
-    with _KEYED_CACHE_LOCK:
-        if _KEYED_CACHE_MAX <= 0 and cache_key in _KEYED_CACHE:
-            # reuse disabled (A/B forensics): never serve a hit, but
-            # keep storing entries so each call unpersists the last
-            _, cand, _lvl = _KEYED_CACHE.pop(cache_key)
-            try:
-                cand.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — session already gone
-                pass
-        if cache_key in _KEYED_CACHE:
-            src, cand, stored_level = _KEYED_CACHE[cache_key]
-            try:
-                if src.sparkSession is spark and df.sameSemantics(src):
-                    _KEYED_CACHE.move_to_end(cache_key)
-                    # external clearCache() (bench does this between
-                    # queries) unpersists behind the LRU's back — a
-                    # "hit" on an evicted frame would recompute the
-                    # upstream once per consumer
-                    lvl = cand.storageLevel
-                    if not (lvl.useMemory or lvl.useDisk):
-                        # re-persist at the level the entry was
-                        # CREATED with, not this call's recomputed
-                        # level: a frame analyzed while an upstream
-                        # cache existed reads InMemoryRelation leaves
-                        # (est 0) and would silently drop the tier
-                        if stored_level is not None:
-                            cand.persist(stored_level)
-                        else:
-                            cand.persist()
-                    PIN_DECISIONS[tag or "<untagged>"] = "pinned_hit"
-                    return cand
-            except Exception:  # noqa: BLE001 — stopped context
-                pass
-            _KEYED_CACHE.pop(cache_key, None)
-            try:
-                cand.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — session already gone
-                pass
-        pinned = df.persist(level) if level is not None else df.persist()
-        while len(_KEYED_CACHE) >= max(_KEYED_CACHE_MAX, 1):
-            _, (_, old, _lvl) = _KEYED_CACHE.popitem(last=False)
-            try:
-                old.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — session already gone
-                pass
-        _KEYED_CACHE[cache_key] = (df, pinned, level)
-        return pinned
+    pinned, hit = _lru_persist(cache_key, df, lambda: df)
+    _record_pin(tag, "pinned_hit" if hit else decision)
+    return pinned
 
 
 def _order_key(df: DataFrame, order_by: list[str]) -> Column:
@@ -700,59 +655,13 @@ def _bucketed(
     # rank and cumsum calls at different bucket counts share one
     # persisted copy.  The session id keeps concurrent sessions from
     # evicting each other's entries on a hash coincidence (a stale id
-    # after GC-reuse is caught by the identity check below).
+    # after GC-reuse is caught by the LRU's session identity check).
     cache_key = (
         (id(spark), memo_key[0], memo_key[1]) if memo_key is not None else object()
     )
-    keyed = None
-    with _KEYED_CACHE_LOCK:
-        if _KEYED_CACHE_MAX <= 0 and cache_key in _KEYED_CACHE:
-            # reuse disabled (A/B forensics mode): never serve a hit —
-            # drop the entry so the insert path below replaces it (the
-            # entry is still STORED so the next call unpersists it;
-            # skipping the store would leak the persisted frame)
-            _, cand, _lvl = _KEYED_CACHE.pop(cache_key)
-            try:
-                cand.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — session already gone
-                pass
-        if cache_key in _KEYED_CACHE:
-            src, cand, stored_level = _KEYED_CACHE[cache_key]
-            # hit-validation, in escalation order of what a stale/false
-            # hit would cost: (1) a frame from a STOPPED/replaced session
-            # crashes on first use — identity-check the session; (2) a
-            # 32-bit semanticHash COLLISION between genuinely different
-            # plans would silently rank the wrong rows — confirm with the
-            # full plan comparison (sameSemantics), which is exactly the
-            # check Spark's own CacheManager performs after a hash match.
-            try:
-                if src.sparkSession is spark and df.sameSemantics(src):
-                    keyed = cand
-                    _KEYED_CACHE.move_to_end(cache_key)
-                    # an external spark.catalog.clearCache() (bench does
-                    # this between queries) unpersists entries behind the
-                    # LRU's back; a "hit" on an evicted frame would
-                    # silently recompute the upstream once per consumer
-                    lvl = keyed.storageLevel
-                    if not (lvl.useMemory or lvl.useDisk):
-                        keyed.persist()
-            except Exception:  # noqa: BLE001 — stopped context, connect mode
-                keyed = None
-            if keyed is None:
-                _KEYED_CACHE.pop(cache_key, None)
-                try:
-                    cand.unpersist(blocking=False)
-                except Exception:  # noqa: BLE001 — session already gone
-                    pass
-        if keyed is None:
-            keyed = df.withColumn("_gk", _order_key(df, order_by)).persist()
-            while len(_KEYED_CACHE) >= max(_KEYED_CACHE_MAX, 1):
-                _, (_, old, _lvl) = _KEYED_CACHE.popitem(last=False)
-                try:
-                    old.unpersist(blocking=False)
-                except Exception:  # noqa: BLE001 — session already gone
-                    pass
-            _KEYED_CACHE[cache_key] = (df, keyed, None)
+    keyed, _ = _lru_persist(
+        cache_key, df, lambda: df.withColumn("_gk", _order_key(df, order_by))
+    )
     gk_schema = keyed.schema["_gk"].dataType
     with _KEYED_CACHE_LOCK:
         bounds = _BOUNDS_MEMO.get(memo_key) if memo_key is not None else None

@@ -331,23 +331,26 @@ def _dbscan_parts(
     # edges among a few thousand vertices (measured: ~1.3 s of the
     # 2.46 s sf0.1 steady, and the bulk of the x100 8.8 s wall, with
     # examined point-pairs = 0).  At or below
-    # ``SFS3K_DRIVER_DBSCAN_MAX_CELLS`` (bounded short-circuit
-    # limit+1 collect, the guard_all_pairs pattern) the cell table is
-    # collected ONCE and the topology — d1 edges, d2 candidates, the
-    # core-intermediate blocking rule — is computed driver-side in
-    # O(#cells) dict lookups; only the point-level d2 existence
-    # checks (todo join against the pinned core) stay in Spark.  The
+    # ``SFS3K_DRIVER_DBSCAN_MAX_CELLS`` (a bounded limit+1 count
+    # first, so an over-threshold table is never shipped to the
+    # driver) the cell table is collected ONCE and the topology — d1
+    # edges, d2 candidates, the core-intermediate blocking rule — is
+    # computed driver-side in O(#cells) dict lookups; only the
+    # point-level d2 existence checks (todo join against the pinned
+    # core) stay in Spark.  The
     # edge SET is identical by construction (same offsets, same
     # blocking rule), so clustering output is unchanged; above the
     # threshold the distributed formulation runs exactly as before.
     # Recomputed per invocation from the parquet inputs — a strategy
     # choice, not result caching.
     local_cells = None
-    if DRIVER_DBSCAN_MAX_CELLS > 0:
+    if (
+        DRIVER_DBSCAN_MAX_CELLS > 0
+        and corecells.limit(DRIVER_DBSCAN_MAX_CELLS + 1).count()
+        <= DRIVER_DBSCAN_MAX_CELLS
+    ):
         try:
-            pdf = corecells.limit(DRIVER_DBSCAN_MAX_CELLS + 1).toPandas()
-            if len(pdf) <= DRIVER_DBSCAN_MAX_CELLS:
-                local_cells = pdf
+            local_cells = corecells.toPandas()
         except Exception:  # noqa: BLE001 — no pandas/Arrow: distributed path
             local_cells = None
     if local_cells is not None:

@@ -69,22 +69,6 @@ def test_keyed_cache_two_threads_under_eviction(spark, monkeypatch):
     scale.clear_keyed_cache()
 
 
-def test_keyed_cache_max_zero_disables_reuse(spark, monkeypatch):
-    """SFS3K_KEYED_CACHE_MAX=0 (the perf-forensics A/B lever) must
-    still rank correctly, never serve a cached hit, and never leak
-    more than one persisted frame."""
-    monkeypatch.setattr(scale, "_KEYED_CACHE_MAX", 0)
-    scale.clear_keyed_cache()
-    df = spark.range(0, 300).select(
-        (F.col("id") % 97).alias("v"), F.col("id").alias("uid")
-    )
-    for _ in range(3):
-        ranked = global_rank(df, ["v", "uid"], out_col="rnk")
-        assert ranked.count() == 300
-        assert len(scale._KEYED_CACHE) <= 1
-    scale.clear_keyed_cache()
-
-
 def test_retry_demo_two_concurrent_calls(spark):
     """Two overlapping pipeline_retry_exhausted runs: the seq/GC
     bookkeeping must give each call its own live store — before the

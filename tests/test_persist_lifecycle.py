@@ -161,8 +161,8 @@ def test_pin_shared_size_guard_skips_corpus_sized_frames(spark, monkeypatch):
     frame thrashes storage and makes cache REUSE slower than
     recomputation (measured at sf10: pinned warm 218 s vs unpinned
     120 s).  Frames whose optimizer size estimate exceeds
-    SFS3K_PIN_MAX_EST_BYTES come back UNPINNED — no persist, no LRU
-    entry — and the guard is disabled with cap 0."""
+    ``_PIN_MAX_EST_BYTES`` come back UNPINNED — no persist, no LRU
+    entry."""
     from sfs3_kinesis_spark.operators import scale
     from sfs3_kinesis_spark.operators.scale import clear_keyed_cache, pin_shared
 
@@ -174,22 +174,15 @@ def test_pin_shared_size_guard_skips_corpus_sized_frames(spark, monkeypatch):
     lvl = out.storageLevel
     assert not (lvl.useMemory or lvl.useDisk)
     assert not scale._KEYED_CACHE
-
-    monkeypatch.setattr(scale, "_PIN_MAX_EST_BYTES", 0)  # guard off
-    out2 = pin_shared(src, tag="guard")
-    lvl2 = out2.storageLevel
-    assert lvl2.useMemory or lvl2.useDisk
-    assert len(scale._KEYED_CACHE) == 1
     clear_keyed_cache()
 
 
 def test_pin_shared_oversize_tier_and_decision_log(spark, monkeypatch):
-    """r08 verdict next-round #4: frames above the size cap can pin at
-    a spill-friendly tier (SFS3K_PIN_OVERSIZE_LEVEL=disk/memdiskser)
-    through the same bounded LRU instead of being returned unpinned;
-    and every pin_shared call logs its decision per tag (next-round
-    #3) so the decade stresses can record which tables the guard
-    pinned vs guarded out at each scale."""
+    """Frames above the size cap are returned unpinned (the sf10
+    pin-tier A/B measured recomputation beating every cached tier),
+    and every pin_shared call logs its decision per tag (r08 verdict
+    next-round #3) so the decade stresses can record which tables the
+    guard pinned vs guarded out at each scale."""
     from sfs3_kinesis_spark.operators import scale
     from sfs3_kinesis_spark.operators.scale import clear_keyed_cache, pin_shared
 
@@ -197,43 +190,37 @@ def test_pin_shared_oversize_tier_and_decision_log(spark, monkeypatch):
     scale.PIN_DECISIONS.clear()
     src = spark.range(1000).select(F.col("id"), (F.col("id") * 3).alias("v"))
 
-    # oversize + level=none -> unpinned, decision logged
+    # oversize -> unpinned, decision logged
     monkeypatch.setattr(scale, "_PIN_MAX_EST_BYTES", 1)
-    monkeypatch.setattr(scale, "_PIN_OVERSIZE_LEVEL", "none")
     out = pin_shared(src, tag="tier")
     lvl = out.storageLevel
     assert not (lvl.useMemory or lvl.useDisk)
     assert scale.PIN_DECISIONS["tier"].startswith("guarded_out(")
     assert not scale._KEYED_CACHE
 
-    # oversize + level=disk -> DISK_ONLY through the LRU
-    monkeypatch.setattr(scale, "_PIN_OVERSIZE_LEVEL", "disk")
+    # under-cap frames pin at the default deserialized level
+    monkeypatch.setattr(scale, "_PIN_MAX_EST_BYTES", 1 << 40)
     out = pin_shared(src, tag="tier")
     lvl = out.storageLevel
-    assert lvl.useDisk and not lvl.useMemory
+    assert lvl.useMemory
     assert len(scale._KEYED_CACHE) == 1
-    assert scale.PIN_DECISIONS["tier"] == "pinned_oversize(disk)"
+    assert scale.PIN_DECISIONS["tier"] == "pinned"
     assert out.count() == 1000
 
-    # a semantic repeat is a hit on the disk-tier entry
+    # a semantic repeat is a hit on that entry
     repeat = spark.range(1000).select(F.col("id"), (F.col("id") * 3).alias("v"))
     hit = pin_shared(repeat, tag="tier")
     assert scale.PIN_DECISIONS["tier"] == "pinned_hit"
     assert len(scale._KEYED_CACHE) == 1
     assert hit.count() == 1000
 
-    # external clearCache: the next hit re-persists AT THE TIER LEVEL
+    # external clearCache: the next hit re-persists the entry
     spark.catalog.clearCache()
     hit2 = pin_shared(repeat, tag="tier")
     lvl2 = hit2.storageLevel
-    assert lvl2.useDisk and not lvl2.useMemory
-
-    # under-cap frames keep the default deserialized level + decision
-    monkeypatch.setattr(scale, "_PIN_MAX_EST_BYTES", 1 << 40)
-    out3 = pin_shared(src.withColumn("w", F.lit(1)), tag="small")
-    lvl3 = out3.storageLevel
-    assert lvl3.useMemory
-    assert scale.PIN_DECISIONS["small"] == "pinned"
+    assert lvl2.useMemory
+    assert scale.PIN_DECISIONS["tier"] == "pinned_hit"
+    assert len(scale._KEYED_CACHE) == 1
     clear_keyed_cache()
     scale.PIN_DECISIONS.clear()
 
@@ -324,20 +311,49 @@ def test_forget_keys_unpersists_on_failure(spark, tmp_path, monkeypatch):
     assert {r.txn_id for r in sink.current().collect()} == {"b"}
 
 
+#: the only (module, function) pairs allowed to call ``.persist(`` or
+#: ``.cache()``: the keyed-frame LRU itself, and caller-owned
+#: lifecycles that unpersist in a try/finally before returning
+PERSIST_SITES = {
+    ("operators/scale.py", "_lru_persist"),
+    ("operators/dedup.py", "connected_components"),
+    ("sources/sinks.py", "forget_keys"),
+    ("streaming/incremental.py", "process_batch"),
+    ("streaming/neardup.py", "process_batch"),
+}
+
+
 def test_package_has_no_bare_cache():
-    """Every persisted frame goes through the bounded LRU (pin_shared);
-    a bare ``.cache()`` would hold its relation for the session."""
+    """Every persisted frame goes through the bounded LRU (pin_shared)
+    or a documented try/finally site; any other ``.cache()`` or
+    ``.persist(`` would hold its relation for the session."""
+    import ast
     import pathlib
 
     import sfs3_kinesis_spark
 
     root = pathlib.Path(sfs3_kinesis_spark.__file__).parent
-    hits = [
-        f"{p.relative_to(root)}:{i}"
-        for p in sorted(root.rglob("*.py"))
-        for i, line in enumerate(p.read_text().splitlines(), 1)
-        if ".cache()" in line
-    ]
+    hits = []
+
+    def visit(node, rel, fn):
+        for child in ast.iter_child_nodes(node):
+            name = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else fn
+            )
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("cache", "persist")
+                and (rel, name) not in PERSIST_SITES
+            ):
+                hits.append(f"{rel}:{child.lineno} ({name})")
+            visit(child, rel, name)
+
+    for p in sorted(root.rglob("*.py")):
+        rel = p.relative_to(root).as_posix()
+        visit(ast.parse(p.read_text()), rel, None)
     assert hits == []
 
 

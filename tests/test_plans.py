@@ -423,6 +423,26 @@ def test_plan_audit_sees_collect_backed_plans(spark):
     assert "parquet" in plan.lower()
 
 
+def test_plan_audit_exempts_each_plan_by_its_own_lever(monkeypatch):
+    """A large local leaf is exempt only while the plan's OWN
+    driver-side strategy is on: forcing the DBSCAN topology
+    distributed re-arms the flag for the DBSCAN plans even with the
+    CC lever on, and vice versa."""
+    from scripts.plan_audit import _adaptive_local_allowed
+    from sfs3_kinesis_spark.operators import dedup, spatial
+
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", 10)
+    monkeypatch.setattr(spatial, "DRIVER_DBSCAN_MAX_CELLS", 0)
+    assert _adaptive_local_allowed("dedup_cluster_assign")
+    assert not _adaptive_local_allowed("spatial_dbscan_clusters")
+
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(spatial, "DRIVER_DBSCAN_MAX_CELLS", 10)
+    assert not _adaptive_local_allowed("dedup_cluster_assign")
+    assert _adaptive_local_allowed("spatial_dbscan_clusters")
+    assert not _adaptive_local_allowed("q03_shipping_priority")
+
+
 def test_retry_demo_store_survives_repeat_calls(spark):
     """The run-scoped store is sequence-numbered per call: a frame
     returned by an earlier call must stay readable after later calls

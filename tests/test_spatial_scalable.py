@@ -121,10 +121,13 @@ def test_dbscan_contraction_matches_oracle_twin_on_fixture(spark):
 
 def test_dbscan_driver_topology_matches_distributed(spark, monkeypatch):
     """r11 adaptive cell topology: the driver-side d1/d2/blocked hub
-    topology (default) and the forced-distributed explode-join
-    formulation (SFS3K_DRIVER_DBSCAN_MAX_CELLS=0) must produce
-    identical clusters on a sparse geometry that exercises d1 edges,
-    blocked d2 pairs AND unblocked d2 existence checks."""
+    topology (default) and the distributed explode-join formulation
+    (a cell table over the threshold) must produce identical clusters
+    on a sparse geometry that exercises d1 edges, blocked d2 pairs AND
+    unblocked d2 existence checks.  Over the threshold the cell table
+    is only counted, never shipped to the driver."""
+    import sys
+
     from sfs3_kinesis_spark.operators import spatial
 
     # sparse diagonal chains + isolated dense pockets: cells at
@@ -152,9 +155,20 @@ def test_dbscan_driver_topology_matches_distributed(spark, monkeypatch):
         }
 
     got_driver = run()
-    monkeypatch.setattr(spatial, "DRIVER_DBSCAN_MAX_CELLS", 0)
+    topology_collects = []
+    frame_cls = type(df)
+    to_pandas = frame_cls.toPandas
+
+    def spy(self):
+        if sys._getframe(1).f_code.co_name == "_dbscan_parts":
+            topology_collects.append(self)
+        return to_pandas(self)
+
+    monkeypatch.setattr(frame_cls, "toPandas", spy)
+    monkeypatch.setattr(spatial, "DRIVER_DBSCAN_MAX_CELLS", 1)
     got_dist = run()
     assert got_driver == got_dist
+    assert topology_collects == []
     assert got_driver  # non-trivial fixture
 
 
