@@ -265,6 +265,9 @@ def main() -> None:
             "load_1m": load_1m,
             "cpus_requested": detail["cpus_requested"],
             "sf": sf,
+            # per-query steady seconds in HEADLINE order (names would
+            # not fit the 2 KB tail; scripts/bench_diff.py maps back)
+            "steady": [round(steady[name], 2) for name in HEADLINE],
         }
     )
     assert len(compact) < 1500, f"final bench line too long: {len(compact)}B"

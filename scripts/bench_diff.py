@@ -11,10 +11,12 @@ Usage::
     python scripts/bench_diff.py --git OLDREF [NEWREF]   # from committed files
 
 ``--git`` reads ``BENCH_DETAIL.json`` from the named commits
-(NEWREF defaults to the working tree copy).  Output: per-query
-steady table over the COMMON query set (added/removed listed
-separately), total + geomean ratios, and movers beyond the
-threshold.  Exit 0 always — this is a report, not a gate; round
+(NEWREF defaults to the working tree copy).  A file argument may
+also be a captured ``bench.py`` stdout: its last line is the compact
+record, whose ``steady`` list is read in ``bench.HEADLINE`` order.
+Output: per-query steady table over the COMMON query set
+(added/removed listed separately), total + geomean ratios, and
+movers beyond the threshold.  Exit 0 always — this is a report, not a gate; round
 notes decide what a mover means (see the bench-noise discipline in
 BASELINE.md before reading any single mover as a regression).
 """
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import subprocess
 import sys
 
@@ -37,6 +40,24 @@ def _load_git(ref: str) -> dict:
     return json.loads(out.stdout)
 
 
+def _parse(text: str) -> dict:
+    """A BENCH_DETAIL document, or the compact last line of a bench
+    stdout capture."""
+    try:
+        return json.loads(text)
+    except json.JSONDecodeError:
+        return json.loads(text.strip().splitlines()[-1])
+
+
+def _queries(doc: dict) -> dict:
+    if "queries" in doc:
+        return doc["queries"]
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import HEADLINE
+
+    return dict(zip(HEADLINE, doc["steady"]))
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     threshold = 1.5
@@ -48,10 +69,10 @@ def main() -> int:
         new = _load_git(args[1]) if len(args) > 1 else json.load(open("BENCH_DETAIL.json"))
         labels = (args[0], args[1] if len(args) > 1 else "worktree")
     else:
-        old, new = json.load(open(args[0])), json.load(open(args[1]))
+        old, new = _parse(open(args[0]).read()), _parse(open(args[1]).read())
         labels = (args[0], args[1])
 
-    qo, qn = old["queries"], new["queries"]
+    qo, qn = _queries(old), _queries(new)
     common = sorted(set(qo) & set(qn))
     added = sorted(set(qn) - set(qo))
     removed = sorted(set(qo) - set(qn))

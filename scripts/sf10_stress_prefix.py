@@ -14,7 +14,8 @@ times the three prefix-filter consumers at sf1 and sf10:
 
 * ``dedup_ngram_jaccard``        — exact Jaccard, symmetric prefix
 * ``dedup_containment``          — asymmetric containment prefix
-* ``similarity_join_prefix_filter`` — the advanced-queries variant
+* ``similarity_join_prefix_filter`` — the same exact Jaccard join at
+  0.9 over documents of at least 3 tokens
 
 reporting the second-decade steady exponent
 e = log10(t_sf10 / t_sf1) (e ~ 1.0 = the fan-out still tracks the
@@ -61,17 +62,21 @@ QUERIES = [
 ]
 
 
+def _simjoin_shingles(spark, sf_dir: str):
+    """The shingle input of ``similarity_join_prefix_filter``."""
+    from sfs3_kinesis_spark.operators.dedup import shingles
+    from sfs3_kinesis_spark.plans.core import t
+
+    docs = t(spark, sf_dir, "documents").filter(F.size(F.split("text", " ")) >= 3)
+    return shingles(docs, n=3).select("doc_id", "shingles")
+
+
 def _candidate_frame(spark, name: str, sf_dir: str):
     """The candidate stage of each prefix-filter consumer — the SAME
-    builders the production queries compose (operators/dedup.py,
-    plans/advanced_queries.py), so the counts attribute wall-time
-    growth to candidate fan-out vs true-pair growth (r08 verdict
-    next-round #2: the e=1.18 exponent was unattributable because
-    the stress recorded wall time and plan shape but no pair counts)."""
+    builders the production queries compose (operators/dedup.py), so
+    the counts attribute wall-time growth to candidate fan-out vs
+    true-pair growth."""
     from sfs3_kinesis_spark.operators import dedup
-    from sfs3_kinesis_spark.plans.advanced_queries import (
-        similarity_join_prefix_candidates,
-    )
     from sfs3_kinesis_spark.plans.core import t
 
     if name == "dedup_ngram_jaccard":
@@ -89,7 +94,9 @@ def _candidate_frame(spark, name: str, sf_dir: str):
             threshold_bp=8000,
         )
     if name == "similarity_join_prefix_filter":
-        return similarity_join_prefix_candidates(spark, sf_dir)
+        return dedup.jaccard_candidates_exact(
+            _simjoin_shingles(spark, sf_dir), threshold_bp=9000
+        )
     raise KeyError(name)
 
 
@@ -117,17 +124,16 @@ def _timed(spark, build, runs: int = 3) -> float:
 
 
 def simjoin_stage_walls(spark, sf_dir: str, scratch: str) -> dict:
-    """Per-stage walls for ``similarity_join_prefix_filter`` (r09
-    verdict next-round #2: candidates and emitted pairs are exactly
-    linear across the second decade but the wall exponent is 1.24 —
-    attribute the residual to a STAGE).  Each stage is isolated by
-    parquet-materializing its inputs first (untimed), so its wall
-    measures that stage's plan alone:
+    """Per-stage walls for ``similarity_join_prefix_filter``, each
+    stage built by the production helpers in operators/dedup.py.
+    Each stage is isolated by parquet-materializing its inputs first
+    (untimed), so its wall measures that stage's plan alone:
 
     * ``shingle_build`` — docs -> distinct 3-shingle arrays;
-    * ``vocab_agg``     — exploded shingles -> (tok, df) vocabulary;
-    * ``rank_assemble`` — explode + df join + rarest-first sort_array
-      collect + prefix slice (the prefix-frame assembly);
+    * ``vocab_agg``     — exploded shingles -> (key, df, colliding
+      shingles) vocabulary;
+    * ``rank_assemble`` — postings x vocabulary join + rarest-first
+      sort_array collect + prefix slice (the prefix-frame assembly);
     * ``candidates``    — the prefix/length/positional candidate join
       from a parquet-backed prefix frame;
     * ``verify``        — exact-Jaccard join-back from parquet-backed
@@ -138,82 +144,32 @@ def simjoin_stage_walls(spark, sf_dir: str, scratch: str) -> dict:
     scans and the pin); their per-decade EXPONENTS are the signal."""
     import shutil
 
-    from sfs3_kinesis_spark.operators.dedup import shingles
-    from sfs3_kinesis_spark.plans.advanced_queries import (
-        similarity_join_prefix_candidates,
-        similarity_join_prefix_verify,
-    )
-    from sfs3_kinesis_spark.plans.core import t
+    from sfs3_kinesis_spark.operators import dedup
 
     os.makedirs(scratch, exist_ok=True)
     walls: dict[str, float] = {}
 
-    docs = t(spark, sf_dir, "documents").filter(F.size(F.split("text", " ")) >= 3)
+    def stage(name: str, build):
+        """Time ``build`` and return its output re-read from parquet."""
+        walls[name] = _timed(spark, build)
+        path = os.path.join(scratch, f"{name}.parquet")
+        build().write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
 
-    def build_d():
-        return shingles(docs, n=3, out_col="toks").select("doc_id", "toks")
-
-    walls["shingle_build"] = _timed(spark, build_d)
-    d_pq = os.path.join(scratch, "d.parquet")
-    build_d().write.mode("overwrite").parquet(d_pq)
-    d = spark.read.parquet(d_pq)
-
-    def build_df_tbl():
-        # r11 production shape: hash-keyed vocabulary with the exact
-        # collision guard columns (operators/dedup._ranked_shingle_sets)
-        return (
-            d.select(F.explode("toks").alias("tok"))
-            .filter(F.col("tok").isNotNull())
-            .groupBy(F.expr("xxhash64(tok)").alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("df"),
-                F.min("tok").alias("_t1"),
-                F.max("tok").alias("_t2"),
-            )
-            .select("h", "df", (F.col("_t1") != F.col("_t2")).alias("_coll"))
-        )
-
-    walls["vocab_agg"] = _timed(spark, build_df_tbl)
-    df_pq = os.path.join(scratch, "df.parquet")
-    build_df_tbl().write.mode("overwrite").parquet(df_pq)
-    df_tbl = spark.read.parquet(df_pq)
-
-    def build_pref():
-        ph = (
-            d.select("doc_id", F.explode("toks").alias("tok"))
-            .filter(F.col("tok").isNotNull())
-            .select("doc_id", F.expr("xxhash64(tok)").alias("h"))
-        )
-        ranked = (
-            ph.join(df_tbl.select("h", "df"), "h")
-            .groupBy("doc_id")
-            .agg(F.sort_array(F.collect_list(F.struct("df", "h"))).alias("sorted_sh"))
-            .select(
-                "doc_id",
-                F.expr("transform(sorted_sh, x -> x.h)").alias("toks_sorted"),
-                F.size("sorted_sh").alias("n"),
-            )
-        )
-        return ranked.withColumn(
-            "prefix", F.expr("slice(toks_sorted, 1, n - ((9 * n + 9) DIV 10) + 1)")
-        )
-
-    walls["rank_assemble"] = _timed(spark, build_pref)
-    pref_pq = os.path.join(scratch, "pref.parquet")
-    build_pref().write.mode("overwrite").parquet(pref_pq)
-    pref = spark.read.parquet(pref_pq)
-
-    walls["candidates"] = _timed(
-        spark, lambda: similarity_join_prefix_candidates(spark, sf_dir, pref=pref)
+    d = stage("shingle_build", lambda: _simjoin_shingles(spark, sf_dir))
+    vocab = stage("vocab_agg", lambda: dedup._shingle_vocab(dedup._postings(d)))
+    pref = stage(
+        "rank_assemble",
+        lambda: dedup._ranked_shingle_sets(d, vocab=vocab).withColumn(
+            "prefix", dedup._prefix(9000)
+        ),
     )
-    cand_pq = os.path.join(scratch, "cand.parquet")
-    similarity_join_prefix_candidates(spark, sf_dir, pref=pref).write.mode(
-        "overwrite"
-    ).parquet(cand_pq)
-    cand = spark.read.parquet(cand_pq)
-
+    cand = stage(
+        "candidates",
+        lambda: dedup.jaccard_candidates_exact(d, threshold_bp=9000, pref=pref),
+    )
     walls["verify"] = _timed(
-        spark, lambda: similarity_join_prefix_verify(pref, cand)
+        spark, lambda: dedup.jaccard_verify_exact(cand, pref, threshold_bp=9000)
     )
     walls["full_query"] = _timed(
         spark, lambda: REGISTRY["similarity_join_prefix_filter"].spark(spark, sf_dir)

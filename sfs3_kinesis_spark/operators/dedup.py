@@ -1,6 +1,6 @@
 """Deduplication operators for large-scale text corpora.
 
-Four tiers, all shuffle-efficient and expressed with JVM-side
+Five tiers, all shuffle-efficient and expressed with JVM-side
 built-ins (no Python in the hot path):
 
 * exact        — hash groupBy on the raw or normalized text.
@@ -13,13 +13,16 @@ built-ins (no Python in the hot path):
                  drives cost.
 * SimHash      — 64-bit simhash from token hashes; near-dup ==
                  small Hamming distance, bucketed by the top bits.
+* prefix join  — EXACT Jaccard / containment pairs: shingles become
+                 collision-free bigint ids (56-bit hash key plus a
+                 slot inside the rare colliding key), each document
+                 indexes only its rarest-first prefix, and an
+                 equi-join on prefix ids feeds an exact verify.
 
 All hashing uses ``xxhash64`` (Spark built-in, codegen'd).
 """
 
 from __future__ import annotations
-
-import threading as _threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -201,129 +204,94 @@ def minhash_lsh_pairs(
     )
 
 
-def _ranked_shingle_sets_str(docs_with_shingles: DataFrame) -> DataFrame:
-    """String-keyed fallback of :func:`_ranked_shingle_sets` — the
-    pre-r11 formulation, kept as the EXACT escape hatch for the
-    (astronomically unlikely, but checked, never assumed) corpus
-    whose shingle vocabulary collides under xxhash64.
+#: The shingle key, a SQL expression over ``tok``: the top 56 bits of
+#: ``xxhash64``.  A shingle's id is ``key * _KEY_SLOTS + slot``, where
+#: ``slot`` is its place among the sorted distinct shingles that share
+#: the key (0 unless the key collides), so ids are injective over any
+#: vocabulary and still fit a signed bigint (2^56 * 2^7 = 2^63).
+_SHINGLE_KEY = "shiftrightunsigned(xxhash64(tok), 8)"
+_KEY_SLOTS = 128
 
-    The (df, shingle) struct IS the global total order — no
-    vocabulary-sized rank window.  The df table is vocabulary-sized:
-    AQE broadcasts it at fixture/test scales, but at corpus scale the
-    join degrades to a shuffle equi-join on the shingle key — still
-    scale-safe (narrow rows, no all-pairs).
-    """
-    d = docs_with_shingles.select("doc_id", "shingles")
-    df_tbl = (
-        d.select(F.explode("shingles").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+
+def _postings(docs_with_shingles: DataFrame) -> DataFrame:
+    """(doc_id, tok, k): one row per distinct shingle per document.
+    NULL shingles (a NULL-text document's ``[text]`` fallback) are
+    dropped, as the all-pairs oracles drop them."""
     return (
-        d.select("doc_id", F.explode("shingles").alias("tok"))
-        .join(df_tbl, "tok")
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("df", "tok"))).alias("sorted_sh"))
+        docs_with_shingles.select("doc_id", F.explode("shingles").alias("tok"))
+        .filter(F.col("tok").isNotNull())
+        .withColumn("k", F.expr(_SHINGLE_KEY))
+    )
+
+
+def _shingle_vocab(postings: DataFrame) -> DataFrame:
+    """(k, df, toks): one row per shingle key of :func:`_postings`
+    with its document frequency.  ``toks`` lists the key's distinct
+    shingles, sorted, only when there are several (a hash collision)
+    and is NULL otherwise.  A key holding more than ``_KEY_SLOTS``
+    shingles fails the query instead of reusing an id."""
+    return (
+        postings.groupBy("k")
+        .agg(F.count(F.lit(1)).alias("df"), F.collect_set("tok").alias("toks"))
         .select(
-            "doc_id",
-            F.expr("transform(sorted_sh, x -> x.tok)").alias("toks_sorted"),
-            F.size("sorted_sh").alias("n"),
+            "k",
+            "df",
+            F.expr(
+                f"CASE WHEN size(toks) > {_KEY_SLOTS} THEN raise_error("
+                f"'more than {_KEY_SLOTS} distinct shingles share one key') "
+                "WHEN size(toks) > 1 THEN array_sort(toks) END"
+            ).alias("toks"),
         )
     )
-
-
-#: xxhash64 vocabulary-collision verdicts, keyed by (session id,
-#: vocab-plan semanticHash) — see the memo note inside
-#: :func:`_ranked_shingle_sets`.  Bounded; cleared implicitly by
-#: session replacement (the id key no longer matches).
-_VOCAB_COLLISION_MEMO: dict = {}
-_VOCAB_COLLISION_LOCK = _threading.RLock()
 
 
 def _ranked_shingle_sets(
-    docs_with_shingles: DataFrame, *, tag: str = "shingle"
+    docs_with_shingles: DataFrame, *, vocab: DataFrame | None = None
 ) -> DataFrame:
-    """(doc_id, toks_sorted, n): each document's distinct shingles
-    sorted rarest-first by corpus document frequency — HASH-KEYED
-    (r11): ``toks_sorted`` is an ``array<bigint>`` of
-    ``xxhash64(shingle)`` values in (df, hash) order, not the shingle
-    strings.
+    """(doc_id, toks_sorted, n): each document's distinct shingles as
+    ``array<bigint>`` ids, sorted rarest-first by (key df, id).
 
-    Why (guide §2.3, shuffle fewer bytes / §4.2 cheap per-row work):
-    every downstream stage — the doc_id collect shuffle, the per-doc
-    rarest-first sort, the candidate equi-join on prefix elements,
-    and the exact ``array_intersect`` verification — only ever needs
-    shingle IDENTITY and a consistent global total order, never the
-    text.  An 8-byte hash is ~4x narrower than a 3-word shingle
-    string in every one of those shuffles, sorts/compares without
-    string allocation, and the prefix-filter guarantee holds under
-    ANY global total order, so switching the order from (df, tok) to
-    (df, xxhash64(tok)) cannot change which pairs are emitted.
+    Every downstream stage (the doc_id collect shuffle, the per-doc
+    sort, the candidate equi-join on prefix elements and the exact
+    ``array_intersect`` verify) needs only shingle identity and one
+    global total order, never the text.  An 8-byte id is ~4x narrower
+    than a 3-word shingle in each of those shuffles and compares
+    without string allocation.
 
-    Exactness is GUARDED, not assumed: the vocabulary aggregate
-    groups by the hash and keeps min/max of the underlying shingle
-    per group — any group whose min != max is a genuine 64-bit
-    collision, in which case this function returns the string-keyed
-    fallback (identical results, pre-r11 plan).  With no collision
-    the hash is injective over the vocabulary, so intersection sizes
-    and therefore every emitted (pair, score) row are EXACTLY those
-    of the string plan; the DuckDB all-pairs oracles re-prove this
-    per sweep.  NULL shingles (a NULL-text document's ``[text]``
-    fallback) are filtered before hashing, matching the null-unsafe
-    ``tok`` equi-join that dropped them in the string plan.
+    The ids are exact by construction: ``id = key * _KEY_SLOTS +
+    slot`` (see ``_SHINGLE_KEY``), where the postings join the
+    vocabulary on the key and a colliding key's sorted shingle list
+    gives each shingle its own slot.  No driver action checks for
+    collisions and there is no fallback plan.  Ordering by the key's
+    df rather than the shingle's changes nothing: the prefix filter
+    is lossless under any global total order.
 
-    The vocabulary (h, df) table is pinned through the keyed LRU and
-    explicitly broadcast-joined to the postings at or below the
-    AQE/broadcast regime's natural threshold — at corpus scale the
-    vocabulary is itself corpus-sized and the join degrades to a
-    shuffle equi-join on the hash (narrow rows, no all-pairs).
+    The vocabulary is pinned through the keyed LRU; ``vocab`` takes a
+    prebuilt one instead (the stage timings in
+    scripts/sf10_stress_prefix.py).
     """
-    d = docs_with_shingles.select("doc_id", "shingles")
-    ex = d.select("doc_id", F.explode("shingles").alias("tok")).filter(
-        F.col("tok").isNotNull()
-    )
-    voc_plan = (
-        ex.groupBy(F.expr("xxhash64(tok)").alias("h"))
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.min("tok").alias("_t1"),
-            F.max("tok").alias("_t2"),
-        )
-        .select("h", "df", (F.col("_t1") != F.col("_t2")).alias("_coll"))
-    )
-    voc = pin_shared(voc_plan, tag=f"{tag}_vocab")
-    # collision verdict memo: the check is a pure function of the
-    # (immutable within a session) source data and the vocab plan, so
-    # one action per (session, plan) suffices — same validity domain
-    # as Spark's own catalog cache and the pin LRU.  Without the memo
-    # every warm re-build of a prefix-join query pays a vocab-scan
-    # action just to re-learn "no collision" (measured +0.2 s steady
-    # on similarity_join_prefix_filter at sf0.1).
-    try:
-        memo_key = (id(docs_with_shingles.sparkSession), voc_plan.semanticHash())
-    except Exception:  # noqa: BLE001 — connect mode / exotic plans
-        memo_key = None
-    with _VOCAB_COLLISION_LOCK:
-        collided = _VOCAB_COLLISION_MEMO.get(memo_key) if memo_key is not None else None
-    if collided is None:
-        collided = not voc.filter("_coll").isEmpty()
-        if memo_key is not None:
-            with _VOCAB_COLLISION_LOCK:
-                if len(_VOCAB_COLLISION_MEMO) >= 256:
-                    _VOCAB_COLLISION_MEMO.pop(next(iter(_VOCAB_COLLISION_MEMO)), None)
-                _VOCAB_COLLISION_MEMO[memo_key] = collided
-    if collided:
-        return _ranked_shingle_sets_str(docs_with_shingles)
-    ph = ex.select("doc_id", F.expr("xxhash64(tok)").alias("h"))
+    postings = _postings(docs_with_shingles)
+    if vocab is None:
+        vocab = pin_shared(_shingle_vocab(postings), tag="shingle_vocab")
+    slot = "coalesce(array_position(toks, tok) - 1, 0)"
     return (
-        ph.join(voc.select("h", "df"), "h")
+        postings.join(vocab, "k")
+        .select("doc_id", "df", F.expr(f"k * {_KEY_SLOTS} + {slot}").alias("id"))
         .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("df", "h"))).alias("sorted_sh"))
+        .agg(F.sort_array(F.collect_list(F.struct("df", "id"))).alias("sorted_sh"))
         .select(
             "doc_id",
-            F.expr("transform(sorted_sh, x -> x.h)").alias("toks_sorted"),
+            F.expr("transform(sorted_sh, x -> x.id)").alias("toks_sorted"),
             F.size("sorted_sh").alias("n"),
         )
+    )
+
+
+def _prefix(threshold_bp: int) -> F.Column:
+    """The first n - ceil(t·n) + 1 rarest ids of ``toks_sorted``;
+    ceil(t_bp·n/10000) in integers."""
+    return F.expr(
+        f"slice(toks_sorted, 1, n - (({threshold_bp} * n + 9999) DIV 10000) + 1)"
     )
 
 
@@ -333,13 +301,7 @@ def _jaccard_prefix_frame(
     """Ranked shingle sets plus the t-prefix slice — the shared front
     half of :func:`jaccard_pairs_exact`, pinned once per plan."""
     ranked = _ranked_shingle_sets(docs_with_shingles)
-    # prefix length = n - ceil(t·n) + 1; ceil(t_bp·n/10000) in integers
-    pref = ranked.withColumn(
-        "prefix",
-        F.expr(
-            f"slice(toks_sorted, 1, n - (({threshold_bp} * n + 9999) DIV 10000) + 1)"
-        ),
-    )
+    pref = ranked.withColumn("prefix", _prefix(threshold_bp))
     return pin_shared(pref, tag="jaccard_prefix")
 
 
@@ -347,27 +309,43 @@ def jaccard_candidates_exact(
     docs_with_shingles: DataFrame, *, threshold_bp: int, pref: DataFrame | None = None
 ) -> DataFrame:
     """Candidate stage of :func:`jaccard_pairs_exact` — distinct
-    (doc_a, doc_b, s) pairs surviving prefix + length filtering,
-    BEFORE exact verification.  Exposed so the decade stress
-    (scripts/sf10_stress_prefix.py) can attribute wall-time growth to
-    candidate fan-out vs true-pair growth (r08 verdict next-round #2).
+    (doc_a, doc_b, s) pairs surviving prefix, length and positional
+    filtering, BEFORE exact verification.  Exposed so the decade
+    stress (scripts/sf10_stress_prefix.py) can attribute wall-time
+    growth to candidate fan-out vs true-pair growth.
+
+    Only (prefix id, position, doc_id, n) shuffle, never the arrays.
+    Both filters are conditions on the prefix-id equi-join:
+
+    * length: J ≥ t forces t·na ≤ nb and t·nb ≤ na;
+    * positional (PPJoin, Xiao/Wang/Lin/Yu 2008): a shared prefix
+      element at 0-based positions (pa, pb) bounds the overlap by
+      1 + min(na-pa-1, nb-pb-1), and J ≥ t needs
+      i ≥ ceil(t·(na+nb)/(1+t)).  Lossless for any t: the pair's
+      smallest common element is in both prefixes and every other
+      common element sits after it on both sides, so that row's bound
+      is at least the true overlap.
 
     ``pref`` lets :func:`jaccard_pairs_exact` pass its already-pinned
-    prefix frame through instead of re-entering the pin (r09 ADVICE:
-    when semanticHash fails the LRU cannot match the second call, so
-    it would persist the corpus-sized frame twice)."""
+    prefix frame through instead of re-entering the pin (when
+    semanticHash fails the LRU cannot match the second call, so it
+    would persist the corpus-sized frame twice)."""
     if pref is None:
         pref = _jaccard_prefix_frame(docs_with_shingles, threshold_bp=threshold_bp)
-    pe = pref.select("doc_id", "n", F.explode("prefix").alias("pr"))
+    pe = pref.select("doc_id", "n", F.posexplode("prefix").alias("p", "pr"))
+    den = 10000 + threshold_bp
     return (
         pe.alias("a")
         .join(
             pe.alias("b"),
             (F.col("a.pr") == F.col("b.pr"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # length filter: J ≥ t forces t·na ≤ nb and t·nb ≤ na
             & (F.col("b.n") * 10000 >= F.col("a.n") * threshold_bp)
-            & (F.col("a.n") * 10000 >= F.col("b.n") * threshold_bp),
+            & (F.col("a.n") * 10000 >= F.col("b.n") * threshold_bp)
+            & F.expr(
+                "1 + least(a.n - a.p - 1, b.n - b.p - 1)"
+                f" >= ({threshold_bp}L * (a.n + b.n) + {den - 1}) DIV {den}"
+            ),
         )
         .select(
             F.col("a.doc_id").alias("doc_a"),
@@ -375,6 +353,31 @@ def jaccard_candidates_exact(
             (F.col("a.n") + F.col("b.n")).alias("s"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
+def jaccard_verify_exact(
+    cand: DataFrame, ranked: DataFrame, *, threshold_bp: int
+) -> DataFrame:
+    """Verify stage of :func:`jaccard_pairs_exact`: attach each
+    candidate's two id arrays from ``ranked`` (doc_id, toks_sorted)
+    and keep the pairs whose exact integer Jaccard reaches
+    ``threshold_bp``.  The arrays join only the surviving candidates."""
+    arrs = ranked.select("doc_id", "toks_sorted")
+    ver = (
+        cand.join(
+            arrs.select(F.col("doc_id").alias("doc_a"), F.col("toks_sorted").alias("ra")),
+            "doc_a",
+        )
+        .join(
+            arrs.select(F.col("doc_id").alias("doc_b"), F.col("toks_sorted").alias("rb")),
+            "doc_b",
+        )
+        .withColumn("i", F.size(F.array_intersect("ra", "rb")))
+        .withColumn("jaccard_bp", F.expr("i * 10000 DIV (s - i)"))
+    )
+    return ver.filter(F.col("jaccard_bp") >= threshold_bp).select(
+        "doc_a", "doc_b", "jaccard_bp"
     )
 
 
@@ -406,22 +409,7 @@ def jaccard_pairs_exact(
     cand = jaccard_candidates_exact(
         docs_with_shingles, threshold_bp=threshold_bp, pref=pref
     )
-    arrs = pref.select("doc_id", "toks_sorted")
-    ver = (
-        cand.join(
-            arrs.select(F.col("doc_id").alias("doc_a"), F.col("toks_sorted").alias("ra")),
-            "doc_a",
-        )
-        .join(
-            arrs.select(F.col("doc_id").alias("doc_b"), F.col("toks_sorted").alias("rb")),
-            "doc_b",
-        )
-        .withColumn("i", F.size(F.array_intersect("ra", "rb")))
-        .withColumn("jaccard_bp", F.expr("i * 10000 DIV (s - i)"))
-    )
-    return ver.filter(F.col("jaccard_bp") >= threshold_bp).select(
-        "doc_a", "doc_b", "jaccard_bp"
-    )
+    return jaccard_verify_exact(cand, pref, threshold_bp=threshold_bp)
 
 
 def containment_candidates_exact(
@@ -441,14 +429,7 @@ def containment_candidates_exact(
         ranked = pin_shared(
             _ranked_shingle_sets(docs_with_shingles), tag="containment_ranked"
         )
-    pe_a = ranked.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"slice(toks_sorted, 1, n - (({threshold_bp} * n + 9999) DIV 10000) + 1)"
-            )
-        ).alias("pr"),
-    )
+    pe_a = ranked.select("doc_id", F.explode(_prefix(threshold_bp)).alias("pr"))
     pe_b = ranked.select("doc_id", F.explode("toks_sorted").alias("pr"))
     return (
         pe_a.alias("a")

@@ -41,7 +41,6 @@ from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sfs3_kinesis_spark.plans.core import register, t, t_nonnull
-from sfs3_kinesis_spark.operators.scale import pin_shared
 
 
 @register(
@@ -535,109 +534,6 @@ _SIMJOIN_ORACLE = """
     """
 
 
-def _simjoin_prefix_frame(spark: SparkSession, sf_dir: str):
-    """(doc_id, toks_sorted, n, prefix): each document's distinct
-    3-shingles rarest-first plus its t=0.9 prefix slice — the shared
-    front half of :func:`similarity_join_prefix_filter` and its
-    candidate-stage instrumentation twin.
-
-    r11: rides the HASH-KEYED ranked-set builder
-    (:func:`~sfs3_kinesis_spark.operators.dedup._ranked_shingle_sets`)
-    — ``toks_sorted``/``prefix`` carry 8-byte xxhash64 shingle ids in
-    (df, hash) order instead of shingle strings, with the exact
-    collision guard and string fallback documented there.  No global
-    rank assignment either way (that would be a vocabulary-sized
-    single-partition window): the (df, hash) struct IS the total
-    order, and the prefix-filter guarantee holds under any global
-    total order, so the emitted pairs are unchanged."""
-    from sfs3_kinesis_spark.operators.dedup import _ranked_shingle_sets, shingles
-
-    docs = t(spark, sf_dir, "documents").filter(F.size(F.split("text", " ")) >= 3)
-    d = shingles(docs, n=3).select("doc_id", "shingles")
-    ranked = _ranked_shingle_sets(d, tag="simjoin")
-    # prefix length = n - ceil(0.9 n) + 1;  ceil(0.9n) = (9n + 9) DIV 10
-    pref = ranked.withColumn(
-        "prefix", F.expr("slice(toks_sorted, 1, n - ((9 * n + 9) DIV 10) + 1)")
-    )
-    # shared by the candidate join AND the array join-back
-    return pin_shared(pref, tag="simjoin_prefix")
-
-
-def similarity_join_prefix_verify(pref, cand):
-    """Verification stage of :func:`similarity_join_prefix_filter`,
-    isolated: exact integer Jaccard on candidate pairs via join-back
-    to the per-doc sorted arrays.  Used by the stage-isolation
-    harness (scripts/sf10_stress_prefix.py) so the verify wall can be
-    timed from parquet-backed inputs; the production query composes
-    the same expressions inline."""
-    arrs = pref.select("doc_id", "toks_sorted")
-    ver = (
-        cand.join(
-            arrs.select(F.col("doc_id").alias("doc_a"), F.col("toks_sorted").alias("ra")),
-            "doc_a",
-        )
-        .join(
-            arrs.select(F.col("doc_id").alias("doc_b"), F.col("toks_sorted").alias("rb")),
-            "doc_b",
-        )
-        .withColumn("i", F.size(F.array_intersect("ra", "rb")))
-    )
-    return ver.filter(F.expr("10 * i >= 9 * (s - i)")).select(
-        "doc_a", "doc_b", F.expr("(10000 * i) DIV (s - i)").cast("long").alias("jac_bp")
-    )
-
-
-def similarity_join_prefix_candidates(spark: SparkSession, sf_dir: str, pref=None):
-    """Candidate stage of :func:`similarity_join_prefix_filter` —
-    distinct (doc_a, doc_b, s) pairs surviving prefix + length +
-    positional filtering, BEFORE exact verification.  Exposed so the
-    decade stress (scripts/sf10_stress_prefix.py) can attribute
-    wall-time growth to candidate fan-out vs true-pair growth (r08
-    verdict next-round #2).  ``pref`` = pass-through of the caller's
-    already-pinned prefix frame, so the full query pins exactly once
-    even in pin-fallback modes (r09 ADVICE)."""
-    if pref is None:
-        pref = _simjoin_prefix_frame(spark, sf_dir)
-    # Candidate generation shuffles ONLY (prefix, position, doc_id, n)
-    # — never the shingle arrays: at corpus scale the candidate join's
-    # shuffle payload is what dominates, and an array-carrying row is
-    # ~100x a key row.
-    pe = pref.select("doc_id", "n", F.posexplode("prefix").alias("p", "pr"))
-    return (
-        pe.alias("a")
-        .join(
-            pe.alias("b"),
-            (F.col("a.pr") == F.col("b.pr"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # length filter: J >= 0.9 forces min(na,nb) >= 0.9*max —
-            # J <= min/max since i <= min and union >= max.  Without
-            # this, cross-size-class prefix collisions dominate the
-            # candidate set as the corpus grows (the r08 e=1.18
-            # second-decade exponent).
-            & (F.col("b.n") * 10 >= F.col("a.n") * 9)
-            & (F.col("a.n") * 10 >= F.col("b.n") * 9)
-            # PPJoin positional filter (Xiao/Wang/Lin/Yu 2008, public):
-            # a shared prefix element at 0-based positions (pa, pb)
-            # bounds the overlap by 1 + min(na-pa-1, nb-pb-1); a true
-            # pair needs i >= ceil(0.9*(na+nb)/1.9) = ceil(9(na+nb)/19)
-            # (from 10i >= 9(na+nb-i)).  Lossless: the pair's SMALLEST
-            # common element is in both prefixes (prefix guarantee)
-            # and every other common element sits after it on both
-            # sides, so that row's bound >= the true overlap.
-            & F.expr(
-                "1 + least(a.n - a.p - 1, b.n - b.p - 1)"
-                " >= (9 * (a.n + b.n) + 18) DIV 19"
-            ),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (F.col("a.n") + F.col("b.n")).alias("s"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-
 @register(
     "similarity_join_prefix_filter",
     _SIMJOIN_ORACLE,
@@ -663,18 +559,12 @@ def similarity_join_prefix_candidates(spark: SparkSession, sf_dir: str, pref=Non
     ),
 )
 def similarity_join_prefix_filter(spark: SparkSession, sf_dir: str):
-    pref = _simjoin_prefix_frame(spark, sf_dir)
-    cand = similarity_join_prefix_candidates(spark, sf_dir, pref=pref)
-    # Arrays attach to the (rare) surviving candidates only.
-    arrs = pref.select("doc_id", "toks_sorted")
-    ver = (
-        cand.join(arrs.select(F.col("doc_id").alias("doc_a"), F.col("toks_sorted").alias("ra")), "doc_a")
-        .join(arrs.select(F.col("doc_id").alias("doc_b"), F.col("toks_sorted").alias("rb")), "doc_b")
-        .withColumn("i", F.size(F.array_intersect("ra", "rb")))
-    )
-    return ver.filter(F.expr("10 * i >= 9 * (s - i)")).select(
-        "doc_a", "doc_b", F.expr("(10000 * i) DIV (s - i)").cast("long").alias("jac_bp")
-    )
+    from sfs3_kinesis_spark.operators.dedup import jaccard_pairs_exact, shingles
+
+    docs = t(spark, sf_dir, "documents").filter(F.size(F.split("text", " ")) >= 3)
+    return jaccard_pairs_exact(
+        shingles(docs, n=3).select("doc_id", "shingles"), threshold_bp=9000
+    ).withColumnRenamed("jaccard_bp", "jac_bp")
 
 
 @register(

@@ -192,12 +192,10 @@ def _brute_containment(docs_rows, threshold_bp):
     return out
 
 
-def test_prefix_filtered_jaccard_is_lossless_on_adversarial_corpora(spark):
-    """The prefix-filter lemma (smallest common element) must hold on
-    corpora the fixtures don't exercise: heavy shingle-frequency
-    skew (a boilerplate shingle in EVERY doc, so it always sorts
-    last and out of prefixes), duplicate docs, subset/superset
-    chains, short (<3-token) docs, and borderline thresholds.  A
+def _adversarial_rows():
+    """Heavy shingle-frequency skew (a boilerplate shingle in EVERY
+    doc, so it always sorts last and out of prefixes), duplicate
+    docs, subset/superset chains, short (<3-token) docs.  A
     deterministic LCG builds the corpus so failures replay."""
     state = 20260816
     words = [f"w{i}" for i in range(12)]
@@ -214,24 +212,93 @@ def test_prefix_filtered_jaccard_is_lossless_on_adversarial_corpora(spark):
     # exact duplicates and a subset/superset pair
     rows.append((100, rows[0][1]))
     rows.append((101, rows[1][1] + " " + rows[2][1]))
+    return rows
+
+
+def _assert_prefix_joins_match_brute(spark, rows):
+    """Jaccard (borderline thresholds), containment, and the
+    ``similarity_join_prefix_filter`` shape (docs of >= 3 tokens at
+    9000 bp) all equal the driver-side brute force."""
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sh = dedup.shingles(docs, n=3).select("doc_id", "shingles")
 
     for thr in (2500, 4000, 8000):
         got = {
             (r.doc_a, r.doc_b, r.jaccard_bp)
-            for r in dedup.jaccard_pairs_exact(
-                dedup.shingles(docs, n=3).select("doc_id", "shingles"),
-                threshold_bp=thr,
-            ).collect()
+            for r in dedup.jaccard_pairs_exact(sh, threshold_bp=thr).collect()
         }
         assert got == _brute_jaccard(rows, thr), f"thr={thr}"
 
     for thr in (5000, 8000):
         got = {
             (r.doc_contained, r.doc_container, r.containment_bp)
-            for r in dedup.containment_pairs_exact(
-                dedup.shingles(docs, n=3).select("doc_id", "shingles"),
-                threshold_bp=thr,
-            ).collect()
+            for r in dedup.containment_pairs_exact(sh, threshold_bp=thr).collect()
         }
         assert got == _brute_containment(rows, thr), f"thr={thr}"
+
+    long_docs = docs.filter(F.size(F.split("text", " ")) >= 3)
+    got = {
+        tuple(r)
+        for r in dedup.jaccard_pairs_exact(
+            dedup.shingles(long_docs, n=3).select("doc_id", "shingles"),
+            threshold_bp=9000,
+        ).collect()
+    }
+    long_rows = [r for r in rows if len(r[1].split(" ")) >= 3]
+    assert got == _brute_jaccard(long_rows, 9000)
+
+
+def test_prefix_filtered_jaccard_is_lossless_on_adversarial_corpora(spark):
+    """The prefix-filter lemma (smallest common element) must hold on
+    corpora the fixtures don't exercise (see ``_adversarial_rows``)
+    and at borderline thresholds."""
+    _assert_prefix_joins_match_brute(spark, _adversarial_rows())
+
+
+@pytest.mark.parametrize("narrowed", ["xxhash64(tok) & 63", "xxhash64(tok) & 255"])
+def test_prefix_joins_stay_exact_under_forced_key_collisions(
+    spark, monkeypatch, narrowed
+):
+    """Narrow the shingle key to 6 / 8 bits so most keys hold several
+    shingles: the per-key slots must keep every id distinct, so pairs
+    and scores still equal the brute force."""
+    monkeypatch.setattr(dedup, "_SHINGLE_KEY", narrowed)
+    rows = _adversarial_rows()
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sh = dedup.shingles(docs, n=3).select("doc_id", "shingles")
+    vocab = dedup._shingle_vocab(dedup._postings(sh))
+    assert vocab.filter("toks IS NOT NULL").count() > 0  # collisions really forced
+    _assert_prefix_joins_match_brute(spark, rows)
+
+
+def test_prefix_join_fails_loudly_past_the_key_slot_bound(spark, monkeypatch):
+    """More distinct shingles on one key than ``_KEY_SLOTS`` cannot get
+    distinct ids: the query must fail, never merge two shingles."""
+    monkeypatch.setattr(dedup, "_SHINGLE_KEY", "xxhash64(tok) & 0")
+    rows = [(i, f"a{i} b{i} c{i}") for i in range(dedup._KEY_SLOTS + 1)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sh = dedup.shingles(docs, n=3).select("doc_id", "shingles")
+    with pytest.raises(Exception, match="share one key"):
+        dedup.jaccard_pairs_exact(sh, threshold_bp=5000).collect()
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_prefix_join_builds_run_no_spark_job(spark, monkeypatch):
+    """Building the exact prefix joins is pure plan construction: no
+    collision check or other driver action before the caller's own."""
+    from sfs3_kinesis_spark.plans import REGISTRY, advanced_queries
+
+    docs = spark.createDataFrame(
+        [(1, "p q r s t"), (2, "p q r s t"), (3, "x y")], "doc_id long, text string"
+    )
+    monkeypatch.setattr(advanced_queries, "t", lambda _s, _d, _n: docs)
+    sh = dedup.shingles(docs, n=3).select("doc_id", "shingles")
+    jobs0 = _next_job_id(spark)
+    dedup.jaccard_pairs_exact(sh, threshold_bp=4000)
+    dedup.containment_pairs_exact(sh, threshold_bp=8000)
+    sim = REGISTRY["similarity_join_prefix_filter"].spark(spark, SF)
+    assert _next_job_id(spark) - jobs0 == 0
+    assert [tuple(r) for r in sim.collect()] == [(1, 2, 10000)]

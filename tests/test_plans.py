@@ -6,6 +6,8 @@ regresses one of these would silently cost 10-100x at 100 TB scale.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from sfs3_kinesis_spark.plans import REGISTRY
@@ -80,6 +82,20 @@ def test_lsh_candidate_joins_are_equi(spark, name):
     plan = _plan(spark, name)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize(
+    "name", ["dedup_ngram_jaccard", "dedup_containment", "similarity_join_prefix_filter"]
+)
+def test_prefix_filter_joins_are_equi(spark, name):
+    # the prefix filter only prunes if candidates come from a hash
+    # equi-join on prefix ids; the Jaccard joins' PPJoin positional
+    # bound must be a condition of that join, not a post-join Filter
+    plan = _plan(spark, name)
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    if name != "dedup_containment":
+        assert re.search(r"Join \[pr#\d+L\], \[pr#\d+L\], Inner, .*least\(", plan)
 
 
 def test_q10_pushes_flag_filter_and_broadcasts_nation(spark):
