@@ -37,7 +37,9 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, ".")
 
@@ -70,6 +72,27 @@ def run_one(spark, sf_dir: str, name: str, con) -> tuple[str, bool | None, str, 
     return name, ok, detail, timings
 
 
+def run_all(spark, sf_dir: str, names, threads: int = 1):
+    """Yield :func:`run_one` results for ``names``, in order.  With
+    ``threads > 1`` the queries run on a thread pool; each worker
+    thread owns one DuckDB connection."""
+    if threads == 1:
+        con = duck_connection(sf_dir)
+        for name in names:
+            yield run_one(spark, sf_dir, name, con)
+        return
+    tls = threading.local()
+
+    def worker(name: str):
+        con = getattr(tls, "con", None)
+        if con is None:
+            con = tls.con = duck_connection(sf_dir)
+        return run_one(spark, sf_dir, name, con)
+
+    with ThreadPoolExecutor(max_workers=threads) as pool:
+        yield from pool.map(worker, names)
+
+
 def main() -> int:
     args = list(sys.argv[1:])
     times_out = None
@@ -94,25 +117,7 @@ def main() -> int:
     failures = 0
     ledger: dict[str, dict] = {}
 
-    if threads == 1:
-        con = duck_connection(sf_dir)
-        results = (run_one(spark, sf_dir, n, con) for n in names)
-    else:
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
-
-        tls = threading.local()
-
-        def worker(name: str):
-            con = getattr(tls, "con", None)
-            if con is None:
-                con = tls.con = duck_connection(sf_dir)
-            return run_one(spark, sf_dir, name, con)
-
-        pool = ThreadPoolExecutor(max_workers=threads)
-        results = pool.map(worker, names)
-
-    for name, ok, detail, timings in results:
+    for name, ok, detail, timings in run_all(spark, sf_dir, names, threads):
         ledger[name] = timings
         if ok is None:
             print(f"  {name:40s} {detail} [{timings['total_s']:.1f}s]")
@@ -121,8 +126,6 @@ def main() -> int:
             failures += 1
         status = "OK " if ok else "FAIL"
         print(f"  {name:40s} {status} {detail} [{timings['total_s']:.1f}s]")
-    if threads > 1:
-        pool.shutdown()
 
     if times_out:
         try:

@@ -29,7 +29,7 @@ registry by `scripts/gen_coverage.py`.
 | S1 | S3 JSON point read, predicate-gated | `sources/batch.py:read_json_documents` (schema-fixed JSON), keyed lookup = filter on `process_state`; predicate gating in `operators/pipeline.py` Step gates | `tests/test_sources.py`, `tests/test_pipeline.py` |
 | S2 | S3 JSON whole-doc upsert | `sources/sinks.py:KeyedUpsertSink` (keyed MERGE per micro-batch, idempotent); fact-table layout writers: `write_partitioned` (hive directory pruning) + `write_range_clustered` (zone-map posture — non-overlapping per-file [min,max] on the cluster key for range-predicate skipping) | `tests/test_streaming_windows.py::test_incremental_pipeline_checkpoint_restart`, `tests/test_partitioning.py` |
 | S3op | Kinesis producer (keyed append) | `sources/sinks.py:kinesis_sink` (connector-gated); tests use memory/file sinks with `partitionKey=txn_id` shape | corpus `pipeline_run` events; `tests/test_pipeline.py::test_status_events_shape` |
-| S4-S6 | Kinesis consumer (shards, LATEST iterator, paced getRecords) | `sources/stream.py:kinesis_stream` (connector-gated; `startingPosition=LATEST` default); pacing = `maxFilesPerTrigger` / trigger intervals; **plus a full Python DataSource** `sources/pydatasource.py` (`status_jsonl`): batch line-range partitions + `SimpleDataSourceStreamReader` with `maxRecordsPerBatch=5` pacing and checkpointed exactly-once restart (the reference's LATEST iterator drops history on restart, `svckinesis.js:215-219`) | `tests/test_sources.py::test_python_datasource_batch_read` / `::test_python_datasource_paced_stream`; end-to-end into the correlate operator: `tests/test_streaming_correlate.py::test_pydatasource_feeds_correlation_end_to_end` |
+| S4-S6 | Kinesis consumer (shards, LATEST iterator, paced getRecords) | `sources/stream.py:kinesis_stream` (connector-gated; `startingPosition=LATEST` default) over the `aws-kinesis` emulator `sources/kinesis_stub.py`: one `SimpleDataSourceStreamReader` with a checkpointed per-shard cursor map (exactly-once restart; the reference's LATEST iterator drops history on restart, `svckinesis.js:215-219`), shard discovery every micro-batch, parents-first reads across split/merge, and the optional `kinesis.maxRecordsPerShard` cap as the getRecords `limit=5` pacing (`svckinesis.js:193`) | `tests/test_sources.py::test_kinesis_stub_capped_reads_pace_the_stream` / `::test_kinesis_stub_capped_reads_keep_key_order_across_split` / `::test_kinesis_stub_reshard_split_merge_restart`; end-to-end into the correlate operator: `tests/test_streaming_correlate.py::test_kinesis_stream_feeds_correlation_end_to_end` |
 | S7 | HTTP POST ingress | REAL socket: `http_service.EngineHttpService` (`POST /p1`, stdlib `http.server`) feeding `Engine.submit`; plus library-verb and stream ingress forms | `tests/test_http_service.py` |
 | S8 | HTTP response egress | REAL socket: terminal 200/400/500 routing over HTTP (`pollingsvc.js:126-141` semantics), plus the correlate operator's (`outcome`, `http_code`) rows | `tests/test_http_service.py`, `tests/test_streaming_correlate.py` |
 | S9/S10 | Step Functions start / status read | pipeline launch = rows entering `IncrementalPipeline`; status view = `process_state.status` | `tests/test_streaming_windows.py` |

@@ -108,40 +108,19 @@ def main() -> int:
 
     from sfs3_kinesis_spark.plans import REGISTRY
     from sfs3_kinesis_spark.session import get_spark
-    from tests.oracle import duck_connection
 
     spark = get_spark("null-sweep")
     write_nulled_fixture(spark, src, out)
 
     names = sorted(REGISTRY)
     divergent: set[str] = set()
-    if threads == 1:
-        con = duck_connection(out)
-        results = (check_oracle.run_one(spark, out, n, con) for n in names)
-    else:
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
-
-        tls = threading.local()
-
-        def worker(name: str):
-            con = getattr(tls, "con", None)
-            if con is None:
-                con = tls.con = duck_connection(out)
-            return check_oracle.run_one(spark, out, name, con)
-
-        pool = ThreadPoolExecutor(max_workers=threads)
-        results = pool.map(worker, names)
-
-    for name, ok, detail, _timings in results:
+    for name, ok, detail, _timings in check_oracle.run_all(spark, out, names, threads):
         if ok is None:
             continue  # rows-only entry — no cross-engine comparison
         if not ok:
             divergent.add(name)
             mark = "pinned" if name in ALLOWED_DIVERGENT else "NEW"
             print(f"  DIVERGE [{mark}] {name}: {detail[:120]}")
-    if threads > 1:
-        pool.shutdown()
 
     new = sorted(divergent - ALLOWED_DIVERGENT)
     vanished = sorted(ALLOWED_DIVERGENT - divergent)

@@ -93,19 +93,6 @@ def shingles(docs: DataFrame, n: int = 3, out_col: str = "shingles") -> DataFram
     return docs.withColumn(out_col, F.expr(expr))
 
 
-def minhash_signature(docs_with_shingles: DataFrame, num_hashes: int = 32, out_col: str = "signature") -> DataFrame:
-    """MinHash signature: for seed h, min over shingles of
-    xxhash64(shingle, h).  One array column, computed in a single
-    codegen'd projection."""
-    mins = F.array(
-        *[
-            F.expr(f"array_min(transform(shingles, s -> xxhash64(s, {h})))")
-            for h in range(num_hashes)
-        ]
-    )
-    return docs_with_shingles.withColumn(out_col, mins)
-
-
 def banded_keys(
     docs_with_shingles: DataFrame, *, num_hashes: int = 32, bands: int = 8
 ) -> DataFrame:

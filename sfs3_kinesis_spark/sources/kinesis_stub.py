@@ -27,7 +27,14 @@ What it emulates (reference behavior: the hand-rolled consumer at
 * **iterator semantics** — TRIM_HORIZON/EARLIEST replays from seq 0,
   LATEST starts past existing records; restart resumes from the
   checkpointed per-shard cursor map (strictly better than the
-  reference's LATEST-drops-history restart).
+  reference's LATEST-drops-history restart);
+* **paced reads** — the optional reader option
+  ``kinesis.maxRecordsPerShard`` caps each shard at that many records
+  per micro-batch: the emulator's stand-in for the reference's
+  ``getRecords`` limit of 5 (``svckinesis.js:193``).  Unset, a
+  micro-batch reads every shard to its end.  It is not part of
+  ``kinesis_reader_options``, the wrappers' map for the real
+  connector.
 
 Backing store: ``<root>/<streamName>/shard-N.jsonl`` (direct seeds /
 batch writes) plus ``shard-N.b<epoch>.jsonl`` per committed sink
@@ -64,6 +71,7 @@ _STREAM_NAME_RE = re.compile(r"^[a-zA-Z0-9_.-]{1,128}$")
 _REGION_RE = re.compile(r"^[a-z]{2}(-[a-z]+)+-\d+$")
 _POSITIONS = {"LATEST", "TRIM_HORIZON", "EARLIEST"}
 _CONSUMER_TYPES = {"GetRecords", "SubscribeToShard"}
+MAX_RECORDS_OPTION = "kinesis.maxRecordsPerShard"
 
 
 def stub_root(options=None) -> str:
@@ -94,7 +102,7 @@ def _validate_common(options) -> tuple[str, str]:
     return name, region
 
 
-def _validate_reader(options) -> str:
+def _validate_reader(options) -> tuple[str, int | None]:
     name, _ = _validate_common(options)
     pos = options.get("kinesis.startingPosition", "LATEST")
     if pos not in _POSITIONS:
@@ -106,7 +114,12 @@ def _validate_reader(options) -> str:
         raise ValueError(
             f"kinesis.consumerType {ctype!r} not in {sorted(_CONSUMER_TYPES)}"
         )
-    return name
+    cap = options.get(MAX_RECORDS_OPTION)
+    if cap is None:
+        return name, None
+    if not (cap.isascii() and cap.isdigit() and int(cap) > 0):
+        raise ValueError(f"{MAX_RECORDS_OPTION} {cap!r} is not a positive integer")
+    return name, int(cap)
 
 
 def _stream_dir(root: str, stream_name: str) -> str:
@@ -128,7 +141,8 @@ def _stream_dir(root: str, stream_name: str) -> str:
 # always partition the key space exactly, and a child's key set is the
 # union of its parents'.  Parents are CLOSED at reshard time (their
 # files stop growing but stay readable for TRIM_HORIZON replay), and
-# readers drain shards in GENERATION order so a key's parent-shard tail
+# readers drain shards in GENERATION order and hold a child's cursor
+# until every parent is read to its end, so a key's parent-shard tail
 # is always emitted before its child-shard records — Kinesis's
 # read-parents-first ordering rule.
 
@@ -287,12 +301,13 @@ def _shard_lines(root: str, stream_name: str, shard) -> list[str]:
 
 
 class _StubStreamReader(SimpleDataSourceStreamReader):
-    """Per-shard cursor map, checkpointed as the offset — the same
-    posture as ``pydatasource._PacedStreamReader`` but over the
-    emulator's shard files and the connector's read schema."""
+    """Per-shard cursor map, checkpointed as the offset.  Each
+    micro-batch reads every shard from its cursor, at most
+    ``kinesis.maxRecordsPerShard`` records per shard when that option
+    is set."""
 
     def __init__(self, options):
-        self.stream = _validate_reader(options)
+        self.stream, self.limit = _validate_reader(options)
         self.root = stub_root(options)
         pos = options.get("kinesis.startingPosition", "LATEST")
         shards = {}
@@ -307,8 +322,7 @@ class _StubStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self):
         return self._initial
 
-    def _rows(self, shard: str, lo: int, hi: int):
-        lines = _shard_lines(self.root, self.stream, shard)
+    def _rows(self, shard: str, lines: list[str], lo: int, hi: int):
         for seq in range(lo, min(hi, len(lines))):
             rec = json.loads(lines[seq])
             yield (
@@ -323,16 +337,24 @@ class _StubStreamReader(SimpleDataSourceStreamReader):
         # re-describe the stream EVERY micro-batch: shards created by
         # a mid-stream split/merge appear here with cursor 0 (dynamic
         # shard discovery — the thing the reference TODOs away,
-        # svckinesis.js:187).  Generation order drains a parent's tail
-        # before its children's records, preserving per-key order
-        # across the reshard.
+        # svckinesis.js:187).  Parents first: generation order puts a
+        # parent before its children, and a child's cursor stays put
+        # until every parent's cursor has reached that parent's end,
+        # so a key's parent-shard tail is emitted before its
+        # child-shard records even when the per-shard cap leaves a
+        # parent's backlog for later batches.
         cursors = dict(start.get("shards", {}))
+        ends: dict[str, int] = {}
         rows = []
         for s in describe_stream(self.root, self.stream):
             sid = s["id"]
+            lines = _shard_lines(self.root, self.stream, sid)
+            ends[sid] = len(lines)
             lo = int(cursors.get(sid, 0))
-            hi = len(_shard_lines(self.root, self.stream, sid))
-            rows.extend(self._rows(sid, lo, hi))
+            hi = lo
+            if all(int(cursors.get(p, 0)) >= ends[p] for p in s["parents"]):
+                hi = len(lines) if self.limit is None else min(len(lines), lo + self.limit)
+                rows.extend(self._rows(sid, lines, lo, hi))
             cursors[sid] = hi
         return (iter(rows), {"shards": cursors})
 
@@ -352,7 +374,8 @@ class _StubStreamReader(SimpleDataSourceStreamReader):
         ):
             lo = int(start.get("shards", {}).get(sid, 0))
             hi = int(end.get("shards", {}).get(sid, 0))
-            rows.extend(self._rows(sid, lo, hi))
+            lines = _shard_lines(self.root, self.stream, sid)
+            rows.extend(self._rows(sid, lines, lo, hi))
         return iter(rows)
 
 

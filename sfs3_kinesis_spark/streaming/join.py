@@ -22,6 +22,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _time_bound_join(
+    requests: DataFrame,
+    events: DataFrame,
+    how: str,
+    within: str,
+    request_watermark: str,
+    event_watermark: str,
+) -> DataFrame:
+    """The join both forms share: requests ``(r_txn_id, submitted_at)``
+    against events ``(e_txn_id, status, event_time)`` on txn id, with
+    the event inside ``[submitted_at, submitted_at + within]``.  A
+    streaming side gets its watermark, which is what lets Spark expire
+    the join state."""
+    r = requests.select(F.col("txn_id").alias("r_txn_id"), F.col("submitted_at"))
+    e = events.select(
+        F.col("txn_id").alias("e_txn_id"), F.col("status"), F.col("event_time")
+    )
+    if r.isStreaming:
+        r = r.withWatermark("submitted_at", request_watermark)
+    if e.isStreaming:
+        e = e.withWatermark("event_time", event_watermark)
+    cond = (
+        (F.col("r_txn_id") == F.col("e_txn_id"))
+        & (F.col("event_time") >= F.col("submitted_at"))
+        & (F.col("event_time") <= F.col("submitted_at") + F.expr(f"INTERVAL {within}"))
+    )
+    return r.join(e, cond, how)
+
+
 def correlate_join(
     requests: DataFrame,
     events: DataFrame,
@@ -39,22 +68,9 @@ def correlate_join(
     with the reference's HTTP routing applied (SUCCEEDED → 200,
     else 400; pollingsvc.js:77-93).
     """
-    r = requests.select(
-        F.col("txn_id").alias("r_txn_id"), F.col("submitted_at")
+    joined = _time_bound_join(
+        requests, events, "inner", within, request_watermark, event_watermark
     )
-    e = events.select(
-        F.col("txn_id").alias("e_txn_id"), F.col("status"), F.col("event_time")
-    )
-    if r.isStreaming:
-        r = r.withWatermark("submitted_at", request_watermark)
-    if e.isStreaming:
-        e = e.withWatermark("event_time", event_watermark)
-    cond = (
-        (F.col("r_txn_id") == F.col("e_txn_id"))
-        & (F.col("event_time") >= F.col("submitted_at"))
-        & (F.col("event_time") <= F.col("submitted_at") + F.expr(f"INTERVAL {within}"))
-    )
-    joined = r.join(e, cond, "inner")
     return joined.select(
         F.col("r_txn_id").alias("txn_id"),
         "status",
@@ -81,18 +97,9 @@ def correlate_join_outer(
     declaratively: Spark's join-state expiry IS the timeout timer, so
     there is no user-managed state at any scale.
     """
-    r = requests.select(F.col("txn_id").alias("r_txn_id"), F.col("submitted_at"))
-    e = events.select(F.col("txn_id").alias("e_txn_id"), F.col("status"), F.col("event_time"))
-    if r.isStreaming:
-        r = r.withWatermark("submitted_at", request_watermark)
-    if e.isStreaming:
-        e = e.withWatermark("event_time", event_watermark)
-    cond = (
-        (F.col("r_txn_id") == F.col("e_txn_id"))
-        & (F.col("event_time") >= F.col("submitted_at"))
-        & (F.col("event_time") <= F.col("submitted_at") + F.expr(f"INTERVAL {within}"))
+    joined = _time_bound_join(
+        requests, events, "left_outer", within, request_watermark, event_watermark
     )
-    joined = r.join(e, cond, "left_outer")
     return joined.select(
         F.col("r_txn_id").alias("txn_id"),
         "status",

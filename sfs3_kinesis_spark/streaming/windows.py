@@ -41,17 +41,6 @@ def avg_duration(
     )
 
 
-def sliding_counts(
-    events: DataFrame, length: str = "2 hours", slide: str = "1 hour", time_col: str = "ts"
-) -> DataFrame:
-    src = events.withWatermark(time_col, "1 hour") if events.isStreaming else events
-    return (
-        src.groupBy(F.window(time_col, length, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "n")
-    )
-
-
 def session_counts(events: DataFrame, gap: str = "6 hours", time_col: str = "ts", key: str = "user_id") -> DataFrame:
     """Session windows (gap-close) — streaming twin of the batch
     ``events_sessionization`` query."""

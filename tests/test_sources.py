@@ -95,143 +95,6 @@ def test_binaryfile_source_feeds_multimodal_ops(spark, tmp_path):
     assert df.rdd.getNumPartitions() >= 1
 
 
-def test_python_datasource_batch_read(spark, tmp_path):
-    """status_jsonl batch read: line-range partitions, schema, values
-    (the declarative form of the reference's shard consumer)."""
-    import json
-
-    from sfs3_kinesis_spark.sources import pydatasource
-
-    path = str(tmp_path / "events.jsonl")
-    with open(path, "w") as fh:
-        for i in range(23):
-            fh.write(json.dumps({"txnId": f"0x{i:04x}", "status": "SUCCEEDED" if i % 3 else "FAILED"}) + "\n")
-
-    pydatasource.register(spark)
-    df = spark.read.format("status_jsonl").option("path", path).option("numPartitions", "4").load()
-    assert df.columns == ["seq", "txn_id", "status", "shard"]
-    rows = {r.seq: (r.txn_id, r.status) for r in df.collect()}
-    assert len(rows) == 23
-    assert rows[0] == ("0x0000", "FAILED")
-    assert rows[4] == ("0x0004", "SUCCEEDED")
-    assert {r.shard for r in df.collect()} == {"events.jsonl"}
-    assert df.rdd.getNumPartitions() == 4
-
-
-def test_python_datasource_paced_stream(spark, tmp_path):
-    """status_jsonl streaming read: at most maxRecordsPerBatch records
-    per micro-batch (the reference's getRecords limit=5 pacing), all
-    records delivered exactly once."""
-    import json
-    import time
-
-    from sfs3_kinesis_spark.sources import pydatasource
-
-    path = str(tmp_path / "stream.jsonl")
-    with open(path, "w") as fh:
-        for i in range(17):
-            fh.write(json.dumps({"txnId": f"0x{i:04x}", "status": "SUCCEEDED"}) + "\n")
-
-    pydatasource.register(spark)
-    stream = (
-        spark.readStream.format("status_jsonl")
-        .option("path", path)
-        .option("maxRecordsPerBatch", "5")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("paced_events")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.table("paced_events").count() >= 17:
-                break
-            time.sleep(0.5)
-        got = spark.table("paced_events").collect()
-        assert len(got) == 17  # exactly once, no dupes
-        assert {r.seq for r in got} == set(range(17))
-        # pacing: 17 records at <=5/batch/shard needs >= 4 micro-batches
-        progress = q.recentProgress
-        nonempty = [p for p in progress if p["numInputRows"] > 0]
-        assert len(nonempty) >= 4
-        assert max(p["numInputRows"] for p in nonempty) <= 5
-    finally:
-        q.stop()
-
-
-def test_python_datasource_multi_shard_stream(spark, tmp_path):
-    """Multi-shard streaming (r02 verdict next-round #8): a directory
-    of JSONL files is consumed with ONE OFFSET PER FILE — per-shard
-    order preserved (monotone seq within a shard), per-shard pacing
-    (<= limit records per shard per batch), exactly-once across all
-    shards, and a shard appearing MID-STREAM is discovered and
-    consumed from 0 (the resharding case the reference punts on,
-    svckinesis.js:187)."""
-    import json
-    import time
-
-    from sfs3_kinesis_spark.sources import pydatasource
-
-    shard_dir = tmp_path / "shards"
-    shard_dir.mkdir()
-
-    def write_shard(name, txns):
-        with open(shard_dir / name, "w") as fh:
-            for txn in txns:
-                fh.write(json.dumps({"txnId": txn, "status": "SUCCEEDED"}) + "\n")
-
-    write_shard("shard-0.jsonl", [f"a{i}" for i in range(8)])
-    write_shard("shard-1.jsonl", [f"b{i}" for i in range(6)])
-
-    pydatasource.register(spark)
-    stream = (
-        spark.readStream.format("status_jsonl")
-        .option("path", str(shard_dir))
-        .option("maxRecordsPerBatch", "3")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("multi_shard")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline and spark.table("multi_shard").count() < 14:
-            time.sleep(0.3)
-        got = spark.table("multi_shard").collect()
-        assert len(got) == 14  # exactly once across both shards
-        by_shard = {}
-        for r in got:
-            by_shard.setdefault(r.shard, []).append(r.seq)
-        assert sorted(by_shard) == ["shard-0.jsonl", "shard-1.jsonl"]
-        assert sorted(by_shard["shard-0.jsonl"]) == list(range(8))
-        assert sorted(by_shard["shard-1.jsonl"]) == list(range(6))
-        # per-shard pacing: no batch carries > 3 rows of one shard —
-        # total per batch is bounded by 3 * n_shards, and shard-1
-        # (6 rows at <=3/batch) needs >= 2 non-empty batches
-        nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        assert max(p["numInputRows"] for p in nonempty) <= 3 * 2
-        assert len(nonempty) >= 3  # shard-0: 8 rows at <=3/batch
-
-        # a NEW shard appears mid-stream: discovered, consumed from 0
-        write_shard("shard-2.jsonl", [f"c{i}" for i in range(4)])
-        deadline = time.time() + 60
-        while time.time() < deadline and spark.table("multi_shard").count() < 18:
-            time.sleep(0.3)
-        late = [r for r in spark.table("multi_shard").collect() if r.shard == "shard-2.jsonl"]
-        assert sorted(r.seq for r in late) == list(range(4))
-    finally:
-        q.stop()
-
-
 def test_chunk_udtf_matches_builtin_generator(spark):
     """UDTF chunker == the Catalyst generator chunker (same rows), and
     it is SQL-invocable as a lateral table function."""
@@ -307,87 +170,6 @@ def test_kinesis_wrapper_option_contract(spark):
     # source wrapper: loud, actionable failure without the connector
     with pytest.raises(RuntimeError, match="connector not available"):
         kinesis_stream(spark, "status-events")
-
-
-def test_python_datasource_multi_shard_checkpoint_restart(spark, tmp_path):
-    """Restart durability for the per-shard offset map: stop the
-    query mid-stream, append to one shard AND add a brand-new shard,
-    restart from the SAME checkpoint — no duplicates, no losses, the
-    new shard consumed from 0 (exactly the restart the reference's
-    LATEST iterator cannot do, svckinesis.js:215-219)."""
-    import json
-    import time
-
-    from sfs3_kinesis_spark.sources import pydatasource
-
-    shard_dir = tmp_path / "shards"
-    shard_dir.mkdir()
-
-    def append(name, txns):
-        with open(shard_dir / name, "a") as fh:
-            for txn in txns:
-                fh.write(json.dumps({"txnId": txn, "status": "SUCCEEDED"}) + "\n")
-
-    append("s0.jsonl", [f"a{i}" for i in range(6)])
-    append("s1.jsonl", [f"b{i}" for i in range(4)])
-
-    pydatasource.register(spark)
-
-    out_dir = str(tmp_path / "out")
-
-    # memory sinks cannot recover from a checkpoint — the restart
-    # contract needs a durable sink (parquet), like production would
-    def start():
-        return (
-            spark.readStream.format("status_jsonl")
-            .option("path", str(shard_dir))
-            .option("maxRecordsPerBatch", "4")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(processingTime="200 milliseconds")
-            .start()
-        )
-
-    def table():
-        try:
-            return spark.read.parquet(out_dir)
-        except Exception:
-            return None
-
-    def drain(n):
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            t = table()
-            if t is not None and t.count() >= n:
-                return t.count()
-            time.sleep(0.3)
-        t = table()
-        return t.count() if t is not None else 0
-
-    q = start()
-    try:
-        assert drain(10) == 10
-    finally:
-        q.stop()
-
-    # while the consumer is DOWN: one shard grows, one appears
-    append("s0.jsonl", [f"a{i}" for i in range(6, 9)])
-    append("s2.jsonl", [f"c{i}" for i in range(2)])
-
-    q2 = start()
-    try:
-        assert drain(15) == 15  # 10 + 3 + 2, exactly once
-        got = table().collect()
-        per = {}
-        for r in got:
-            per.setdefault(r.shard, set()).add(r.seq)
-        assert per["s0.jsonl"] == set(range(9))
-        assert per["s1.jsonl"] == set(range(4))
-        assert per["s2.jsonl"] == set(range(2))
-    finally:
-        q2.stop()
 
 
 def test_kinesis_wrappers_end_to_end_against_stub(spark, tmp_path):
@@ -857,3 +639,162 @@ def test_kinesis_wrappers_four_shards_and_reshard_end_to_end(spark, tmp_path):
     for pk, data in got:
         per_key.setdefault(pk, []).append(data["status"])
     assert all(sorted(v) == ["b1", "b2", "b3"] for v in per_key.values()), per_key
+
+
+def _capped_kinesis_stream(spark, stream_name: str, root: str, cap):
+    """The reader ``kinesis_stream(spark, stream_name,
+    starting_position="TRIM_HORIZON", endpoint_url=root)`` opens, plus
+    the emulator's per-shard cap.  The cap is set here because the
+    wrapper passes exactly ``kinesis_reader_options``, the real
+    connector's option map, which does not carry it."""
+    from sfs3_kinesis_spark.sources.kinesis_stub import MAX_RECORDS_OPTION
+    from sfs3_kinesis_spark.sources.stream import (
+        KINESIS_SOURCE_FORMAT,
+        kinesis_reader_options,
+    )
+
+    return (
+        spark.readStream.format(KINESIS_SOURCE_FORMAT)
+        .options(
+            **kinesis_reader_options(
+                stream_name, starting_position="TRIM_HORIZON", endpoint_url=root
+            )
+        )
+        .option(MAX_RECORDS_OPTION, str(cap))
+        .load()
+    )
+
+
+def _stub_publisher(root: str, stream_name: str):
+    """``publish(rows, batch_id)``: one committed sink epoch of
+    ``(txn_id, status)`` records, routed by the stub writer's commit
+    exactly as ``kinesis_sink`` routes them."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from sfs3_kinesis_spark.sources.kinesis_stub import _RowsMessage, _StubStreamWriter
+
+    writer = _StubStreamWriter(
+        {
+            "kinesis.streamName": stream_name,
+            "kinesis.region": "us-east-1",
+            "kinesis.endpointUrl": root,
+        },
+        StructType.fromDDL("partitionKey STRING, data STRING"),
+    )
+
+    def publish(rows, batch_id):
+        msg = _RowsMessage(
+            [(txn, json.dumps({"txnId": txn, "status": st})) for txn, st in rows]
+        )
+        writer.commit([msg], batchId=batch_id)
+
+    return publish
+
+
+def test_kinesis_stub_capped_reads_pace_the_stream(spark, tmp_path):
+    """The per-shard cap is the reference's getRecords limit=5
+    (svckinesis.js:193): a 17-record shard read at <= 5 records per
+    micro-batch takes >= 4 non-empty batches, and every record
+    arrives exactly once.  A cap that is not a positive integer fails
+    the query at start, like the stub's other option values."""
+    import json
+
+    import pytest
+
+    from sfs3_kinesis_spark.sources import kinesis_stub
+    from sfs3_kinesis_spark.sources.kinesis_stub import create_stream
+
+    root = str(tmp_path / "kin")
+    kinesis_stub.register(spark)
+    create_stream(root, "paced", shard_count=1)
+    txns = [f"0x{i:04x}" for i in range(17)]
+    _stub_publisher(root, "paced")([(t, "SUCCEEDED") for t in txns], 0)
+
+    q = (
+        _capped_kinesis_stream(spark, "paced", root, 5)
+        .writeStream.format("memory")
+        .queryName("kin_paced")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        got = spark.table("kin_paced").collect()
+        nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert len(got) == 17  # exactly once, no dupes
+    assert sorted(json.loads(r.data)["txnId"] for r in got) == txns
+    assert {r.sequenceNumber for r in got} == {f"0-{i}" for i in range(17)}
+    assert max(p["numInputRows"] for p in nonempty) <= 5
+    assert len(nonempty) >= 4
+
+    for i, bad in enumerate(("0", "2.5")):
+        q = (
+            _capped_kinesis_stream(spark, "paced", root, bad)
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / f"ckpt_bad{i}"))
+            .start()
+        )
+        try:
+            with pytest.raises(Exception, match="not a positive integer"):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+
+
+def test_kinesis_stub_capped_reads_keep_key_order_across_split(spark, tmp_path):
+    """Parents first under the cap: the shard is split while the
+    capped reader still has a backlog on it, and the children receive
+    new records for the same keys at once.  Each key's records must
+    still arrive in publish order — the parent's tail before any
+    child-shard record — with no shard above the cap in any batch."""
+    import json
+    from collections import Counter
+
+    from sfs3_kinesis_spark.sources import kinesis_stub
+    from sfs3_kinesis_spark.sources.kinesis_stub import create_stream, split_shard
+
+    root = str(tmp_path / "kin")
+    kinesis_stub.register(spark)
+    create_stream(root, "split-cap", shard_count=1)
+    publish = _stub_publisher(root, "split-cap")
+    keys = [f"k-{i}" for i in range(6)]
+    publish([(k, "p1") for k in keys], 0)
+    publish([(k, "p2") for k in keys], 1)  # 12-record backlog on shard 0
+
+    seen = []  # (batch_id, shard, key, status) in arrival order
+    children = []
+
+    def collect(df, batch_id):
+        rows = df.collect()
+        seen.extend(
+            (batch_id, r.sequenceNumber.split("-")[0], r.partitionKey,
+             json.loads(r.data)["status"])
+            for r in rows
+        )
+        if rows and not children:
+            # shard 0 still holds 10 unread records: split it now
+            children.extend(split_shard(root, "split-cap", "0"))
+            publish([(k, "c1") for k in keys], 2)
+
+    q = (
+        _capped_kinesis_stream(spark, "split-cap", root, 2)
+        .writeStream.foreachBatch(collect)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    assert len(seen) == 18  # 12 parent + 6 child records, exactly once
+    assert {sh for _, sh, _, _ in seen} == {"0", *children}
+    assert max(Counter((b, sh) for b, sh, _, _ in seen).values()) <= 2
+    per_key = {}
+    for _, _, k, st in seen:
+        per_key.setdefault(k, []).append(st)
+    assert per_key == {k: ["p1", "p2", "c1"] for k in keys}, per_key

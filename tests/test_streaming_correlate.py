@@ -252,62 +252,65 @@ def test_correlation_checkpoint_restart(spark, tmp_path):
     assert matched[0]["latency_ms"] == 5000
 
 
-def test_pydatasource_feeds_correlation_end_to_end(spark, tmp_path):
-    """Full path: custom Python DataSource (status_jsonl, paced) →
-    correlation state machine → memory sink.  The engine twin of the
-    reference's Kinesis-consumer→pending-map→HTTP-response chain
-    (svckinesis.js:173-212), with a declarative connector instead of
-    a hand-rolled iterator loop."""
+def test_kinesis_stream_feeds_correlation_end_to_end(spark, tmp_path):
+    """Full production path: ``kinesis_sink`` publishes status events
+    to the Kinesis emulator's two shards, ``kinesis_stream`` reads
+    them back, ``parse_status_events`` decodes the records, and the
+    correlation state machine matches them to pending requests.  The
+    engine twin of the reference's Kinesis-consumer→pending-map→HTTP-
+    response chain (svckinesis.js:173-212)."""
     import datetime as dt
-    import json
 
-    from sfs3_kinesis_spark.sources import pydatasource
-    from sfs3_kinesis_spark.sources.stream import stream_from_batch
+    from sfs3_kinesis_spark.sources import kinesis_stub
+    from sfs3_kinesis_spark.sources.sinks import kinesis_sink
+    from sfs3_kinesis_spark.sources.stream import kinesis_stream, parse_status_events
 
+    root = str(tmp_path / "kin")
+    kinesis_stub.register(spark)
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     txns = [f"0x{i:04x}" for i in range(12)]
 
-    # two shards (txn hash-split across them, like Kinesis partition
-    # keys) — the correlator must match across BOTH shard cursors
-    shard_dir = tmp_path / "status_shards"
-    shard_dir.mkdir()
-    shards: dict[str, list[tuple[int, str]]] = {"s0.jsonl": [], "s1.jsonl": []}
-    for i, txn in enumerate(txns):
-        shards[f"s{i % 2}.jsonl"].append((i, txn))
-    for name, members in shards.items():
-        with open(shard_dir / name, "w") as fh:
-            for i, txn in members:
-                fh.write(
-                    json.dumps(
-                        {"txnId": txn, "status": "SUCCEEDED" if i % 4 else "FAILED"}
-                    )
-                    + "\n"
-                )
-
-    pydatasource.register(spark)
-    event_stream = (
-        spark.readStream.format("status_jsonl")
-        .option("path", str(shard_dir))
-        .option("maxRecordsPerBatch", "5")
-        .load()
-        .select(
-            "txn_id",
-            "status",
-            (F.lit(t0) + F.make_interval(secs=F.col("seq"))).alias("event_time"),
+    # txn ids are the partition keys, so the events spread over both
+    # shards — the correlator must match across both shard cursors
+    in_dir = tmp_path / "events_in"
+    spark.createDataFrame(
+        [(txn, "SUCCEEDED" if i % 4 else "FAILED") for i, txn in enumerate(txns)],
+        "txn_id string, status string",
+    ).coalesce(1).write.parquet(str(in_dir))
+    qw = (
+        kinesis_sink(
+            spark.readStream.schema("txn_id string, status string").parquet(str(in_dir)),
+            "status-events",
+            endpoint_url=root,
         )
+        .option("checkpointLocation", str(tmp_path / "ckpt_w"))
+        .start()
     )
+    try:
+        qw.processAllAvailable()
+    finally:
+        qw.stop()
+    assert all(kinesis_stub._shard_lines(root, "status-events", s) for s in ("0", "1"))
+
+    event_stream = parse_status_events(
+        kinesis_stream(
+            spark, "status-events", starting_position="TRIM_HORIZON", endpoint_url=root
+        ),
+        value_col="data",
+    ).select("txn_id", "status", "event_time")
+    # requests were submitted at t0, before every event's arrival time
     requests = _requests_df(spark, [(txn, t0, 3_600_000) for txn in txns])
     out = correlate(stream_from_batch(requests, tmp_path / "req"), event_stream)
-    q = run_stateful_to_memory(out, "pyds_correlated", trigger_ms=200)
+    q = run_stateful_to_memory(out, "kin_correlated", trigger_ms=200)
     try:
         n = wait_for_rows(
             spark,
-            "SELECT count(*) FROM pyds_correlated WHERE outcome = 'matched'",
+            "SELECT count(*) FROM kin_correlated WHERE outcome = 'matched'",
             12,
             timeout_s=90,
         )
         assert n >= 12
-        rows = spark.table("pyds_correlated").collect()
+        rows = spark.table("kin_correlated").collect()
         by_txn = {r.txn_id: r for r in rows if r.outcome == "matched"}
         assert len(by_txn) == 12
         assert by_txn["0x0000"].http_code == 400  # FAILED -> 400
