@@ -27,11 +27,15 @@ verbs over the streaming pipeline:
 
 Driver-side work is strictly O(1) per verb — a one-row file publish
 or a keyed point read of at most one snapshot and its delta tail; all
-transformation happens in the streaming query, whose micro-batch is
-the only Spark job a request causes.  At scale the ingest dir becomes
-an object-store prefix (or a Kafka/Kinesis topic via
-``sources.stream``), and the state store a keyed table — the facade
-does not change.
+transformation happens in the streaming query.  Each micro-batch runs
+one Spark job, the staged projection, whose rows
+(:data:`~sfs3_kinesis_spark.streaming.incremental.MAX_BATCH_ROWS` at
+most) the driver pulls as Arrow.  The driver then writes the event
+partition and the state delta with pyarrow; only the state store's
+compaction, every ``compact_every`` batches, is a Spark write.  At
+scale the ingest dir becomes an object-store prefix (or a
+Kafka/Kinesis topic via ``sources.stream``), and the state store a
+keyed table — the facade does not change.
 """
 
 from __future__ import annotations
@@ -46,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sfs3_kinesis_spark.operators.pipeline import Step
 from sfs3_kinesis_spark.sources.sinks import KeyedUpsertSink
-from sfs3_kinesis_spark.streaming.incremental import IncrementalPipeline
+from sfs3_kinesis_spark.streaming import incremental
 
 REQUEST_SCHEMA = "txn_id string, request string"
 
@@ -71,7 +75,7 @@ class Engine:
         self.events_dir = os.path.join(root_dir, "events")
         os.makedirs(self.requests_dir, exist_ok=True)
         self._sink = KeyedUpsertSink(spark, os.path.join(root_dir, "state"))
-        self._pipeline = IncrementalPipeline(
+        self._pipeline = incremental.IncrementalPipeline(
             self._sink, steps=steps, on_events=self._append_events
         )
         self._query = None
@@ -86,7 +90,8 @@ class Engine:
         The row lands as its own parquet file.  Spark's file index
         skips ``.``-prefixed names, so the stream never sees the file
         half-written; the rename publishes it whole.  Each submit owns
-        its file, so concurrent submits share no staging state."""
+        its file, so concurrent submits share no staging state, and
+        the stream's ``maxFilesPerTrigger`` bounds its batch rows."""
         txn_id = f"0x{uuid.uuid4().hex[:16]}"  # flake-id-shaped hex key
         name = f"part-{txn_id}.parquet"
         hidden = os.path.join(self.requests_dir, "." + name)
@@ -124,7 +129,8 @@ class Engine:
         appending a duplicate copy."""
         has_parquet = False
         for _root, _dirs, files in os.walk(self.events_dir):
-            if any(f.endswith(".parquet") for f in files):
+            # a hidden file is a write still in flight (see _append_events)
+            if any(f.endswith(".parquet") and not f.startswith(".") for f in files):
                 has_parquet = True
                 break
         if not has_parquet:
@@ -154,8 +160,13 @@ class Engine:
     # -- lifecycle ----------------------------------------------------- #
 
     def start(self):
-        """Start the streaming pipeline over the ingest directory."""
-        stream = self.spark.readStream.schema(REQUEST_SCHEMA).parquet(self.requests_dir)
+        """Start the streaming pipeline over the ingest directory, at
+        most ``MAX_BATCH_ROWS`` one-row request files per batch."""
+        stream = (
+            self.spark.readStream.schema(REQUEST_SCHEMA)
+            .option("maxFilesPerTrigger", incremental.MAX_BATCH_ROWS)
+            .parquet(self.requests_dir)
+        )
         self._query = self._pipeline.start(
             stream, os.path.join(self.root, "checkpoint")
         )
@@ -168,12 +179,13 @@ class Engine:
 
     # -- internal ------------------------------------------------------ #
 
-    def _append_events(self, batch_df: DataFrame, epoch_id: int) -> None:
-        # epoch-keyed overwrite = idempotent under foreachBatch's
+    def _append_events(self, events: pa.Table, epoch_id: int) -> None:
+        # epoch-keyed replace = idempotent under foreachBatch's
         # at-least-once redelivery (the docstring's exactly-once
-        # claim; same discipline as streaming/neardup._write_epoch)
-        (
-            batch_df.select("txn_id", "status", "event_id", "event_time")
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.events_dir, f"epoch={int(epoch_id)}"))
-        )
+        # claim): the file is written hidden, which readers skip, and
+        # renamed over the epoch's previous output in one step
+        d = os.path.join(self.events_dir, f"epoch={int(epoch_id)}")
+        os.makedirs(d, exist_ok=True)
+        hidden = os.path.join(d, ".part-0.parquet")
+        pq.write_table(events, hidden)
+        os.replace(hidden, os.path.join(d, "part-0.parquet"))

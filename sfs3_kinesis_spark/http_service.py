@@ -15,7 +15,9 @@ verb (``Engine.submit``); this module closes that gap with
   200/400/500 exactly like the reference (body carries txn_id +
   status JSON either way).  The submit publishes one request file
   atomically and runs no Spark job; the held request wakes on each
-  state-store commit, not on a timer;
+  state-store commit, not on a timer.  A body over
+  ``MAX_BODY_BYTES`` answers 413, a negative or malformed
+  ``Content-Length`` 400, before anything is read;
 * ``POST /p1?mode=async``  — submit and answer 202 immediately with
   the txn id (the affordance the reference lacks: its client holds
   the socket for the whole pipeline);
@@ -45,6 +47,11 @@ from sfs3_kinesis_spark.engine import Engine
 
 #: reference request budget (pollingsvc.js:133 — timeout(20*1000))
 REQUEST_BUDGET_S = 20.0
+
+#: largest ``POST /p1`` body read.  A body becomes one request row,
+#: so it also bounds the Engine's driver-side micro-batch pull at
+#: ``MAX_BATCH_ROWS`` (256) x 1 MiB = 256 MiB of request payload.
+MAX_BODY_BYTES = 1 << 20
 
 
 class EngineHttpService:
@@ -116,6 +123,13 @@ class EngineHttpService:
                     n = int(self.headers.get("Content-Length", 0))
                 except ValueError:
                     self._reply(400, {"error": "bad Content-Length"})
+                    return
+                # checked before any read: a negative n reads to EOF
+                if n < 0:
+                    self._reply(400, {"error": "negative Content-Length"})
+                    return
+                if n > MAX_BODY_BYTES:
+                    self._reply(413, {"error": f"body over {MAX_BODY_BYTES} bytes"})
                     return
                 raw = self.rfile.read(n).decode("utf-8") if n else "{}"
                 try:

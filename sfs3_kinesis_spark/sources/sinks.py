@@ -16,6 +16,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 
 import pyarrow as pa
@@ -23,7 +24,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
@@ -78,10 +79,19 @@ class KeyedUpsertSink:
     """Keyed whole-row upsert store with last-writer-wins semantics
     per key (the process-state table).
 
-    ``apply_batch`` is the ``foreachBatch`` body; re-delivered
-    batches (streaming restart) are idempotent because reads merge
-    by key, not append — the engine's answer to the reference's
-    at-least-once step execution (serverless.yml:80-85).
+    Two commit paths write the same delta layout:
+
+    * :meth:`apply_batch` takes a DataFrame and writes it with Spark.
+      It serves callers whose batches are unbounded: the retrying
+      pipeline, its pending store and the window rollups.
+    * :meth:`commit_arrow` takes a pyarrow Table the caller has
+      already pulled to the driver and writes it with pyarrow, with
+      no Spark job.  It serves :class:`~sfs3_kinesis_spark.streaming.
+      incremental.IncrementalPipeline`, whose micro-batch is bounded.
+
+    Re-delivered batches (streaming restart) are idempotent because
+    reads merge by key, not append — the engine's answer to the
+    reference's at-least-once step execution (serverless.yml:80-85).
 
     Storage layout (the LSM / Delta-log shape, not the round-2
     snapshot-per-batch):
@@ -90,6 +100,7 @@ class KeyedUpsertSink:
       just that batch — the write path is O(batch), never O(total
       state); round 2's read-all + union + overwrite per batch was a
       scale-killer for a long-running state store (VERDICT r02 #3).
+      Compaction is a Spark write on either path.
     * every ``compact_every`` versions a compaction folds base +
       deltas into snapshot ``v{v}`` (read amplification stays
       bounded: a read touches one snapshot + at most
@@ -148,8 +159,6 @@ class KeyedUpsertSink:
         erasure must not silently un-happen), else restore the
         pre-erasure ``.old``; stale leftovers next to an intact
         version dir are just removed."""
-        import shutil
-
         if not os.path.isdir(self.path):
             return
         # complete .tmp (post-erasure) must win over .old when both
@@ -302,6 +311,9 @@ class KeyedUpsertSink:
         return self._merged_as_of(version)
 
     def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """Commit an unbounded batch with a Spark write: the
+        ``foreachBatch`` body of the retrying pipeline, its pending
+        store and the window rollups."""
         next_version = self._version + 1
         # within-batch last-writer-wins per key (same arbitrary-tie
         # contract the round-2 merge had for duplicate keys inside
@@ -318,12 +330,49 @@ class KeyedUpsertSink:
         d = self._delta_dir(next_version)
         self._schemas[d] = delta.schema
         delta.write.mode("overwrite").parquet(d)
+        self._publish(next_version)
+
+    def commit_arrow(self, table: pa.Table, schema: StructType, epoch_id: int) -> None:
+        """Commit a batch already on the driver (the Engine's bounded
+        micro-batch) with pyarrow: no Spark job.  ``schema`` is the
+        batch's Spark schema, recorded for table reads.
+
+        The last row of a key in ``table`` wins.  The delta is written
+        under a hidden ``.d{v}`` name, which neither the version scan
+        nor a restart reads, and published whole by a rename."""
+        next_version = self._version + 1
+        keys = table.column(self.key_col).to_pylist()
+        last = {k: i for i, k in enumerate(keys)}
+        if len(last) < len(keys):
+            table = table.take(sorted(last.values()))
+        n = table.num_rows
+        table = table.append_column(
+            "_epoch", pa.array([int(epoch_id)] * n, pa.int32())
+        ).append_column("_v", pa.array([next_version] * n, pa.int32()))
+        d = self._delta_dir(next_version)
+        hidden = os.path.join(self.path, "." + os.path.basename(d))
+        shutil.rmtree(hidden, ignore_errors=True)  # a crashed commit's leftover
+        os.makedirs(hidden)
+        pq.write_table(table, os.path.join(hidden, "part-0.parquet"))
+        self._schemas[d] = StructType(
+            schema.fields
+            + [
+                StructField("_epoch", IntegerType(), False),
+                StructField("_v", IntegerType(), False),
+            ]
+        )
+        os.rename(hidden, d)
+        self._publish(next_version)
+
+    def _publish(self, version: int) -> None:
+        """Make the written delta ``d{version}`` readable, wake the
+        waiters, and compact on the cadence (a Spark write)."""
         with self._commit:
-            self._deltas.append(next_version)
-            self._version = next_version
+            self._deltas.append(version)
+            self._version = version
             self._commit.notify_all()
-        if next_version % self.compact_every == 0:
-            self._compact(next_version)
+        if version % self.compact_every == 0:
+            self._compact(version)
 
     def _compact(self, version: int) -> None:
         """Fold base + delta tail into snapshot ``v{version}`` so the
@@ -349,8 +398,6 @@ class KeyedUpsertSink:
         once its base snapshot is gone), everything at or after it is
         untouched.  Refuses a horizon the on-disk layout cannot serve
         (no snapshot at or below it would remain)."""
-        import shutil
-
         if keep_from_version is None:
             keep_from_version = max(
                 (s for s in self._snapshots), default=self._version
@@ -392,8 +439,6 @@ class KeyedUpsertSink:
         floor for physical erasure, so production batches requests
         and runs this on a cadence, not per request.
         """
-        import shutil
-
         if isinstance(keys, DataFrame):
             key_df = keys.select(F.col(keys.columns[0]).alias(self.key_col)).distinct()
         else:

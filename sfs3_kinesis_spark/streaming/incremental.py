@@ -31,8 +31,10 @@ from __future__ import annotations
 
 from typing import Callable, Optional, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from sfs3_kinesis_spark.operators.pipeline import (
     FAILED,
@@ -41,6 +43,7 @@ from sfs3_kinesis_spark.operators.pipeline import (
     faulted_expr,
     run_pipeline,
     status_events,
+    terminal_event_id,
 )
 from sfs3_kinesis_spark.sources.sinks import KeyedUpsertSink
 
@@ -48,48 +51,98 @@ from sfs3_kinesis_spark.sources.sinks import KeyedUpsertSink
 #: still RUNNING while ASL retries the stage)
 RETRYING = "RETRYING"
 
+#: rows in one :class:`IncrementalPipeline` micro-batch, all of which
+#: the driver holds at once
+MAX_BATCH_ROWS = 256
+
 
 class IncrementalPipeline:
-    """Streaming execution of the staged pipeline.
+    """Streaming execution of the staged pipeline, one bounded
+    micro-batch at a time, committed from the driver.
 
-    ``state_sink`` receives the upserted process-state rows;
-    ``on_events`` (optional) receives the terminal status-event
-    micro-batch (e.g. append to the notification stream).
+    :meth:`start` applies the staged projection to the stream once.
+    Each micro-batch is then one Spark job: :meth:`process_batch`
+    pulls the projected rows to the driver as Arrow, at most
+    :data:`MAX_BATCH_ROWS` of them, and the commits that follow run
+    no Spark job (compaction aside): ``on_events`` receives the
+    terminal status events as a pyarrow Table, and the state rows go
+    to :meth:`KeyedUpsertSink.commit_arrow`.  The caller bounds the
+    batch (the Engine sets ``maxFilesPerTrigger`` over one-row
+    files); a larger batch fails the query.  Per-batch coordination,
+    not compute, dominates a small micro-batch, and a Spark write
+    costs a job, a shuffle and a second scan of the batch.
+    :class:`RetryingIncrementalPipeline` keeps Spark writes: its
+    batch joins the requeued backlog and is not bounded.
     """
 
     def __init__(
         self,
         state_sink: KeyedUpsertSink,
         steps: Optional[Sequence[Step]] = None,
-        on_events: Optional[Callable[[DataFrame, int], None]] = None,
-        max_attempts: int = 3,
+        on_events: Optional[Callable[[pa.Table, int], None]] = None,
     ):
         self.state_sink = state_sink
         self.steps = steps
         self.on_events = on_events
-        self.max_attempts = max_attempts
+
+    def stage(self, requests: DataFrame) -> DataFrame:
+        """The staged projection of ``requests``: the state row, plus
+        the terminal event's ``event_id`` and ``event_time``."""
+        return run_pipeline(requests, self.steps).withColumns(
+            {
+                "attempts": F.lit(1).cast("int"),
+                "event_id": terminal_event_id(F.col("txn_id")),
+                "event_time": F.current_timestamp(),
+            }
+        )
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        state = run_pipeline(batch_df, self.steps).withColumn(
-            "attempts", F.lit(1).cast("int")
+        """Commit one staged micro-batch (see :meth:`stage`)."""
+        schema = batch_df.schema
+        # a FAILED row's later stage structs are NULL though their
+        # fields are not nullable: Arrow rejects that unless relaxed
+        table = (
+            batch_df.to(_nullable(schema)).limit(MAX_BATCH_ROWS + 1).toArrow()
         )
+        if table.num_rows > MAX_BATCH_ROWS:
+            raise ValueError(
+                f"micro-batch {epoch_id} has more than MAX_BATCH_ROWS = "
+                f"{MAX_BATCH_ROWS} rows; bound the source (maxFilesPerTrigger)"
+            )
         # events BEFORE the state write: a crash in between re-emits
         # the same events on the foreachBatch replay (duplicates are
         # deduped downstream by event_id — the idempotency key), while
         # the reverse order would LOSE events whose state row already
         # committed (the replay would see nothing left to do)
         if self.on_events is not None:
-            events = status_events(state, event_time=F.current_timestamp())
+            events = table.select(["txn_id", "status", "event_id", "event_time"])
             self.on_events(events, epoch_id)
-        self.state_sink.apply_batch(state, epoch_id)
+        state = table.drop_columns(["event_id", "event_time"])
+        self.state_sink.commit_arrow(
+            state,
+            StructType([f for f in schema if f.name in state.column_names]),
+            epoch_id,
+        )
 
     def start(self, requests_stream: DataFrame, checkpoint_dir: str):
         return (
-            requests_stream.writeStream.foreachBatch(self.process_batch)
+            self.stage(requests_stream)
+            .writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", checkpoint_dir)
             .outputMode("update")
             .start()
         )
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(t.keyType, _nullable(t.valueType))
+    return t
 
 
 class RetryingIncrementalPipeline:

@@ -50,20 +50,31 @@ def test_event_log_redelivery_is_idempotent(spark, tmp_path):
     write, before the checkpoint commit): the event log is epoch-
     keyed with overwrite semantics, so the replay replaces its own
     output and events() never shows duplicate event_ids."""
-    import datetime as dt
-
     eng = Engine(spark, str(tmp_path / "eng"))
-    batch = spark.createDataFrame(
-        [("0xaaa", "SUCCEEDED", "0xaaa/step-f", dt.datetime(2024, 1, 1))],
-        "txn_id string, status string, event_id string, event_time timestamp",
-    )
+    batch = _event_table("0xaaa", "SUCCEEDED")
     eng._append_events(batch, 7)
     eng._append_events(batch, 7)  # the redelivered epoch
     ev = eng.events()
     assert ev.count() == 1
     assert "epoch" not in ev.columns  # bookkeeping stays internal
-    eng._append_events(batch.withColumn("event_id", batch.event_id), 8)
+    eng._append_events(batch, 8)
     assert eng.events().count() == 2  # distinct epochs still append
+
+
+def _event_table(txn: str, status: str):
+    """One status event, as process_batch hands it to on_events."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "txn_id": [txn],
+            "status": [status],
+            "event_id": [f"{txn}/step-f"],
+            "event_time": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("us", "UTC")),
+        }
+    )
 
 
 def test_concurrent_submits_all_land(spark, tmp_path):
@@ -217,3 +228,80 @@ def test_lookup_races_commits_compactions_and_vacuum(spark, tmp_path):
     assert not errors, errors
     assert reads[0] > 0
     assert {k: sink.lookup(k)["val"] for k in keys} == {"k0": 12, "k1": 10, "k2": 11}
+
+
+def _drain(eng, txns):
+    """Run the stream until idle (it raises if the query failed);
+    returns the txns' statuses and the input row counts of the
+    batches that ran."""
+    eng._query.processAllAvailable()
+    statuses = {t: eng.status(t) for t in txns}
+    rows = [p["numInputRows"] for p in eng._query.recentProgress if p["numInputRows"]]
+    return statuses, rows
+
+
+def test_engine_micro_batch_is_one_spark_job(spark, tmp_path):
+    """A micro-batch that does not compact runs one Spark job, the
+    staged projection pulled as Arrow: the event partition and the
+    state delta are pyarrow writes."""
+    eng = Engine(spark, str(tmp_path / "eng"))
+    txns = [eng.submit('{"foo": true}') for _ in range(3)]
+    jobs0 = _next_job_id(spark)
+    eng.start()
+    try:
+        statuses, rows = _drain(eng, txns)
+        jobs = _next_job_id(spark) - jobs0
+    finally:
+        eng.stop()
+    assert set(statuses.values()) == {"SUCCEEDED"}
+    assert rows == [3] and eng._sink.version == 1
+    assert jobs == 1
+
+
+def test_engine_batches_are_bounded(spark, tmp_path, monkeypatch):
+    """With the batch bound at 4 rows, ten queued submits drain in at
+    least three micro-batches of at most 4 rows; every txn succeeds
+    and the event log holds one event per txn."""
+    from sfs3_kinesis_spark.streaming import incremental
+
+    monkeypatch.setattr(incremental, "MAX_BATCH_ROWS", 4)
+    eng = Engine(spark, str(tmp_path / "eng"))
+    txns = [eng.submit('{"n": 1}') for _ in range(10)]
+    eng.start()
+    try:
+        statuses, rows = _drain(eng, txns)
+    finally:
+        eng.stop()
+    assert set(statuses.values()) == {"SUCCEEDED"}
+    assert len(rows) >= 3 and max(rows) <= 4 and sum(rows) == 10
+    ev = eng.events().collect()
+    assert sorted(r.txn_id for r in ev) == sorted(txns)
+    assert {r.event_id for r in ev} == {f"{t}/step-f" for t in txns}
+
+
+def test_crashed_event_write_is_never_read(spark, tmp_path, monkeypatch):
+    """An event write that dies before its rename leaves a hidden file:
+    events() neither reads it nor counts it as an event partition, and
+    the redelivered epoch then lands whole."""
+    import pytest
+
+    from sfs3_kinesis_spark import engine as engine_mod
+
+    eng = Engine(spark, str(tmp_path / "eng"))
+    batch = _event_table("0xaaa", "FAILED")
+    real_write = engine_mod.pq.write_table
+
+    def write_then_crash(table, where, **kw):
+        real_write(table, where, **kw)
+        raise OSError("crash after the event write")
+
+    monkeypatch.setattr(engine_mod.pq, "write_table", write_then_crash)
+    with pytest.raises(OSError, match="crash"):
+        eng._append_events(batch, 3)
+    monkeypatch.undo()
+    restarted = Engine(spark, str(tmp_path / "eng"))
+    assert restarted.events() is None
+    restarted._append_events(batch, 3)
+    assert [tuple(r) for r in restarted.events().select("txn_id", "status").collect()] == [
+        ("0xaaa", "FAILED")
+    ]

@@ -130,6 +130,34 @@ def test_http_engine_error_is_500_not_dropped_connection(spark, tmp_path):
         svc.stop()
 
 
+def test_http_body_length_is_bounded_before_any_read(spark, tmp_path):
+    """A negative Content-Length answers 400 and one over
+    MAX_BODY_BYTES answers 413, both before a byte of the body is
+    read (a negative length would read until EOF and pin the handler)
+    and before anything is submitted."""
+    import os
+    import socket
+
+    from sfs3_kinesis_spark.http_service import MAX_BODY_BYTES
+
+    eng = Engine(spark, str(tmp_path / "eng"))
+    svc = EngineHttpService(eng)
+    port = svc.start()
+    try:
+        for length, code in ((-1, 400), (MAX_BODY_BYTES + 1, 413)):
+            with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+                # the socket stays open and sends no body
+                s.sendall(
+                    b"POST /p1 HTTP/1.1\r\nHost: x\r\n"
+                    b"Content-Length: %d\r\n\r\n" % length
+                )
+                status_line = s.recv(1024).decode("utf-8", "replace").split("\r\n")[0]
+            assert f" {code} " in status_line, (length, status_line)
+        assert os.listdir(eng.requests_dir) == []
+    finally:
+        svc.stop()
+
+
 def test_http_listener_under_concurrent_load(spark, tmp_path):
     """r04 verdict next-round #6: >= 32 CONCURRENT POST /p1 requests
     with mixed SUCCEEDED / FAILED / budget-lapse outcomes; every held

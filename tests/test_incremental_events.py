@@ -16,10 +16,10 @@ def test_incremental_emits_failed_and_succeeded_events(spark, tmp_path):
     req_dir.mkdir()
     collected: list[tuple[str, str, str]] = []
 
-    def on_events(batch_df, epoch_id):
+    def on_events(events, epoch_id):  # a pyarrow Table
         collected.extend(
             (r["txn_id"], r["status"], r["event_id"])
-            for r in batch_df.select("txn_id", "status", "event_id").collect()
+            for r in events.select(["txn_id", "status", "event_id"]).to_pylist()
         )
 
     # fault-inject step C for txn '1' (the reference's per-step catch
@@ -497,3 +497,158 @@ def test_upsert_sink_commits_wake_every_waiter(spark, tmp_path):
         sys.setswitchinterval(interval)
     assert not any(w.is_alive() for w in waiters)
     assert all(woke[i] >= 1 + i % 4 for i in range(16)), woke
+
+
+def _poisoned_pipeline(spark, path, poison="1"):
+    """An IncrementalPipeline whose step C faults on txn ``poison``."""
+    steps = reference_steps()
+    c = steps[2]
+    steps[2] = Step(c.name, c.output_col, c.result, c.gate_on, fail_if=F.col("txn_id") == poison)
+    return IncrementalPipeline(KeyedUpsertSink(spark, path), steps=steps)
+
+
+def _requests(spark, ids):
+    return spark.createDataFrame(
+        [(str(i), '{"foo": true}') for i in ids], "txn_id string, request string"
+    )
+
+
+def _current_rows(sink) -> dict:
+    """current() by key, shaped like lookup's dicts."""
+    rows = {}
+    for r in sink.current().collect():
+        d = r.asDict(recursive=True)
+        rows[d[sink.key_col]] = {k: v for k, v in d.items() if k not in ("_v", "_epoch")}
+    return rows
+
+
+def test_arrow_commit_lookup_equals_current_for_failed_and_succeeded(spark, tmp_path):
+    """The Arrow commit of a micro-batch holding a FAILED txn (its
+    later stage structs are NULL) and SUCCEEDED txns: each lookup
+    equals the txn's current() row, and the state carries attempts."""
+    pipe = _poisoned_pipeline(spark, str(tmp_path / "store"))
+    pipe.process_batch(pipe.stage(_requests(spark, range(3))), 0)
+    sink = pipe.state_sink
+    assert sink.version == 1
+    cur = _current_rows(sink)
+    assert {t: r["status"] for t, r in cur.items()} == {
+        "0": "SUCCEEDED", "1": "FAILED", "2": "SUCCEEDED"
+    }
+    assert cur["1"]["step_b_output"] is not None and cur["1"]["step_c_output"] is None
+    assert cur["0"]["step_f_output"] == {"downstreamExecutionArn": "downstream:0"}
+    assert all(r["attempts"] == 1 for r in cur.values())
+    assert "event_id" not in cur["0"] and "event_time" not in cur["0"]
+    for t, row in cur.items():
+        assert sink.lookup(t) == row
+
+
+def test_batch_over_the_bound_fails_loudly(spark, tmp_path, monkeypatch):
+    """process_batch pulls at most MAX_BATCH_ROWS rows: a larger batch
+    raises, naming the bound, and commits nothing."""
+    import pytest
+
+    from sfs3_kinesis_spark.streaming import incremental
+
+    monkeypatch.setattr(incremental, "MAX_BATCH_ROWS", 4)
+    pipe = _poisoned_pipeline(spark, str(tmp_path / "store"))
+    events = []
+    pipe.on_events = lambda table, epoch: events.append(table)
+    with pytest.raises(ValueError, match="MAX_BATCH_ROWS = 4"):
+        pipe.process_batch(pipe.stage(_requests(spark, range(5))), 0)
+    assert pipe.state_sink.version == 0 and not events
+    pipe.process_batch(pipe.stage(_requests(spark, range(4))), 0)
+    assert pipe.state_sink.version == 1 and events[0].num_rows == 4
+
+
+def test_spark_and_arrow_deltas_merge_across_compaction(spark, tmp_path):
+    """A store whose deltas were written by apply_batch (Spark) and
+    commit_arrow (pyarrow), compacted on the way: every version reads
+    last-writer-wins, and lookup equals current() for every key, also
+    after a restart."""
+    import os
+
+    import pyarrow as pa
+
+    schema = "k string, val int, doc struct<a:string,n:bigint>"
+    spark_schema = spark.createDataFrame([], schema).schema
+    path = str(tmp_path / "st")
+    sink = KeyedUpsertSink(spark, path, key_col="k", compact_every=3)
+
+    def arrow(rows):
+        return pa.Table.from_pylist(
+            [{"k": k, "val": v, "doc": d} for k, v, d in rows],
+            pa.schema([
+                ("k", pa.string()), ("val", pa.int32()),
+                ("doc", pa.struct([("a", pa.string()), ("n", pa.int64())])),
+            ]),
+        )
+
+    sink.apply_batch(spark.createDataFrame([("a", 1, ("x", 1)), ("b", 1, None)], schema), 0)
+    sink.commit_arrow(arrow([("a", 2, None), ("c", 2, {"a": "y", "n": 2})]), spark_schema, 1)
+    sink.apply_batch(spark.createDataFrame([("b", 3, ("z", 3))], schema), 2)  # compacts
+    sink.commit_arrow(arrow([("c", 4, {"a": "w", "n": 4})]), spark_schema, 3)
+    assert sorted(d for d in os.listdir(path)) == ["d1", "d2", "d3", "d4", "v3"]
+    expect = {
+        1: {"a": 1, "b": 1},
+        2: {"a": 2, "b": 1, "c": 2},
+        3: {"a": 2, "b": 3, "c": 2},
+        4: {"a": 2, "b": 3, "c": 4},
+    }
+    for v, vals in expect.items():
+        assert {r.k: r.val for r in sink.read_version(v).collect()} == vals
+    assert dict(sink.read_version(4).select("k", "_v").collect()) == {"a": 2, "b": 3, "c": 4}
+    for s in (sink, KeyedUpsertSink(spark, path, key_col="k", compact_every=3)):
+        cur = _current_rows(s)
+        assert cur["a"]["doc"] is None and cur["c"]["doc"] == {"a": "w", "n": 4}
+        assert {k: s.lookup(k) for k in cur} == cur
+
+
+def test_arrow_commit_duplicate_keys_last_writer_wins(spark, tmp_path):
+    """Duplicate keys in one Arrow batch: the last row of the key wins,
+    in lookup and in current() alike."""
+    import pyarrow as pa
+
+    sink = KeyedUpsertSink(spark, str(tmp_path / "st"), key_col="k")
+    schema = spark.createDataFrame([], "k string, val int").schema
+    table = pa.table({"k": ["a", "b", "a", "c", "a"], "val": pa.array([1, 2, 3, 4, 5], pa.int32())})
+    sink.commit_arrow(table, schema, 0)
+    assert {r.k: r.val for r in sink.current().collect()} == {"a": 5, "b": 2, "c": 4}
+    assert sink.current().count() == 3
+    assert sink.lookup("a") == {"k": "a", "val": 5}
+
+
+def test_crashed_arrow_commit_is_never_read_on_restart(spark, tmp_path, monkeypatch):
+    """A commit that dies after writing its delta file, before the
+    publishing rename, leaves a hidden directory: a restarted sink
+    neither reads it nor counts it as a version, and the next commit
+    takes that version number with its own rows."""
+    import os
+
+    import pyarrow as pa
+    import pytest
+
+    from sfs3_kinesis_spark.sources import sinks
+
+    path = str(tmp_path / "st")
+    schema = spark.createDataFrame([], "k string, val int").schema
+    sink = KeyedUpsertSink(spark, path, key_col="k")
+    sink.commit_arrow(pa.table({"k": ["a"], "val": pa.array([1], pa.int32())}), schema, 0)
+    real_write = sinks.pq.write_table
+
+    def write_then_crash(table, where, **kw):
+        real_write(table, where, **kw)
+        raise OSError("crash after the delta write")
+
+    monkeypatch.setattr(sinks.pq, "write_table", write_then_crash)
+    with pytest.raises(OSError, match="crash"):
+        sink.commit_arrow(pa.table({"k": ["ghost"], "val": pa.array([9], pa.int32())}), schema, 1)
+    monkeypatch.undo()
+    assert sorted(os.listdir(path)) == [".d2", "d1"]
+
+    resumed = KeyedUpsertSink(spark, path, key_col="k")
+    assert resumed.version == 1
+    assert resumed.lookup("ghost") is None
+    assert {r.k for r in resumed.current().collect()} == {"a"}
+    resumed.commit_arrow(pa.table({"k": ["b"], "val": pa.array([2], pa.int32())}), schema, 1)
+    assert resumed.version == 2 and sorted(os.listdir(path)) == ["d1", "d2"]
+    assert {r.k: r.val for r in resumed.current().collect()} == {"a": 1, "b": 2}
