@@ -31,8 +31,9 @@ transformation happens in the streaming query.  Each micro-batch runs
 one Spark job, the staged projection, whose rows
 (:data:`~sfs3_kinesis_spark.streaming.incremental.MAX_BATCH_ROWS` at
 most) the driver pulls as Arrow.  The driver then writes the event
-partition and the state delta with pyarrow; only the state store's
-compaction, every ``compact_every`` batches, is a Spark write.  At
+partition and the state delta with pyarrow, and every
+``compact_every`` batches folds the state store's snapshot with
+pyarrow too: no other Spark job runs on the commit path.  At
 scale the ingest dir becomes an object-store prefix (or a
 Kafka/Kinesis topic via ``sources.stream``), and the state store a
 keyed table — the facade does not change.
@@ -53,6 +54,10 @@ from sfs3_kinesis_spark.sources.sinks import KeyedUpsertSink
 from sfs3_kinesis_spark.streaming import incremental
 
 REQUEST_SCHEMA = "txn_id string, request string"
+
+#: seconds between a held :meth:`Engine.await_completion`'s checks
+#: that the streaming query is still alive
+LIVENESS_S = 1.0
 
 
 class Engine:
@@ -145,17 +150,37 @@ class Engine:
         instead of a timer.  One final check after the deadline: the
         terminal status may have landed during the last wait —
         reporting TIMEOUT when status() already answers is a
-        misreport, not a timeout."""
+        misreport, not a timeout.
+
+        A stream that died (a micro-batch raised) commits nothing
+        more: the wait checks the query every :data:`LIVENESS_S` and
+        raises its error instead of sleeping out the budget."""
         deadline = time.monotonic() + timeout_s
         while True:
             seen = self._sink.version  # read before the lookup: no lost wakeup
             s = self.status(txn_id)
             if s is not None:
                 return s
-            if not self._sink.wait_for_version(seen + 1, deadline - time.monotonic()):
+            if not self._wait_for_commit(seen + 1, deadline):
                 break
         s = self.status(txn_id)
         return s if s is not None else "TIMEOUT"
+
+    def _wait_for_commit(self, version: int, deadline: float) -> bool:
+        """Block until the store commits ``version`` (True) or
+        ``deadline`` passes (False); raise the streaming query's error
+        once it has failed."""
+        while True:
+            left = deadline - time.monotonic()
+            if self._sink.wait_for_version(version, min(left, LIVENESS_S)):
+                return True
+            query = self._query
+            if query is not None and not query.isActive:
+                error = query.exception()
+                if error is not None:
+                    raise error
+            if left <= LIVENESS_S:
+                return False
 
     # -- lifecycle ----------------------------------------------------- #
 

@@ -15,16 +15,29 @@
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import threading
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    IntegerType,
+    MapType,
+    StructField,
+    StructType,
+)
+
+#: rows per record batch a compaction streams, and per row group it writes
+FOLD_ROWS = 65536
 
 
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
@@ -100,11 +113,14 @@ class KeyedUpsertSink:
       just that batch — the write path is O(batch), never O(total
       state); round 2's read-all + union + overwrite per batch was a
       scale-killer for a long-running state store (VERDICT r02 #3).
-      Compaction is a Spark write on either path.
     * every ``compact_every`` versions a compaction folds base +
       deltas into snapshot ``v{v}`` (read amplification stays
       bounded: a read touches one snapshot + at most
-      ``compact_every`` deltas).
+      ``compact_every`` deltas).  On either commit path the fold is
+      pyarrow on the driver, no Spark job (see :meth:`_compact`); it
+      holds the tail's distinct keys plus one row group, never the
+      base whole: at most ``compact_every`` x 256 = 2048 keys for the
+      Engine's bounded batches.
     * table reads (``current`` / ``read_version``) merge base +
       deltas with last-writer-wins per key ordered by delta version —
       the MERGE INTO contract, unchanged from round 2.
@@ -115,9 +131,11 @@ class KeyedUpsertSink:
       writes it, so a table read passes ``.schema(...)`` and runs no
       schema-inference job.  A directory found on disk at restart is
       inferred once, on its first table read, and cached.
-    * every change to the set of readable directories (a commit, a
-      compaction, ``vacuum``, a ``forget_keys`` swap) happens under
-      the commit lock that :meth:`lookup` holds while it scans.
+    * every removal or swap of a readable directory (``vacuum``, a
+      ``forget_keys`` swap) happens under the commit lock that
+      :meth:`lookup` holds while it scans.  A commit or compaction
+      only adds a directory, renamed into place whole before it is
+      listed, so a scan in progress stays valid without it.
     * ``version`` plus :meth:`wait_for_version` let a reader sleep
       until the next commit instead of polling on a timer.
 
@@ -147,7 +165,7 @@ class KeyedUpsertSink:
         self._recover_partial_swaps()
         self._snapshots, self._deltas = self._scan_disk()
         self._version = max(self._snapshots + self._deltas, default=0)
-        #: version directory -> its schema (see ``_read``)
+        #: version directory -> its schema (see ``_schema``)
         self._schemas: dict[str, StructType] = {}
         #: notified on every committed delta (see ``wait_for_version``)
         self._commit = threading.Condition()
@@ -192,6 +210,8 @@ class KeyedUpsertSink:
                 snaps.append(int(m.group(1)))
             elif m := re.fullmatch(r"d(\d+)", d):
                 deltas.append(int(m.group(1)))
+            elif re.fullmatch(r"\.[vd]\d+", d):  # a crashed write, never published
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
         return sorted(snaps), sorted(deltas)
 
     def _snapshot_dir(self, version: int) -> str:
@@ -208,14 +228,19 @@ class KeyedUpsertSink:
             return schema.fieldNames()
         return pq.ParquetDataset(d).schema.names
 
+    def _schema(self, d: str) -> StructType:
+        """Version directory ``d``'s recorded schema.  One written
+        before this instance is inferred once, with a Spark job."""
+        schema = self._schemas.get(d)
+        if schema is None:
+            # (readers racing here both infer the same schema; harmless)
+            schema = self._schemas[d] = self.spark.read.parquet(d).schema
+        return schema
+
     def _read(self, d: str) -> DataFrame:
         """One version directory with its recorded schema.  Inferring
         it instead costs a Spark job per directory per read."""
-        schema = self._schemas.get(d)
-        if schema is None:  # written before this instance: infer once
-            # (readers racing here both infer the same schema; harmless)
-            schema = self._schemas[d] = self.spark.read.parquet(d).schema
-        return self.spark.read.schema(schema).parquet(d)
+        return self.spark.read.schema(self._schema(d)).parquet(d)
 
     def _merged_as_of(self, version: int) -> DataFrame:
         """base snapshot (newest <= version) + the delta tail, merged
@@ -271,7 +296,7 @@ class KeyedUpsertSink:
         recursive=True)``: columns of the read path a directory lacks
         are None, maps are dicts, and Spark's INT96 timestamps read as
         naive UTC, the session time zone.  The scan runs under the
-        commit lock, which every change to the set of directories also
+        commit lock, which every removal or swap of a directory also
         takes, so no directory vanishes mid-read."""
         with self._commit:
             base_v = max(self._snapshots, default=0)
@@ -366,7 +391,7 @@ class KeyedUpsertSink:
 
     def _publish(self, version: int) -> None:
         """Make the written delta ``d{version}`` readable, wake the
-        waiters, and compact on the cadence (a Spark write)."""
+        waiters, and compact on the cadence."""
         with self._commit:
             self._deltas.append(version)
             self._version = version
@@ -375,16 +400,60 @@ class KeyedUpsertSink:
             self._compact(version)
 
     def _compact(self, version: int) -> None:
-        """Fold base + delta tail into snapshot ``v{version}`` so the
-        read path never merges more than ``compact_every`` deltas.
-        Deltas stay on disk for time travel (a retention policy would
-        GC them past a horizon; irrelevant at test scale)."""
-        merged = self._merged_as_of(version)
+        """Fold base + delta tail into snapshot ``v{version}`` with
+        pyarrow, so the read path never merges more than
+        ``compact_every`` deltas.  Deltas stay on disk for time travel
+        (``vacuum`` drops them past a horizon).
+
+        The deltas are walked newest first, then the base, each
+        streamed in record batches; a row is dropped when a newer
+        directory already emitted its key.  A directory holds at most
+        one row per key, so this keeps the row with the largest
+        ``_v``, the row :meth:`_merged_as_of` keeps.  The snapshot's
+        schema is the union of the recorded ones, in ``unionByName``
+        order; a column a directory lacks is NULL.  The snapshot is
+        written under a hidden ``.v{version}`` name and published by a
+        rename, so a crash mid-write leaves nothing a read or a
+        restart sees.  Publishing takes no lock: lookups hold the
+        commit lock while they read, and waiting for it cost as much
+        as the fold itself on the ``POST /p1`` path.
+
+        Driver memory is the tail's distinct keys (at most
+        ``compact_every`` x the batch bound, 2048 for the Engine) plus
+        the row group being assembled (under 2 x :data:`FOLD_ROWS`
+        rows): the base is never held whole."""
+        base_v = max((s for s in self._snapshots if s < version), default=0)
+        dirs = [self._delta_dir(v) for v in reversed(self._deltas) if base_v < v <= version]
+        tail = len(dirs)
+        if base_v:
+            dirs.append(self._snapshot_dir(base_v))
+        schema = _union_by_name([self._schema(d) for d in reversed(dirs)])
+        target = to_arrow_schema(schema)
         d = self._snapshot_dir(version)
-        self._schemas[d] = merged.schema
-        merged.write.mode("overwrite").parquet(d)
-        with self._commit:
-            self._snapshots.append(version)
+        hidden = os.path.join(self.path, "." + os.path.basename(d))
+        os.makedirs(hidden)  # a crashed fold's leftover went at open (_scan_disk)
+        seen = pa.array([], target.field(self.key_col).type)
+        with pq.ParquetWriter(os.path.join(hidden, "part-0.parquet"), target) as out:
+            group, rows = [], 0
+            for i, src in enumerate(dirs):
+                emitted = [seen]
+                for batch in _record_batches(src):
+                    batch = _conform(batch, target)
+                    keys = batch.column(self.key_col)
+                    batch = batch.filter(pc.invert(pc.is_in(keys, value_set=seen)))
+                    if i < tail:  # the base's keys are never looked up again
+                        emitted.append(batch.column(self.key_col))
+                    group.append(batch)
+                    rows += batch.num_rows
+                    if rows >= FOLD_ROWS:
+                        out.write_table(pa.Table.from_batches(group, target))
+                        group, rows = [], 0
+                seen = pa.concat_arrays(emitted)
+            if group:
+                out.write_table(pa.Table.from_batches(group, target))
+        self._schemas[d] = schema
+        os.rename(hidden, d)
+        self._snapshots.append(version)
 
     def vacuum(self, keep_from_version: int | None = None) -> int:
         """Garbage-collect history: drop snapshots and deltas no
@@ -489,12 +558,62 @@ class KeyedUpsertSink:
         return stream_df.writeStream.foreachBatch(self.apply_batch).outputMode("update")
 
 
+def all_nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, all_nullable(f.dataType)) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(all_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(t.keyType, all_nullable(t.valueType))
+    return t
+
+
+def _union_by_name(schemas: list[StructType]) -> StructType:
+    """The schema ``unionByName(allowMissingColumns=True)`` gives
+    tables of ``schemas``, all nullable: each column where it first
+    appears.  A column whose type differs between them is refused."""
+    fields: dict[str, DataType] = {}
+    for schema in schemas:
+        for f in all_nullable(schema):
+            if fields.setdefault(f.name, f.dataType) != f.dataType:
+                raise ValueError(
+                    f"column {f.name!r} is {fields[f.name].simpleString()} in one "
+                    f"version and {f.dataType.simpleString()} in another"
+                )
+    return StructType([StructField(n, t) for n, t in fields.items()])
+
+
+def _record_batches(d: str):
+    """Version directory ``d``'s rows, :data:`FOLD_ROWS` at most per
+    batch, read one at a time.  Spark's INT96 timestamps read as
+    naive UTC microseconds."""
+    for name in sorted(os.listdir(d)):
+        if not name.startswith((".", "_")):  # Spark's checksums and markers
+            with pq.ParquetFile(os.path.join(d, name), coerce_int96_timestamp_unit="us") as f:
+                yield from f.iter_batches(FOLD_ROWS, use_threads=False)
+
+
+def _conform(batch: pa.RecordBatch, schema: pa.Schema) -> pa.RecordBatch:
+    """``batch`` cast to ``schema``, column by column; a column it
+    lacks is all NULL."""
+    cols = []
+    for f in schema:
+        i = batch.schema.get_field_index(f.name)
+        col = batch.column(i) if i >= 0 else pa.nulls(batch.num_rows, f.type)
+        cols.append(col if col.type == f.type else col.cast(f.type))
+    return pa.RecordBatch.from_arrays(cols, schema=schema)
+
+
 def _to_py(value, typ: pa.DataType):
     """A pyarrow ``as_py`` value in the shape Spark's ``collect`` +
     ``asDict(recursive=True)`` gives it: maps as dicts (pyarrow gives
-    lists of pairs), recursively through structs and lists."""
+    lists of pairs) and UTC-adjusted timestamps as naive UTC,
+    recursively through structs and lists."""
     if value is None:
         return None
+    if pa.types.is_timestamp(typ) and typ.tz is not None:
+        return value.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     if pa.types.is_map(typ):
         return {
             _to_py(k, typ.key_type): _to_py(v, typ.item_type) for k, v in value

@@ -34,7 +34,7 @@ from typing import Callable, Optional, Sequence
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from sfs3_kinesis_spark.operators.pipeline import (
     FAILED,
@@ -45,7 +45,7 @@ from sfs3_kinesis_spark.operators.pipeline import (
     status_events,
     terminal_event_id,
 )
-from sfs3_kinesis_spark.sources.sinks import KeyedUpsertSink
+from sfs3_kinesis_spark.sources.sinks import KeyedUpsertSink, all_nullable
 
 #: non-terminal status of a requeued row (the reference execution is
 #: still RUNNING while ASL retries the stage)
@@ -64,9 +64,9 @@ class IncrementalPipeline:
     Each micro-batch is then one Spark job: :meth:`process_batch`
     pulls the projected rows to the driver as Arrow, at most
     :data:`MAX_BATCH_ROWS` of them, and the commits that follow run
-    no Spark job (compaction aside): ``on_events`` receives the
-    terminal status events as a pyarrow Table, and the state rows go
-    to :meth:`KeyedUpsertSink.commit_arrow`.  The caller bounds the
+    no Spark job, the state store's compaction included: ``on_events``
+    receives the terminal status events as a pyarrow Table, and the
+    state rows go to :meth:`KeyedUpsertSink.commit_arrow`.  The caller bounds the
     batch (the Engine sets ``maxFilesPerTrigger`` over one-row
     files); a larger batch fails the query.  Per-batch coordination,
     not compute, dominates a small micro-batch, and a Spark write
@@ -102,7 +102,7 @@ class IncrementalPipeline:
         # a FAILED row's later stage structs are NULL though their
         # fields are not nullable: Arrow rejects that unless relaxed
         table = (
-            batch_df.to(_nullable(schema)).limit(MAX_BATCH_ROWS + 1).toArrow()
+            batch_df.to(all_nullable(schema)).limit(MAX_BATCH_ROWS + 1).toArrow()
         )
         if table.num_rows > MAX_BATCH_ROWS:
             raise ValueError(
@@ -132,17 +132,6 @@ class IncrementalPipeline:
             .outputMode("update")
             .start()
         )
-
-
-def _nullable(t: DataType) -> DataType:
-    """``t`` with every field, element and value nullable."""
-    if isinstance(t, StructType):
-        return StructType([StructField(f.name, _nullable(f.dataType)) for f in t])
-    if isinstance(t, ArrayType):
-        return ArrayType(_nullable(t.elementType))
-    if isinstance(t, MapType):
-        return MapType(t.keyType, _nullable(t.valueType))
-    return t
 
 
 class RetryingIncrementalPipeline:

@@ -241,20 +241,30 @@ def _drain(eng, txns):
 
 
 def test_engine_micro_batch_is_one_spark_job(spark, tmp_path):
-    """A micro-batch that does not compact runs one Spark job, the
-    staged projection pulled as Arrow: the event partition and the
-    state delta are pyarrow writes."""
+    """A micro-batch runs one Spark job, the staged projection pulled
+    as Arrow, whether or not it compacts the state store: the event
+    partition, the state delta and the snapshot fold are pyarrow
+    writes."""
     eng = Engine(spark, str(tmp_path / "eng"))
+    eng._sink.compact_every = 2
     txns = [eng.submit('{"foo": true}') for _ in range(3)]
     jobs0 = _next_job_id(spark)
     eng.start()
     try:
         statuses, rows = _drain(eng, txns)
         jobs = _next_job_id(spark) - jobs0
+        assert set(statuses.values()) == {"SUCCEEDED"}
+        assert rows == [3] and eng._sink.version == 1
+        assert jobs == 1
+        # the second batch compacts
+        more = [eng.submit('{"foo": true}') for _ in range(2)]
+        jobs0 = _next_job_id(spark)
+        statuses, rows = _drain(eng, more)
+        jobs = _next_job_id(spark) - jobs0
     finally:
         eng.stop()
     assert set(statuses.values()) == {"SUCCEEDED"}
-    assert rows == [3] and eng._sink.version == 1
+    assert rows[-1] == 2 and eng._sink.version == 2 and eng._sink._snapshots == [2]
     assert jobs == 1
 
 
@@ -305,3 +315,30 @@ def test_crashed_event_write_is_never_read(spark, tmp_path, monkeypatch):
     assert [tuple(r) for r in restarted.events().select("txn_id", "status").collect()] == [
         ("0xaaa", "FAILED")
     ]
+
+
+def test_dead_stream_fails_held_await_fast(spark, tmp_path):
+    """Once a micro-batch raises, the stream commits nothing more: a
+    held await_completion raises the query's error within seconds
+    instead of sleeping out its 20 s budget."""
+    import time
+
+    import pytest
+
+    eng = Engine(spark, str(tmp_path / "eng"))
+    first = eng.submit('{"foo": true}')
+    eng.start()
+    try:
+        assert eng.await_completion(first, timeout_s=60) == "SUCCEEDED"
+
+        def broken(table, schema, epoch_id):
+            raise RuntimeError("state store unavailable")
+
+        eng._sink.commit_arrow = broken
+        txn = eng.submit('{"foo": true}')
+        t0 = time.monotonic()
+        with pytest.raises(Exception, match="state store unavailable"):
+            eng.await_completion(txn, timeout_s=20)
+        assert time.monotonic() - t0 < 5
+    finally:
+        eng.stop()

@@ -499,12 +499,13 @@ def test_upsert_sink_commits_wake_every_waiter(spark, tmp_path):
     assert all(woke[i] >= 1 + i % 4 for i in range(16)), woke
 
 
-def _poisoned_pipeline(spark, path, poison="1"):
+def _poisoned_pipeline(spark, path, poison="1", compact_every=8):
     """An IncrementalPipeline whose step C faults on txn ``poison``."""
     steps = reference_steps()
     c = steps[2]
     steps[2] = Step(c.name, c.output_col, c.result, c.gate_on, fail_if=F.col("txn_id") == poison)
-    return IncrementalPipeline(KeyedUpsertSink(spark, path), steps=steps)
+    sink = KeyedUpsertSink(spark, path, compact_every=compact_every)
+    return IncrementalPipeline(sink, steps=steps)
 
 
 def _requests(spark, ids):
@@ -652,3 +653,170 @@ def test_crashed_arrow_commit_is_never_read_on_restart(spark, tmp_path, monkeypa
     resumed.commit_arrow(pa.table({"k": ["b"], "val": pa.array([2], pa.int32())}), schema, 1)
     assert resumed.version == 2 and sorted(os.listdir(path)) == ["d1", "d2"]
     assert {r.k: r.val for r in resumed.current().collect()} == {"a": 1, "b": 2}
+
+
+def test_crashed_compaction_is_never_read_on_restart(spark, tmp_path, monkeypatch):
+    """A compaction that dies mid-write leaves only a hidden ``.v{N}``:
+    the commit before it stays readable, a reopened sink removes the
+    leftover without scanning it and answers lookup and current()
+    exactly, and its next compaction lands whole."""
+    import os
+
+    import pyarrow as pa
+    import pytest
+
+    from sfs3_kinesis_spark.sources import sinks
+
+    path = str(tmp_path / "st")
+    schema = spark.createDataFrame([], "k string, val int").schema
+
+    def table(rows):
+        return pa.table({"k": [k for k, _ in rows], "val": pa.array([v for _, v in rows], pa.int32())})
+
+    sink = KeyedUpsertSink(spark, path, key_col="k", compact_every=2)
+    sink.commit_arrow(table([("a", 1), ("b", 1)]), schema, 0)
+
+    class CrashingWriter(sinks.pq.ParquetWriter):
+        def write_table(self, *args, **kw):
+            super().write_table(*args, **kw)
+            raise OSError("crash mid-compaction")
+
+    monkeypatch.setattr(sinks.pq, "ParquetWriter", CrashingWriter)
+    with pytest.raises(OSError, match="crash"):
+        sink.commit_arrow(table([("a", 2), ("c", 2)]), schema, 1)
+    monkeypatch.undo()
+    assert sorted(os.listdir(path)) == [".v2", "d1", "d2"]
+    assert sink.version == 2 and sink._snapshots == []
+
+    want = {"a": 2, "b": 1, "c": 2}
+    resumed = KeyedUpsertSink(spark, path, key_col="k", compact_every=2)
+    assert sorted(os.listdir(path)) == ["d1", "d2"]
+    assert resumed.version == 2 and resumed._snapshots == []
+    assert {k: resumed.lookup(k) for k in want} == {k: {"k": k, "val": v} for k, v in want.items()}
+    assert {r.k: r.val for r in resumed.current().collect()} == want
+
+    resumed.commit_arrow(table([("b", 3)]), schema, 2)
+    resumed.commit_arrow(table([("d", 4)]), schema, 3)  # compacts
+    assert sorted(os.listdir(path)) == ["d1", "d2", "d3", "d4", "v4"]
+    want.update(b=3, d=4)
+    assert {r.k: r.val for r in spark.read.parquet(resumed._snapshot_dir(4)).collect()} == want
+    assert {k: resumed.lookup(k)["val"] for k in want} == want
+
+
+def _reference_merge(spark, sink, version) -> dict:
+    """The table as of ``version`` merged from the deltas alone, each
+    read back with its schema inferred: ``unionByName`` + the newest
+    ``_v`` per key by ``row_number``."""
+    from functools import reduce
+
+    from pyspark.sql import Window
+
+    parts = [spark.read.parquet(sink._delta_dir(v)) for v in range(1, version + 1)]
+    merged = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    w = Window.partitionBy(sink.key_col).orderBy(F.desc("_v"))
+    kept = merged.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+    return {r[sink.key_col]: r.asDict(recursive=True) for r in kept.collect()}
+
+
+def _assert_store_equals_reference(spark, sink) -> None:
+    """Each snapshot, read_version(v) at every version, current() and
+    lookup(k) for every key equal the reference merge; a snapshot
+    holds one row per key."""
+    for v in sink._snapshots:
+        rows = spark.read.parquet(sink._snapshot_dir(v)).collect()
+        got = {r.txn_id: r.asDict(recursive=True) for r in rows}
+        assert len(got) == len(rows) and got == _reference_merge(spark, sink, v), f"v{v}"
+    for v in range(1, sink.version + 1):
+        got = {r.txn_id: r.asDict(recursive=True) for r in sink.read_version(v).collect()}
+        assert got == _reference_merge(spark, sink, v), f"version {v}"
+    want = _reference_merge(spark, sink, sink.version)
+    assert {r.txn_id: r.asDict(recursive=True) for r in sink.current().collect()} == want
+    for k, row in want.items():
+        assert sink.lookup(k) == {c: x for c, x in row.items() if c not in ("_v", "_epoch")}, k
+
+
+def test_compaction_fold_equals_spark_merge(spark, tmp_path):
+    """The pyarrow fold over mixed deltas (Spark-written with INT96
+    timestamps, maps and structs; Arrow-written, FAILED rows with NULL
+    stage structs among them; a column only a later delta adds; keys
+    rewritten across deltas) reads, at every version, exactly as a
+    Spark unionByName + row_number merge of the deltas: also on a
+    reopened sink, whose directories have no recorded schema, and
+    after it folds them."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    path = str(tmp_path / "st")
+    pipe = _poisoned_pipeline(spark, path, compact_every=3)
+    sink = pipe.state_sink
+
+    def spark_delta(ids, epoch, **extra):
+        staged = pipe.stage(_requests(spark, ids)).drop("event_id", "event_time")
+        staged = staged.withColumns({
+            "at": F.timestamp_seconds(F.col("txn_id").cast("long") * 1000003 + 7),
+            "attrs": F.create_map(F.lit("n"), F.col("txn_id").cast("int")),
+            **extra,
+        })
+        sink.apply_batch(staged, epoch)
+
+    utc = dt.timezone.utc
+    arrow_schema = spark.createDataFrame(
+        [], "txn_id string, status string, at timestamp, attrs map<string,int>"
+    ).schema
+
+    def arrow_delta(rows, epoch):
+        # UTC-adjusted timestamps: Spark reads them as TimestampType
+        sink.commit_arrow(
+            pa.table({
+                "txn_id": [r[0] for r in rows],
+                "status": [r[1] for r in rows],
+                "at": pa.array([r[2] for r in rows], pa.timestamp("us", tz="UTC")),
+                "attrs": pa.array([r[3] for r in rows], pa.map_(pa.string(), pa.int32())),
+            }),
+            arrow_schema,
+            epoch,
+        )
+
+    spark_delta(range(3), 0)  # d1: txn 1 FAILED
+    pipe.process_batch(pipe.stage(_requests(spark, [0, 3, 1])), 1)  # d2: Arrow, 1 FAILED
+    arrow_delta(  # d3, then the fold into v3
+        [("2", "RETRIED", dt.datetime(2025, 6, 7, 8, 9, 10, 11, utc), [("n", 2)]),
+         ("4", "NEW", None, None)],
+        2,
+    )
+    spark_delta([3, 5], 3, note=F.concat(F.lit("note-"), F.col("txn_id")))  # d4 adds `note`
+    pipe.process_batch(pipe.stage(_requests(spark, [1, 4])), 4)  # d5
+    spark_delta([0], 5)  # d6, then the fold into v6
+    arrow_delta([("5", "LATE", None, [])], 6)  # d7
+    assert sink._snapshots == [3, 6] and sink.version == 7
+
+    cur = _reference_merge(spark, sink, 7)
+    assert cur["1"]["status"] == "FAILED" and cur["1"]["step_c_output"] is None
+    assert cur["3"]["note"] == "note-3" and cur["0"]["note"] is None
+    assert cur["2"]["at"] == dt.datetime(2025, 6, 7, 8, 9, 10, 11)
+    assert cur["0"]["attrs"] == {"n": 0} and cur["4"]["attrs"] is None
+    assert cur["5"]["attrs"] == {} and cur["5"]["note"] is None
+    _assert_store_equals_reference(spark, sink)
+
+    sink = KeyedUpsertSink(spark, path, compact_every=3)  # the helpers now write here
+    assert not sink._schemas
+    _assert_store_equals_reference(spark, sink)
+    spark_delta([2, 6], 7, note=F.lit("again"))  # d8
+    arrow_delta([("0", "DONE", dt.datetime(2026, 1, 1, tzinfo=utc), [("n", 9)])], 8)  # d9, v9
+    assert sink._snapshots == [3, 6, 9]
+    _assert_store_equals_reference(spark, sink)
+
+
+def test_apply_batch_that_compacts_runs_only_its_write_jobs(spark, tmp_path):
+    """The fold runs no Spark job: an apply_batch that compacts runs
+    exactly the jobs of one that does not, its delta write's."""
+    sink = KeyedUpsertSink(spark, str(tmp_path / "st"), key_col="k", compact_every=2)
+    b0, b1 = (spark.createDataFrame([(f"k{e}", e)], "k string, val int") for e in (0, 1))
+    jobs0 = _next_job_id(spark)
+    sink.apply_batch(b0, 0)
+    write_jobs = _next_job_id(spark) - jobs0
+    jobs0 = _next_job_id(spark)
+    sink.apply_batch(b1, 1)
+    assert sink._snapshots == [2]
+    assert _next_job_id(spark) - jobs0 == write_jobs >= 1
