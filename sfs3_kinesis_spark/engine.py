@@ -30,11 +30,21 @@ or a keyed point read of at most one snapshot and its delta tail; all
 transformation happens in the streaming query.  Each micro-batch runs
 one Spark job, the staged projection, whose rows
 (:data:`~sfs3_kinesis_spark.streaming.incremental.MAX_BATCH_ROWS` at
-most) the driver pulls as Arrow.  The driver then writes the event
-partition and the state delta with pyarrow, and every
+most) the driver pulls as Arrow.  The driver then stamps the batch's
+``event_time`` (its own UTC clock, one value per batch) and writes
+the event partition and the state delta with pyarrow, and every
 ``compact_every`` batches folds the state store's snapshot with
-pyarrow too: no other Spark job runs on the commit path.  At
-scale the ingest dir becomes an object-store prefix (or a
+pyarrow too: no other Spark job runs on the commit path.  The
+projection holds no per-batch literal, so every batch after the
+first reuses the first one's generated code.
+
+A micro-batch costs the same at batch 10 as at batch 10,000: the
+stream deletes each request file once the batch that read it has
+committed (the file source's ``cleanSource``, see :meth:`Engine.start`),
+so its listing covers the files in flight, not every request ever
+submitted.  The payload lives on in the state document (``request``).
+
+At scale the ingest dir becomes an object-store prefix (or a
 Kafka/Kinesis topic via ``sources.stream``), and the state store a
 keyed table — the facade does not change.
 """
@@ -131,7 +141,8 @@ class Engine:
         — exactly-once: the writer lands one ``epoch=N`` partition per
         micro-batch with overwrite semantics, so foreachBatch's
         at-least-once redelivery replaces its own output instead of
-        appending a duplicate copy."""
+        appending a duplicate copy.  ``event_time`` is the time the
+        driver committed the micro-batch, one value per batch."""
         has_parquet = False
         for _root, _dirs, files in os.walk(self.events_dir):
             # a hidden file is a write still in flight (see _append_events)
@@ -186,10 +197,21 @@ class Engine:
 
     def start(self):
         """Start the streaming pipeline over the ingest directory, at
-        most ``MAX_BATCH_ROWS`` one-row request files per batch."""
+        most ``MAX_BATCH_ROWS`` one-row request files per batch.
+
+        The stream deletes a batch's request files after the batch's
+        commit-log entry is written (``cleanSource = "delete"``): Spark
+        hands them to its cleaner thread when it plans the next batch,
+        so the newest batch's files wait for the next submit.  A
+        replay of an uncommitted batch still finds its files, and a
+        committed batch is never replayed.  A file the cleaner had not
+        reached before a stop stays on disk; a restart over the same
+        root skips it through the checkpoint's source log.  Hidden
+        ``.``-prefixed files are never listed, so never deleted."""
         stream = (
             self.spark.readStream.schema(REQUEST_SCHEMA)
             .option("maxFilesPerTrigger", incremental.MAX_BATCH_ROWS)
+            .option("cleanSource", "delete")
             .parquet(self.requests_dir)
         )
         self._query = self._pipeline.start(

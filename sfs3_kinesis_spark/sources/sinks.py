@@ -15,6 +15,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import os
 import shutil
@@ -131,11 +132,15 @@ class KeyedUpsertSink:
       writes it, so a table read passes ``.schema(...)`` and runs no
       schema-inference job.  A directory found on disk at restart is
       inferred once, on its first table read, and cached.
-    * every removal or swap of a readable directory (``vacuum``, a
-      ``forget_keys`` swap) happens under the commit lock that
-      :meth:`lookup` holds while it scans.  A commit or compaction
-      only adds a directory, renamed into place whole before it is
-      listed, so a scan in progress stays valid without it.
+    * :meth:`lookup` takes its read path under the commit lock and
+      scans it outside the lock, counted as a reader, so a status poll
+      never holds up a commit.  Every removal or swap of a readable
+      directory (``vacuum``, a ``forget_keys`` swap) waits under the
+      lock until no reader is left; new lookups hold off meanwhile, so
+      a steady stream of polls cannot starve it.  A commit or
+      compaction only adds a directory, renamed into place whole
+      before it is listed, so a scan in progress stays valid without
+      waiting.
     * ``version`` plus :meth:`wait_for_version` let a reader sleep
       until the next commit instead of polling on a timer.
 
@@ -167,8 +172,13 @@ class KeyedUpsertSink:
         self._version = max(self._snapshots + self._deltas, default=0)
         #: version directory -> its schema (see ``_schema``)
         self._schemas: dict[str, StructType] = {}
+        lock = threading.Lock()
         #: notified on every committed delta (see ``wait_for_version``)
-        self._commit = threading.Condition()
+        self._commit = threading.Condition(lock)
+        #: lookups scanning outside the lock, and removals waiting for
+        #: them to finish (see ``_unread_lock``)
+        self._readers = self._removers = 0
+        self._unread = threading.Condition(lock)
 
     def _recover_partial_swaps(self) -> None:
         """Finish a ``forget_keys`` swap interrupted between its two
@@ -295,13 +305,20 @@ class KeyedUpsertSink:
         dict equals ``current()``'s row for the key, ``asDict(
         recursive=True)``: columns of the read path a directory lacks
         are None, maps are dicts, and Spark's INT96 timestamps read as
-        naive UTC, the session time zone.  The scan runs under the
-        commit lock, which every removal or swap of a directory also
-        takes, so no directory vanishes mid-read."""
+        naive UTC, the session time zone.
+
+        Only taking the read path holds the commit lock; the scan runs
+        outside it, counted in ``_readers``, so commits publish while
+        polls read.  A removal or swap of a directory waits for the
+        count to reach zero (``_unread_lock``), so no directory
+        vanishes mid-read."""
         with self._commit:
+            self._unread.wait_for(lambda: not self._removers)
             base_v = max(self._snapshots, default=0)
             path = [self._snapshot_dir(base_v)] if base_v else []
             path += [self._delta_dir(v) for v in self._deltas if v > base_v]
+            self._readers += 1
+        try:
             have = {d: self._columns(d) for d in path}
             # unionByName's column order: base first, then each delta's new ones
             names = dict.fromkeys(n for d in path for n in have[d])
@@ -320,10 +337,29 @@ class KeyedUpsertSink:
                     break
             else:
                 return None
+        finally:
+            with self._commit:
+                self._readers -= 1
+                if not self._readers:
+                    self._unread.notify_all()
         row = dict.fromkeys(names)
         for field in hit.schema:
             row[field.name] = _to_py(hit.column(field.name)[0].as_py(), field.type)
         return row
+
+    @contextlib.contextmanager
+    def _unread_lock(self):
+        """Hold the commit lock with no lookup scanning.  New lookups
+        wait from the moment this is asked for, so the scans in
+        progress are the only ones it waits for."""
+        with self._commit:
+            self._removers += 1
+            try:
+                self._unread.wait_for(lambda: not self._readers)
+                yield
+            finally:
+                self._removers -= 1
+                self._unread.notify_all()
 
     def read_version(self, version: int) -> DataFrame:
         """Time-travel read: the table AS OF version ``version``
@@ -414,9 +450,8 @@ class KeyedUpsertSink:
         order; a column a directory lacks is NULL.  The snapshot is
         written under a hidden ``.v{version}`` name and published by a
         rename, so a crash mid-write leaves nothing a read or a
-        restart sees.  Publishing takes no lock: lookups hold the
-        commit lock while they read, and waiting for it cost as much
-        as the fold itself on the ``POST /p1`` path.
+        restart sees.  Publishing takes no lock: it only adds a
+        directory, which no scan in progress reads.
 
         Driver memory is the tail's distinct keys (at most
         ``compact_every`` x the batch bound, 2048 for the Engine) plus
@@ -466,7 +501,8 @@ class KeyedUpsertSink:
         travel BEFORE the horizon is forfeited (read_version raises
         once its base snapshot is gone), everything at or after it is
         untouched.  Refuses a horizon the on-disk layout cannot serve
-        (no snapshot at or below it would remain)."""
+        (no snapshot at or below it would remain).  The removal waits
+        until no lookup is scanning."""
         if keep_from_version is None:
             keep_from_version = max(
                 (s for s in self._snapshots), default=self._version
@@ -480,7 +516,7 @@ class KeyedUpsertSink:
                 "compact first or raise the horizon"
             )
         anchor = max(anchors, default=0)
-        with self._commit:
+        with self._unread_lock():
             gone = [self._delta_dir(v) for v in self._deltas if v <= anchor]
             gone += [self._snapshot_dir(s) for s in self._snapshots if s < anchor]
             self._deltas = [v for v in self._deltas if v > anchor]
@@ -542,7 +578,7 @@ class KeyedUpsertSink:
                 kept.write.mode("overwrite").parquet(tmp)
             finally:
                 kept.unpersist()
-            with self._commit:  # a lookup never finds d missing
+            with self._unread_lock():  # a lookup never finds d missing
                 os.rename(d, old)
                 os.rename(tmp, d)
             shutil.rmtree(old)

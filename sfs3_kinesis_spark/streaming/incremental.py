@@ -29,6 +29,7 @@ state-store rows instead of Step Functions re-invocations.
 
 from __future__ import annotations
 
+import datetime
 from typing import Callable, Optional, Sequence
 
 import pyarrow as pa
@@ -73,6 +74,14 @@ class IncrementalPipeline:
     costs a job, a shuffle and a second scan of the batch.
     :class:`RetryingIncrementalPipeline` keeps Spark writes: its
     batch joins the requeued backlog and is not bounded.
+
+    The staged plan holds no per-batch value: the events'
+    ``event_time`` is stamped by the driver on the pulled table (one
+    UTC timestamp per micro-batch, taken as the batch commits, a few
+    ms after the trigger starts).  A ``current_timestamp()`` in the
+    plan would become a new literal every batch, so Spark would
+    generate and compile the batch's code afresh each time instead of
+    reusing it from its codegen cache.
     """
 
     def __init__(
@@ -87,17 +96,19 @@ class IncrementalPipeline:
 
     def stage(self, requests: DataFrame) -> DataFrame:
         """The staged projection of ``requests``: the state row, plus
-        the terminal event's ``event_id`` and ``event_time``."""
+        the terminal event's ``event_id``.  It holds no per-batch
+        literal (see the class docstring)."""
         return run_pipeline(requests, self.steps).withColumns(
             {
                 "attempts": F.lit(1).cast("int"),
                 "event_id": terminal_event_id(F.col("txn_id")),
-                "event_time": F.current_timestamp(),
             }
         )
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """Commit one staged micro-batch (see :meth:`stage`)."""
+        """Commit one staged micro-batch (see :meth:`stage`).  The
+        events carry one ``event_time`` for the whole batch, the
+        driver's UTC clock once the rows are pulled."""
         schema = batch_df.schema
         # a FAILED row's later stage structs are NULL though their
         # fields are not nullable: Arrow rejects that unless relaxed
@@ -115,9 +126,15 @@ class IncrementalPipeline:
         # the reverse order would LOSE events whose state row already
         # committed (the replay would see nothing left to do)
         if self.on_events is not None:
-            events = table.select(["txn_id", "status", "event_id", "event_time"])
+            # the type toArrow gives a Spark TimestampType
+            now = pa.scalar(
+                datetime.datetime.now(datetime.timezone.utc), pa.timestamp("us", "UTC")
+            )
+            events = table.select(["txn_id", "status", "event_id"]).append_column(
+                "event_time", pa.repeat(now, table.num_rows)
+            )
             self.on_events(events, epoch_id)
-        state = table.drop_columns(["event_id", "event_time"])
+        state = table.drop_columns(["event_id"])
         self.state_sink.commit_arrow(
             state,
             StructType([f for f in schema if f.name in state.column_names]),

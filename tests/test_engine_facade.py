@@ -143,6 +143,8 @@ def test_hidden_partial_file_is_never_read(spark, tmp_path):
         fh.write(data[: len(data) // 2])
 
     txn = eng.submit('{"foo": true}')
+    # read before the stream starts: it deletes the files it consumed
+    assert [r.txn_id for r in spark.read.parquet(eng.requests_dir).collect()] == [txn]
     q = eng.start()
     try:
         assert eng.await_completion(txn, timeout_s=60) == "SUCCEEDED"
@@ -152,7 +154,9 @@ def test_hidden_partial_file_is_never_read(spark, tmp_path):
         assert {r.txn_id for r in eng.events().collect()} == {txn}
     finally:
         eng.stop()
-    assert [r.txn_id for r in spark.read.parquet(eng.requests_dir).collect()] == [txn]
+    # the stream never lists a hidden file, so it never deletes one either
+    names = set(os.listdir(eng.requests_dir))
+    assert {".part-0xhidden.parquet", ".part-0xpartial.parquet"} <= names
 
 
 def test_status_and_state_reads_run_no_spark_job(spark, tmp_path):
@@ -342,3 +346,117 @@ def test_dead_stream_fails_held_await_fast(spark, tmp_path):
         assert time.monotonic() - t0 < 5
     finally:
         eng.stop()
+
+
+def _compiles(spark) -> int:
+    """Janino compiles the JVM has run so far (Spark's codegen metrics)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def test_steady_micro_batches_compile_no_code(spark, tmp_path):
+    """Once the first micro-batch has run, later batches reuse its
+    generated code: three more batches add no Janino compile.  Every
+    event carries a non-null ``event_time`` no earlier than its
+    submit."""
+    import time
+
+    eng = Engine(spark, str(tmp_path / "eng"))
+    t0 = time.time()
+    first = eng.submit('{"foo": true}')
+    eng.start()
+    try:
+        assert eng.await_completion(first, timeout_s=60) == "SUCCEEDED"
+        compiles0, version0 = _compiles(spark), eng._sink.version
+        submitted = {first: t0}
+        for _ in range(3):
+            t = time.time()
+            txns = [eng.submit('{"foo": true}') for _ in range(2)]
+            submitted.update(dict.fromkeys(txns, t))
+            assert {eng.await_completion(x, timeout_s=60) for x in txns} == {"SUCCEEDED"}
+        compiles = _compiles(spark) - compiles0
+        batches = eng._sink.version - version0
+    finally:
+        eng.stop()
+    assert batches >= 3
+    assert compiles == 0
+    ev = eng.events().collect()
+    assert sorted(r.txn_id for r in ev) == sorted(submitted)
+    for r in ev:
+        assert r.event_time is not None
+        assert r.event_time.timestamp() >= submitted[r.txn_id] - 1e-6
+
+
+def _wait_gone(directory: str, names: set[str], timeout_s: float = 10.0) -> set[str]:
+    """Poll until none of ``names`` is in ``directory`` (Spark's
+    cleaner deletes asynchronously); return those still there."""
+    import os
+    import time
+
+    deadline = time.monotonic() + timeout_s
+    while (left := names & set(os.listdir(directory))) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    return left
+
+
+def test_consumed_request_files_leave_the_ingest_directory(spark, tmp_path):
+    """Once a batch has committed, the stream deletes the request files
+    it read (when it plans the next batch), so the ingest directory
+    holds only files in flight; hidden files stay untouched."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    eng = Engine(spark, str(tmp_path / "eng"))
+    hidden = os.path.join(eng.requests_dir, ".part-0xhidden.parquet")
+    pq.write_table(pa.table({"txn_id": ["0xhidden"], "request": ["{}"]}), hidden)
+    with open(hidden, "rb") as fh:
+        hidden_bytes = fh.read()
+    first = [eng.submit('{"foo": true}') for _ in range(3)]
+    eng.start()
+    try:
+        assert {eng.await_completion(t, timeout_s=60) for t in first} == {"SUCCEEDED"}
+        later = eng.submit('{"foo": true}')
+        assert eng.await_completion(later, timeout_s=60) == "SUCCEEDED"
+        assert _wait_gone(eng.requests_dir, {f"part-{t}.parquet" for t in first}) == set()
+    finally:
+        eng.stop()
+    with open(hidden, "rb") as fh:
+        assert fh.read() == hidden_bytes
+    assert eng.status("0xhidden") is None
+    assert {eng.state_document(t)["request"] for t in first} == {'{"foo": true}'}
+
+
+def test_restarted_engine_rereads_no_committed_request(spark, tmp_path):
+    """An Engine restarted over the same root reads none of the
+    requests the first run committed, the last batch's files (not yet
+    deleted at the stop) included; new submits succeed and the event
+    log holds exactly one event per txn."""
+    import os
+
+    root = str(tmp_path / "eng")
+    eng = Engine(spark, root)
+    before = [eng.submit('{"foo": true}') for _ in range(3)]
+    eng.start()
+    try:
+        assert {eng.await_completion(t, timeout_s=60) for t in before} == {"SUCCEEDED"}
+        _drain(eng, before)  # the batch's commit-log entry is written
+    finally:
+        eng.stop()
+    leftovers = {f"part-{t}.parquet" for t in before}
+    assert leftovers <= set(os.listdir(eng.requests_dir))
+
+    again = Engine(spark, root)
+    again.start()
+    try:
+        after = [again.submit('{"bar": 1}') for _ in range(2)]
+        assert {again.await_completion(t, timeout_s=60) for t in after} == {"SUCCEEDED"}
+        _statuses, rows = _drain(again, after)
+        assert _wait_gone(again.requests_dir, leftovers) == set()
+    finally:
+        again.stop()
+    assert sum(rows) == 2
+    assert {again.status(t) for t in before + after} == {"SUCCEEDED"}
+    ev = [r.txn_id for r in again.events().collect()]
+    assert sorted(ev) == sorted(before + after)

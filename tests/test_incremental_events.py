@@ -820,3 +820,122 @@ def test_apply_batch_that_compacts_runs_only_its_write_jobs(spark, tmp_path):
     sink.apply_batch(b1, 1)
     assert sink._snapshots == [2]
     assert _next_job_id(spark) - jobs0 == write_jobs >= 1
+
+
+#: Catalyst's clock expressions: each becomes a new literal per query
+_CLOCK_EXPRS = ("CurrentTimestamp", "Now", "CurrentDate", "LocalTimestamp", "CurrentBatchTimestamp")
+
+
+def _clock_exprs(df) -> set[str]:
+    """The clock expressions in ``df``'s analyzed plan."""
+    import json
+
+    found = set()
+
+    def walk(node):
+        if isinstance(node, dict):
+            cls = node.get("class", "")
+            if cls.rpartition(".")[2] in _CLOCK_EXPRS:
+                found.add(cls.rpartition(".")[2])
+            for v in node.values():
+                walk(v)
+        elif isinstance(node, list):
+            for v in node:
+                walk(v)
+
+    walk(json.loads(df._jdf.queryExecution().analyzed().toJSON()))
+    return found
+
+
+def test_staged_plan_holds_no_per_batch_literal(spark, tmp_path):
+    """stage() plans no clock expression: Spark would turn it into a
+    new literal every micro-batch and generate and compile the batch's
+    code afresh.  The check itself sees one (control)."""
+    pipe = _poisoned_pipeline(spark, str(tmp_path / "store"))
+    staged = pipe.stage(_requests(spark, range(2)))
+    assert _clock_exprs(staged) == set()
+    assert "event_time" not in staged.columns
+    assert _clock_exprs(staged.withColumn("t", F.current_timestamp())) == {"CurrentTimestamp"}
+
+
+def test_process_batch_stamps_one_driver_time_per_batch(spark, tmp_path):
+    """The events of one micro-batch carry one non-null UTC
+    ``event_time``, taken by the driver after the call starts; the
+    state rows carry none."""
+    import time
+
+    import pyarrow as pa
+
+    pipe = _poisoned_pipeline(spark, str(tmp_path / "store"))
+    tables = []
+    pipe.on_events = lambda table, epoch: tables.append(table)
+    t0 = time.time()
+    pipe.process_batch(pipe.stage(_requests(spark, range(3))), 0)
+    t1 = time.time()
+    (events,) = tables
+    assert events.column_names == ["txn_id", "status", "event_id", "event_time"]
+    assert events.schema.field("event_time").type == pa.timestamp("us", "UTC")
+    (stamp,) = set(events.column("event_time").to_pylist())
+    assert t0 - 1e-6 <= stamp.timestamp() <= t1
+    assert "event_time" not in pipe.state_sink.lookup("0")
+
+
+def test_lookup_scan_blocks_no_commit_and_vacuum_waits_for_it(spark, tmp_path, monkeypatch):
+    """A lookup holds the commit lock only to take its read path: while
+    one is held inside its scan, a commit still publishes and wakes its
+    waiters within 1 s, a vacuum waits for the scan to end, and the
+    lookup returns the exact row."""
+    import os
+    import threading
+    import time
+
+    import pyarrow as pa
+
+    from sfs3_kinesis_spark.sources import sinks
+
+    sink = KeyedUpsertSink(spark, str(tmp_path / "st"), key_col="k", compact_every=2)
+    schema = spark.createDataFrame([], "k string, val int").schema
+
+    def commit(k, val, epoch):
+        table = pa.table({"k": [k], "val": pa.array([val], pa.int32())})
+        sink.commit_arrow(table, schema, epoch)
+
+    commit("k0", 0, 0)
+    commit("k1", 1, 1)  # folded into v2
+    assert sink._snapshots == [2]
+    entered, release = threading.Event(), threading.Event()
+    real_read = sinks.pq.read_table
+
+    def held_read(*args, **kw):
+        entered.set()
+        release.wait(30)
+        return real_read(*args, **kw)
+
+    monkeypatch.setattr(sinks.pq, "read_table", held_read)
+    got, removed = {}, []
+    reader = threading.Thread(target=lambda: got.update(row=sink.lookup("k0")))
+    vacuum = threading.Thread(target=lambda: removed.append(sink.vacuum()))
+    reader.start()
+    try:
+        assert entered.wait(10)
+        woke = threading.Event()
+        waiter = threading.Thread(target=lambda: sink.wait_for_version(3, 10) and woke.set())
+        waiter.start()
+        t0 = time.monotonic()
+        committer = threading.Thread(target=commit, args=("k2", 2, 2))
+        committer.start()
+        committer.join(1)
+        assert not committer.is_alive() and sink.version == 3
+        assert woke.wait(max(0.0, 1 - (time.monotonic() - t0)))
+        vacuum.start()
+        vacuum.join(0.5)
+        assert vacuum.is_alive() and not removed
+        assert os.path.isdir(os.path.join(sink.path, "d1"))
+    finally:
+        release.set()
+        reader.join(10)
+        if vacuum.ident is not None:
+            vacuum.join(10)
+    assert got["row"] == {"k": "k0", "val": 0}
+    assert removed == [2] and not os.path.isdir(os.path.join(sink.path, "d1"))
+    assert sink.lookup("k2") == {"k": "k2", "val": 2}
