@@ -153,7 +153,7 @@ math (`scalar_math_lineitem`), JSON (`scalar_json_events`), array
 | W4 windows | tumbling/sliding/session (`streaming/windows.py`) | corpus twins + streaming tests |
 | W5 stateful timeout | `correlate` ProcessingTimeTimeout | `test_streaming_correlate.py::test_correlation_timeout_and_late_orphan` |
 | W6 delivery/consistency | checkpoint restart + idempotent keyed MERGE + event_id dedup keys | `test_streaming_windows.py::test_incremental_pipeline_checkpoint_restart` |
-| W7 per-key ordering | keyed state serializes per-txn; in-group event-time sort | `correlate._correlate_group` |
+| W7 per-key ordering | keyed state serializes per-txn; in-group (txn, event-time) sort | `correlate._correlate_key_group` |
 | W8 backpressure | `maxFilesPerTrigger` / trigger pacing | `test_sources.py::test_rate_limited_stream_batches` |
 
 Custom stateful operators beyond the reference's surface (each with

@@ -19,7 +19,9 @@ import contextlib
 import datetime
 import os
 import shutil
+import tempfile
 import threading
+import time
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -62,14 +64,56 @@ def run_stateful_to_memory(
 ):
     """Start a stateful stream (processing-time timers) into a memory
     sink with a bounded trigger cadence; caller drains via
-    :func:`wait_for_rows`."""
-    return (
+    :func:`wait_for_rows` and calls ``stop()`` on the returned query.
+
+    The query checkpoints into a directory of its own, which ``stop()``
+    removes once the query has terminated and the tasks of the batch it
+    cancelled have ended.  (Spark's own temporary checkpoint is deleted
+    by ``stop()`` while those tasks may still be committing state into
+    it.)"""
+    checkpoint = tempfile.mkdtemp(prefix=f"{name}-checkpoint-")
+    query = (
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
         .trigger(processingTime=f"{trigger_ms} milliseconds")
         .start()
     )
+    return _OwnedCheckpointQuery(query, checkpoint, stream_df.sparkSession.sparkContext)
+
+
+class _OwnedCheckpointQuery:
+    """A ``StreamingQuery`` whose ``stop()`` also removes its
+    checkpoint directory, after the query's last tasks have ended."""
+
+    #: longest wait for the cancelled micro-batch's tasks to end
+    STOP_WAIT_S = 30.0
+
+    def __init__(self, query, checkpoint: str, sc):
+        self._query = query
+        self._checkpoint = checkpoint
+        self._sc = sc
+
+    def __getattr__(self, attr):
+        return getattr(self._query, attr)
+
+    def stop(self) -> None:
+        try:
+            self._query.stop()
+            # stop() returns once the query's thread has ended; the
+            # tasks of the batch it cancelled end on their own time.
+            # Each micro-batch runs in the job group named by the runId.
+            tracker = self._sc.statusTracker()
+            jobs = sorted(tracker.getJobIdsForGroup(str(self._query.runId)))[-2:]
+            stages = [s for j in jobs if (info := tracker.getJobInfo(j)) for s in info.stageIds]
+            deadline = time.monotonic() + self.STOP_WAIT_S
+            while time.monotonic() < deadline and any(
+                (info := tracker.getStageInfo(s)) and info.numActiveTasks for s in stages
+            ):
+                time.sleep(0.05)
+        finally:
+            shutil.rmtree(self._checkpoint, ignore_errors=True)
 
 
 def wait_for_rows(
@@ -77,8 +121,6 @@ def wait_for_rows(
 ) -> int:
     """Poll ``sql`` (must return one count column) until it reaches
     ``min_rows`` or the deadline passes; return the final count."""
-    import time
-
     deadline = time.time() + timeout_s
     n = 0
     while time.time() < deadline:

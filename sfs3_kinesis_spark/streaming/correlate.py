@@ -12,26 +12,46 @@ Reference behavior (``/root/reference/svcsample/svckinesis.js``):
 * requests time out after 20 s and are evicted, so their late
   events become orphans (``:157,80-88``).
 
-Engine form: one keyed stateful operator over the *union* of the
-request stream and the event stream (same key: txn_id), implemented
-with ``applyInPandasWithState`` and a processing-time timeout.
+Engine form: one stateful operator over the *union* of the request
+stream and the event stream, implemented with
+``applyInPandasWithState``.
 (Spark 4's ``transformWithStateInPandas`` is the successor API with
 per-key timers and state evolution; it requires a working
-``google.protobuf`` runtime, absent in this container, so the engine
-ships the applyInPandasWithState form — semantics are identical for
-this operator.)
-Keyed state serializes per-txn updates (the reference's per-shard
-ordering guarantee, W7) while scaling horizontally across keys —
-state lives in the state store, partitioned by key, so a 1000-node
-cluster holds 1000× the pending requests with zero code change.
+``google.protobuf`` runtime, which the engine's toolchain lacks, so
+the engine ships the applyInPandasWithState form — semantics are
+identical for this operator.)
+
+Key groups.  ``applyInPandasWithState`` makes one Python call per
+grouping key, and each call pays a fixed framework cost (building the
+``GroupState``, an Arrow→pandas conversion per column, writing the
+state back), so the operator does not group by txn_id.  It groups by
+``_kg = pmod(xxhash64(txn_id), KEY_GROUPS)``: a group's state holds
+its pending requests as parallel arrays (txn_id, submitted_at_ms,
+deadline_ms), and one vectorized body runs the per-txn state machine
+for every txn of the group, so the call cost is paid once per group
+per batch, not once per txn.  Per txn the semantics are Spark's per-
+key ones: rows of one txn are ordered by event time (W7), an event
+completes the txn's pending request if the row before it is that
+request, and a pending txn with no rows in a batch is evicted once
+its deadline is below the clock; the group's timer sits on its
+earliest pending deadline.  The contract this buys:
+
+* ``KEY_GROUPS`` caps the operator's parallelism: at most that many
+  groups, so that many tasks' worth of state, however large the
+  cluster;
+* each batch rewrites the pending arrays of every group it touches;
+* ``KEY_GROUPS`` and the hash are fixed for a checkpoint's whole life
+  (as Flink's max parallelism is): a different value routes a txn to
+  a group whose state does not hold it.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -46,12 +66,18 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
+#: one group's pending requests, as parallel arrays
 STATE_SCHEMA = T.StructType(
     [
-        T.StructField("submitted_at_ms", T.LongType()),
-        T.StructField("timeout_ms", T.LongType()),
+        T.StructField("txn_id", T.ArrayType(T.StringType())),
+        T.StructField("submitted_at_ms", T.ArrayType(T.LongType())),
+        T.StructField("deadline_ms", T.ArrayType(T.LongType())),
     ]
 )
+
+#: key groups of the operator: its parallelism cap, fixed for a
+#: checkpoint's life (a txn's group is part of its state's address)
+KEY_GROUPS = 64
 
 DEFAULT_TIMEOUT_MS = 20_000  # the reference's 20 s request budget (pollingsvc.js:133)
 
@@ -77,121 +103,115 @@ def unioned_input(requests: DataFrame, events: DataFrame) -> DataFrame:
     return r.unionByName(e)
 
 
-def _http_code(status: str) -> int:
-    # reference routing: SUCCEEDED → 200, anything else → 400
-    # (svckinesis.js:97-104)
-    return 200 if status == "SUCCEEDED" else 400
+def key_group(txn_id: Column) -> Column:
+    """The key group a txn's state lives in."""
+    return F.pmod(F.xxhash64(txn_id), F.lit(KEY_GROUPS))
 
 
-def _make_correlate_group(event_time_timers: bool):
-    """Build the keyed state-machine body with the timer axis baked
-    into the closure (a module global would not survive the worker
-    re-import that cloudpickle's deserialization performs):
-
-    * ``event_time_timers=False`` — processing-time budget, the
-      reference's literal wall-clock 20 s timeout
-      (pollingsvc.js:133); evictions depend on when batches run.
-    * ``event_time_timers=True`` — the deadline lives on the EVENT-
-      TIME axis (``submitted_at + timeout``) and fires when the
-      WATERMARK passes it: same inputs always produce the same
-      evictions, so a checkpoint replay or backfill reproduces the
-      round bit-for-bit — the form a deterministic pipeline wants.
-    """
-
-    def _correlate_group(
-        key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        return _correlate_group_impl(key, pdfs, state, event_time_timers)
-
-    return _correlate_group
-
-
-def _correlate_group_impl(
-    key: Tuple[str],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    _EVENT_TIME_TIMERS: bool = False,
+def _correlate_key_group(
+    pdfs: Iterator[pd.DataFrame], state: GroupState, event_time: bool
 ) -> Iterator[pd.DataFrame]:
-    txn_id = key[0]
-    out: list[dict] = []
+    """One key group's batch: the per-txn state machine, vectorized
+    over every txn of the group.
 
-    if state.hasTimedOut:
-        if not state.exists:
-            # a timer can outlive its request: the pandas GroupState
-            # bridge does not clear a registered timeout when
-            # ``remove()`` runs in the same invocation that armed it
-            # (observed with EventTimeTimeout: a matched-and-removed
-            # request still fired later).  No pending state = nothing
-            # was evicted — suppress the spurious timeout row.
-            state.remove()
-            return
-        # evict the pending request; its response was never completed
-        # (svckinesis.js:80-88) — late events will be orphans
-        state.remove()
+    The clock is the batch's processing time, or with ``event_time``
+    the watermark.  A request's deadline is ``clock + timeout_ms``
+    (the reference's wall-clock budget, pollingsvc.js:133), or with
+    ``event_time`` ``submitted_at + timeout_ms``, moved to just past
+    the watermark when it is already at or under it (a backfill can
+    advance the watermark by more than the budget between batches).
+    """
+    now = state.getCurrentWatermarkMs() if event_time else state.getCurrentProcessingTimeMs()
+    p_txn, p_sub, p_dl = state.get if state.exists else ([], [], [])
+    n_p = len(p_txn)
+    rows = pd.concat(list(pdfs), ignore_index=True)  # empty on a timed-out call
+    n_b = len(rows)
+    n = n_p + n_b
+
+    # the pending entries first, then the batch
+    txn = np.concatenate([np.asarray(p_txn, dtype=object), rows["txn_id"].to_numpy(object)])
+    is_req = np.ones(n, dtype=bool)
+    ts = np.asarray(p_sub, dtype=np.int64)
+    timeout = np.zeros(n, dtype=np.int64)
+    status = np.full(n, None, dtype=object)
+    deadline = np.concatenate([np.asarray(p_dl, dtype=np.int64), np.full(n_b, -1, dtype=np.int64)])
+    if n_b:
+        is_req[n_p:] = (rows["kind"] == "request").to_numpy()
+        ts = np.concatenate([ts, rows["ts"].to_numpy("datetime64[ns]").view(np.int64) // 1_000_000])
+        timeout[n_p:] = rows["timeout_ms"].to_numpy(np.int64, na_value=0)
+        status[n_p:] = rows["status"].to_numpy(object)
+    batch = np.arange(n) >= n_p
+    # stable sort by (txn, pending first, ts): each txn's rows in
+    # event-time order (W7), ties in arrival order
+    codes = pd.factorize(txn)[0]
+    order = np.lexsort((ts, batch, codes))
+    codes, txn, is_req, ts, timeout, status, deadline, batch = (
+        a[order] for a in (codes, txn, is_req, ts, timeout, status, deadline, batch)
+    )
+
+    same_prev = np.zeros(n, dtype=bool)
+    same_prev[1:] = codes[1:] == codes[:-1]
+    last = np.ones(n, dtype=bool)
+    last[:-1] = ~same_prev[1:]
+    # an event completes the txn's pending request iff the row before
+    # it, for the same txn, is a request (svckinesis.js:173-185);
+    # otherwise the txn is unknown or already answered: an orphan the
+    # reference logs and drops (:178-181), emitted as an accountable row
+    matched = np.zeros(n, dtype=bool)
+    matched[1:] = same_prev[1:] & is_req[:-1]
+    matched &= ~is_req
+    latency = np.zeros(n, dtype=np.int64)
+    latency[1:] = np.maximum(ts[1:] - ts[:-1], 0)
+
+    # the txn's last row, if a request, is its pending entry; one with
+    # no row in this batch keeps its deadline and is evicted once that
+    # is below the clock (svckinesis.js:80-88): its late events orphan
+    pending = last & is_req
+    fresh = pending & batch
+    if event_time:
+        deadline[fresh] = np.maximum(ts[fresh] + timeout[fresh], now + 1)
+    else:
+        deadline[fresh] = now + timeout[fresh]
+    timed_out = pending & ~batch & (deadline < now)
+    pending &= ~timed_out
+
+    emit = ~is_req | timed_out
+    if emit.any():
+        st = status[emit]
+        ok = matched[emit]
         yield pd.DataFrame(
-            [{"txn_id": txn_id, "outcome": "timeout", "status": None, "http_code": None, "latency_ms": None}]
+            {
+                "txn_id": txn[emit],
+                "outcome": np.where(ok, "matched", np.where(timed_out[emit], "timeout", "orphan")),
+                "status": st,
+                # reference routing: SUCCEEDED → 200, anything else →
+                # 400 (svckinesis.js:97-104)
+                "http_code": pd.Series(np.where(st == "SUCCEEDED", 200, 400), dtype="Int32").where(ok),
+                "latency_ms": pd.Series(latency[emit], dtype="Int64").where(ok),
+            }
         )
-        return
 
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    rows = rows.sort_values("ts", kind="stable")  # per-key event-time order (W7)
+    if pending.any():
+        dl = deadline[pending]
+        state.update((txn[pending].tolist(), ts[pending].tolist(), dl.tolist()))
+        # Spark calls a group again when its timer is below the clock
+        # and clears the timer on every call, so re-arm it on the
+        # earliest deadline.  ``setTimeoutDuration`` refuses 0: a
+        # deadline equal to the batch time arms 1 ms later.
+        if event_time:
+            state.setTimeoutTimestamp(int(dl.min()))
+        else:
+            state.setTimeoutDuration(max(int(dl.min()) - now, 1))
+    else:
+        state.remove()
 
-    pending = state.get if state.exists else None  # (submitted_at_ms, timeout_ms)
 
-    for row in rows.itertuples(index=False):
-        if row.kind == "request":
-            submitted_ms = int(row.ts.value // 1_000_000)
-            timeout_ms = int(row.timeout_ms)
-            pending = (submitted_ms, timeout_ms)
-            state.update(pending)
-            if _EVENT_TIME_TIMERS:
-                # deadline on the EVENT-TIME axis: fires when the
-                # watermark passes submitted_at + budget — replay-
-                # deterministic (same inputs -> same evictions).
-                # Clamp to just past the CURRENT watermark: a backfill
-                # can advance the watermark by more than the budget
-                # between batches, and setTimeoutTimestamp raises on a
-                # deadline at/under it (the row passed the late filter
-                # against the PREVIOUS batch's watermark) — an
-                # already-past-due request times out on the next
-                # watermark tick instead of killing the query
-                deadline_ms = submitted_ms + timeout_ms
-                wm_ms = state.getCurrentWatermarkMs()
-                if deadline_ms <= wm_ms:
-                    deadline_ms = wm_ms + 1
-                state.setTimeoutTimestamp(deadline_ms)
-            else:
-                state.setTimeoutDuration(timeout_ms)
-        else:  # event
-            if pending is not None:
-                submitted_ms = pending[0]
-                event_ms = int(row.ts.value // 1_000_000)
-                out.append(
-                    {
-                        "txn_id": txn_id,
-                        "outcome": "matched",
-                        "status": row.status,
-                        "http_code": _http_code(row.status),
-                        "latency_ms": max(event_ms - submitted_ms, 0),
-                    }
-                )
-                pending = None
-                state.remove()
-            else:
-                # unknown/evicted txn — the reference logs & drops
-                # (svckinesis.js:178-181); we emit an accountable row
-                out.append(
-                    {
-                        "txn_id": txn_id,
-                        "outcome": "orphan",
-                        "status": row.status,
-                        "http_code": None,
-                        "latency_ms": None,
-                    }
-                )
+def _correlate_processing_time(key, pdfs, state):
+    return _correlate_key_group(pdfs, state, event_time=False)
 
-    if out:
-        yield pd.DataFrame(out)
+
+def _correlate_event_time(key, pdfs, state):
+    return _correlate_key_group(pdfs, state, event_time=True)
 
 
 def outcome_metrics(out: DataFrame, name: str = "correlate_metrics") -> DataFrame:
@@ -262,9 +282,9 @@ def correlate(requests: DataFrame, events: DataFrame) -> DataFrame:
     :data:`OUTPUT_SCHEMA`; matched/orphan rows are emitted as their
     events arrive, timeout rows when the state clock fires.
     """
-    merged = unioned_input(requests, events)
-    return merged.groupBy("txn_id").applyInPandasWithState(
-        _make_correlate_group(event_time_timers=False),
+    merged = unioned_input(requests, events).withColumn("_kg", key_group(F.col("txn_id")))
+    return merged.groupBy("_kg").applyInPandasWithState(
+        _correlate_processing_time,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
@@ -291,13 +311,23 @@ def correlate_event_time(
       seconds" means twenty seconds of STREAM time, not of operator
       wall time.
 
+    The timer is per key group: it sits on the group's earliest
+    pending deadline, and when the watermark passes it the group's
+    call evicts exactly the txns whose own deadline is below the
+    watermark.  Which txns a watermark evicts is still a function of
+    the input alone, so evictions stay replay-deterministic.
+
     ``watermark`` is the lateness allowance on the unioned input —
     state size is bounded by (timeout + watermark) × arrival rate,
     the same budget arithmetic the stream-stream join form uses.
     """
-    merged = unioned_input(requests, events).withWatermark("ts", watermark)
-    return merged.groupBy("txn_id").applyInPandasWithState(
-        _make_correlate_group(event_time_timers=True),
+    merged = (
+        unioned_input(requests, events)
+        .withWatermark("ts", watermark)
+        .withColumn("_kg", key_group(F.col("txn_id")))
+    )
+    return merged.groupBy("_kg").applyInPandasWithState(
+        _correlate_event_time,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
