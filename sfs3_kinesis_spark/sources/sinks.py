@@ -15,6 +15,7 @@
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import datetime
 import os
@@ -70,8 +71,10 @@ def run_stateful_to_memory(
     removes once the query has terminated and the tasks of the batch it
     cancelled have ended.  (Spark's own temporary checkpoint is deleted
     by ``stop()`` while those tasks may still be committing state into
-    it.)"""
+    it.)  A checksum write of a cancelled task can still land after
+    that, so the directory is removed again when the process exits."""
     checkpoint = tempfile.mkdtemp(prefix=f"{name}-checkpoint-")
+    _OWNED_CHECKPOINTS.add(checkpoint)
     query = (
         stream_df.writeStream.format("memory")
         .queryName(name)
@@ -83,6 +86,16 @@ def run_stateful_to_memory(
     return _OwnedCheckpointQuery(query, checkpoint, stream_df.sparkSession.sparkContext)
 
 
+#: checkpoint directories of the queries this process started
+_OWNED_CHECKPOINTS: set[str] = set()
+
+
+@atexit.register
+def _remove_owned_checkpoints() -> None:
+    for checkpoint in _OWNED_CHECKPOINTS:
+        shutil.rmtree(checkpoint, ignore_errors=True)
+
+
 class _OwnedCheckpointQuery:
     """A ``StreamingQuery`` whose ``stop()`` also removes its
     checkpoint directory, after the query's last tasks have ended."""
@@ -92,7 +105,7 @@ class _OwnedCheckpointQuery:
 
     def __init__(self, query, checkpoint: str, sc):
         self._query = query
-        self._checkpoint = checkpoint
+        self.checkpoint = checkpoint
         self._sc = sc
 
     def __getattr__(self, attr):
@@ -113,7 +126,7 @@ class _OwnedCheckpointQuery:
             ):
                 time.sleep(0.05)
         finally:
-            shutil.rmtree(self._checkpoint, ignore_errors=True)
+            shutil.rmtree(self.checkpoint, ignore_errors=True)
 
 
 def wait_for_rows(

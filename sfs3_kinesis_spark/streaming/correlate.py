@@ -39,7 +39,11 @@ earliest pending deadline.  The contract this buys:
 * ``KEY_GROUPS`` caps the operator's parallelism: at most that many
   groups, so that many tasks' worth of state, however large the
   cluster;
-* each batch rewrites the pending arrays of every group it touches;
+* each batch rewrites the pending arrays of every group it touches, so
+  a touched group's cost grows with its pending txns, not only with
+  its rows in the batch.  The saving needs many txns per group in a
+  batch; with a few txns per batch a group call carries one txn, as a
+  per-txn call did, plus the rewrite;
 * ``KEY_GROUPS`` and the hash are fixed for a checkpoint's whole life
   (as Flink's max parallelism is): a different value routes a txn to
   a group whose state does not hold it.

@@ -235,9 +235,7 @@ def test_groups_hold_many_pending_requests_and_each_times_out_once(spark, tmp_pa
     request times out exactly once and the state empties.  Stopping the
     query removes its checkpoint."""
     import datetime as dt
-    import glob
     import os
-    import tempfile
 
     n = 500
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -266,10 +264,10 @@ def test_groups_hold_many_pending_requests_and_each_times_out_once(spark, tmp_pa
             time.sleep(0.2)
         rows = spark.sql("SELECT txn_id, outcome FROM corr_groups").collect()
         progress = q.recentProgress
-        assert glob.glob(os.path.join(tempfile.gettempdir(), "corr_groups-checkpoint-*"))
+        assert os.path.isdir(q.checkpoint)
     finally:
         q.stop()
-    assert not glob.glob(os.path.join(tempfile.gettempdir(), "corr_groups-checkpoint-*"))
+    assert not os.path.exists(q.checkpoint)
 
     loaded = [p for p in progress if p["numInputRows"] == n]
     assert loaded, "no micro-batch read the 500 requests"
