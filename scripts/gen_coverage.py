@@ -158,8 +158,8 @@ math (`scalar_math_lineitem`), JSON (`scalar_json_events`), array
 
 Custom stateful operators beyond the reference's surface (each with
 a value-verified batch twin or a bit-exact recompute pin):
-`streaming/correlate.py` (T12 state machine, both timeout kinds,
-failover resolve), `streaming/debounce.py` (per-key emission-anchored
+`streaming/correlate.py` (T12 state machine, processing-time
+timeouts), `streaming/debounce.py` (per-key emission-anchored
 throttle), `streaming/neardup.py` (near-dup gate vs persisted
 signature index — idempotent epoch-keyed writes, selective
 band-pruned probe, bucket truncation for boilerplate bands),
@@ -173,7 +173,7 @@ mergeable bucket counts per key + exact integer quantile reads —
 matches the batch twin under per-key-ordered arrival, quantile rule
 property-tested against the ceiling-rank pick), the streaming drift
 gate and ingest-time decontamination (`operators/text.py` twins),
-and `streaming/join.py` stream-stream joins.
+and the `streaming/join.py` stream-stream join.
 
 ## §2.11 UDF surface
 

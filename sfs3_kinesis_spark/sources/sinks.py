@@ -1,6 +1,7 @@
 """Sinks.
 
-* ``run_to_memory`` — memory sink for tests (synchronous drain).
+* ``run_stateful_to_memory`` / ``wait_for_rows`` — a stateful stream
+  into a memory sink, drained by polling (tests and the bench).
 * ``KeyedUpsertSink`` — the engine's process-state store: keyed
   whole-row upsert per micro-batch via ``foreachBatch``, the Spark
   form of the reference's whole-document S3 PUT
@@ -42,22 +43,6 @@ from pyspark.sql.types import (
 
 #: rows per record batch a compaction streams, and per row group it writes
 FOLD_ROWS = 65536
-
-
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
-    """Start ``stream_df`` into a memory sink, drain all available
-    input synchronously, and return the query (caller reads
-    ``SELECT * FROM <name>`` and stops the query).
-
-    Only for stateless / event-time streams.  For stateful operators
-    with processing-time timeouts use :func:`run_stateful_to_memory` +
-    :func:`wait_for_rows` — with ``ProcessingTimeTimeout`` the engine
-    schedules a micro-batch every trigger to advance the timer clock,
-    so ``processAllAvailable`` never observes an idle source.
-    """
-    q = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode).start()
-    q.processAllAvailable()
-    return q
 
 
 def run_stateful_to_memory(
@@ -443,19 +428,16 @@ class KeyedUpsertSink:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        d = self._delta_dir(next_version)
-        self._schemas[d] = delta.schema
-        delta.write.mode("overwrite").parquet(d)
-        self._publish(next_version)
+        self._commit_delta(
+            next_version, delta.schema, lambda hidden: delta.write.parquet(hidden)
+        )
 
     def commit_arrow(self, table: pa.Table, schema: StructType, epoch_id: int) -> None:
         """Commit a batch already on the driver (the Engine's bounded
         micro-batch) with pyarrow: no Spark job.  ``schema`` is the
         batch's Spark schema, recorded for table reads.
 
-        The last row of a key in ``table`` wins.  The delta is written
-        under a hidden ``.d{v}`` name, which neither the version scan
-        nor a restart reads, and published whole by a rename."""
+        The last row of a key in ``table`` wins."""
         next_version = self._version + 1
         keys = table.column(self.key_col).to_pylist()
         last = {k: i for i, k in enumerate(keys)}
@@ -465,24 +447,34 @@ class KeyedUpsertSink:
         table = table.append_column(
             "_epoch", pa.array([int(epoch_id)] * n, pa.int32())
         ).append_column("_v", pa.array([next_version] * n, pa.int32()))
-        d = self._delta_dir(next_version)
+
+        def write(hidden: str) -> None:
+            os.makedirs(hidden)
+            pq.write_table(table, os.path.join(hidden, "part-0.parquet"))
+
+        self._commit_delta(
+            next_version,
+            StructType(
+                schema.fields
+                + [
+                    StructField("_epoch", IntegerType(), False),
+                    StructField("_v", IntegerType(), False),
+                ]
+            ),
+            write,
+        )
+
+    def _commit_delta(self, version: int, schema: StructType, write) -> None:
+        """Commit delta ``d{version}``: ``write(hidden)`` writes it under
+        a hidden ``.d{version}`` name, which neither the version scan
+        nor a restart reads, and a rename publishes it whole.  Then
+        wake the waiters, and compact on the cadence."""
+        d = self._delta_dir(version)
         hidden = os.path.join(self.path, "." + os.path.basename(d))
         shutil.rmtree(hidden, ignore_errors=True)  # a crashed commit's leftover
-        os.makedirs(hidden)
-        pq.write_table(table, os.path.join(hidden, "part-0.parquet"))
-        self._schemas[d] = StructType(
-            schema.fields
-            + [
-                StructField("_epoch", IntegerType(), False),
-                StructField("_v", IntegerType(), False),
-            ]
-        )
+        write(hidden)
+        self._schemas[d] = schema
         os.rename(hidden, d)
-        self._publish(next_version)
-
-    def _publish(self, version: int) -> None:
-        """Make the written delta ``d{version}`` readable, wake the
-        waiters, and compact on the cadence."""
         with self._commit:
             self._deltas.append(version)
             self._version = version
@@ -644,9 +636,6 @@ class KeyedUpsertSink:
             # serve the OLD listing to the next read (FILE_NOT_EXIST)
             self.spark.catalog.refreshByPath(self.path)
         return removed
-
-    def writer(self, stream_df: DataFrame):
-        return stream_df.writeStream.foreachBatch(self.apply_batch).outputMode("update")
 
 
 def all_nullable(t: DataType) -> DataType:

@@ -4,8 +4,7 @@ Production source is Kinesis (the reference's notification stream,
 ``serverless.yml:160-164``) via the Spark Kinesis connector — gated
 behind an import/availability check since the connector jar is not
 in this container.  Tests and local runs use file streams (exactly
-the replay semantics of a shard read from TRIM_HORIZON) and the
-rate source.
+the replay semantics of a shard read from TRIM_HORIZON).
 """
 
 from __future__ import annotations
@@ -41,11 +40,6 @@ def stream_from_batch(df: DataFrame, workdir: str, schema=None, n_files: int = 1
     return file_stream(
         spark, path, schema or df.schema, max_files_per_trigger=1 if n_files > 1 else None
     )
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic load source (HTTP-ingress stand-in, reference S7)."""
-    return spark.readStream.format("rate").option("rowsPerSecond", str(rows_per_second)).load()
 
 
 #: the connector's format name — one definition shared by the wrapper
@@ -118,8 +112,8 @@ def kinesis_stream(
             )
         ):
             raise RuntimeError(
-                "Kinesis connector not available; use file_stream/rate_stream "
-                "locally or add the spark-sql-kinesis jar to the classpath"
+                "Kinesis connector not available; use file_stream locally "
+                "or add the spark-sql-kinesis jar to the classpath"
             ) from exc
         raise
 
@@ -162,7 +156,6 @@ def parse_status_events(
 __all__ = [
     "file_stream",
     "stream_from_batch",
-    "rate_stream",
     "kinesis_stream",
     "parse_status_events",
     "ktypes",

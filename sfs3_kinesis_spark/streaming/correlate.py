@@ -33,8 +33,8 @@ per batch, not once per txn.  Per txn the semantics are Spark's per-
 key ones: rows of one txn are ordered by event time (W7), an event
 completes the txn's pending request if the row before it is that
 request, and a pending txn with no rows in a batch is evicted once
-its deadline is below the clock; the group's timer sits on its
-earliest pending deadline.  The contract this buys:
+its deadline is below the batch's processing time; the group's timer
+sits on its earliest pending deadline.  The contract this buys:
 
 * ``KEY_GROUPS`` caps the operator's parallelism: at most that many
   groups, so that many tasks' worth of state, however large the
@@ -113,19 +113,16 @@ def key_group(txn_id: Column) -> Column:
 
 
 def _correlate_key_group(
-    pdfs: Iterator[pd.DataFrame], state: GroupState, event_time: bool
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """One key group's batch: the per-txn state machine, vectorized
     over every txn of the group.
 
-    The clock is the batch's processing time, or with ``event_time``
-    the watermark.  A request's deadline is ``clock + timeout_ms``
-    (the reference's wall-clock budget, pollingsvc.js:133), or with
-    ``event_time`` ``submitted_at + timeout_ms``, moved to just past
-    the watermark when it is already at or under it (a backfill can
-    advance the watermark by more than the budget between batches).
+    The clock is the batch's processing time.  A request's deadline
+    is ``clock + timeout_ms`` (the reference's wall-clock budget,
+    pollingsvc.js:133).
     """
-    now = state.getCurrentWatermarkMs() if event_time else state.getCurrentProcessingTimeMs()
+    now = state.getCurrentProcessingTimeMs()
     p_txn, p_sub, p_dl = state.get if state.exists else ([], [], [])
     n_p = len(p_txn)
     rows = pd.concat(list(pdfs), ignore_index=True)  # empty on a timed-out call
@@ -172,10 +169,7 @@ def _correlate_key_group(
     # is below the clock (svckinesis.js:80-88): its late events orphan
     pending = last & is_req
     fresh = pending & batch
-    if event_time:
-        deadline[fresh] = np.maximum(ts[fresh] + timeout[fresh], now + 1)
-    else:
-        deadline[fresh] = now + timeout[fresh]
+    deadline[fresh] = now + timeout[fresh]
     timed_out = pending & ~batch & (deadline < now)
     pending &= ~timed_out
 
@@ -202,20 +196,9 @@ def _correlate_key_group(
         # and clears the timer on every call, so re-arm it on the
         # earliest deadline.  ``setTimeoutDuration`` refuses 0: a
         # deadline equal to the batch time arms 1 ms later.
-        if event_time:
-            state.setTimeoutTimestamp(int(dl.min()))
-        else:
-            state.setTimeoutDuration(max(int(dl.min()) - now, 1))
+        state.setTimeoutDuration(max(int(dl.min()) - now, 1))
     else:
         state.remove()
-
-
-def _correlate_processing_time(key, pdfs, state):
-    return _correlate_key_group(pdfs, state, event_time=False)
-
-
-def _correlate_event_time(key, pdfs, state):
-    return _correlate_key_group(pdfs, state, event_time=True)
 
 
 def outcome_metrics(out: DataFrame, name: str = "correlate_metrics") -> DataFrame:
@@ -235,49 +218,6 @@ def outcome_metrics(out: DataFrame, name: str = "correlate_metrics") -> DataFram
     )
 
 
-def failover_resolve(correlate_out: DataFrame, state: DataFrame) -> DataFrame:
-    """The polling↔events failover handoff (reference
-    ``svcsample/svckinesis.js:70-78,126-152``): when the event path
-    never completes a pending request — stream down, producer dead,
-    or simply slower than the request budget — the reference moves
-    the pending entry to the *polling* transition map and completes
-    it from the Step Functions ``describeExecution`` status.
-
-    Engine form: ``timeout`` rows from :func:`correlate` (the evicted
-    pending requests) left-join the process-state store (the engine's
-    describeExecution surface, ``Engine.status``).  A txn the
-    pipeline HAS finished resolves with ``outcome='failover'`` and
-    the same 200/400 routing the event path would have used; a txn
-    the pipeline has not finished stays ``timeout`` (the reference's
-    still-RUNNING poll, pollingsvc.js:77-93).  Late events for these
-    txns remain accountable orphans in the correlate output — the
-    handoff never double-completes (the event path's state entry was
-    already evicted).
-
-    A broadcast-friendly keyed equi-join: timeout rows are the rare
-    tail of the outcome stream, so this runs as a tiny batch verb per
-    poll cycle (or ``foreachBatch``) at any scale.
-    """
-    t_rows = correlate_out.filter(F.col("outcome") == "timeout").select("txn_id")
-    s = state.select("txn_id", F.col("status").alias("_st"))
-    # http_code only for resolved (failover) rows: a txn whose state
-    # is still non-terminal (RUNNING) stays outcome='timeout' and must
-    # carry NO response code, exactly like a txn with no state row at
-    # all — the poll loop keeps waiting (ADVICE r03: the old
-    # `_st.isNotNull() -> 400` branch gave RUNNING rows a 400).
-    return t_rows.join(s, "txn_id", "left").select(
-        "txn_id",
-        F.when(F.col("_st").isin("SUCCEEDED", "FAILED"), F.lit("failover"))
-        .otherwise(F.lit("timeout"))
-        .alias("outcome"),
-        F.col("_st").alias("status"),
-        F.when(F.col("_st") == "SUCCEEDED", 200)
-        .when(F.col("_st") == "FAILED", 400)
-        .cast("int")
-        .alias("http_code"),
-    )
-
-
 def correlate(requests: DataFrame, events: DataFrame) -> DataFrame:
     """The correlation operator: streaming in, streaming out.
 
@@ -288,52 +228,9 @@ def correlate(requests: DataFrame, events: DataFrame) -> DataFrame:
     """
     merged = unioned_input(requests, events).withColumn("_kg", key_group(F.col("txn_id")))
     return merged.groupBy("_kg").applyInPandasWithState(
-        _correlate_processing_time,
+        _correlate_key_group,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def correlate_event_time(
-    requests: DataFrame, events: DataFrame, *, watermark: str = "10 seconds"
-) -> DataFrame:
-    """The replay-deterministic twin of :func:`correlate`: request
-    deadlines live in EVENT TIME (``submitted_at + timeout_ms``) and
-    fire when the stream's WATERMARK passes them, not when a wall
-    clock does.
-
-    Consequences, versus the processing-time form:
-
-    * a checkpoint replay / backfill reproduces the identical
-      matched/timeout/orphan rows — wall-clock timers cannot promise
-      that (the reference's 20 s budget, pollingsvc.js:133, is
-      inherently wall-clock and so inherently non-replayable);
-    * an idle stream evicts NOTHING (the watermark only advances
-      with data) — the honest semantics for backfills, where "20
-      seconds" means twenty seconds of STREAM time, not of operator
-      wall time.
-
-    The timer is per key group: it sits on the group's earliest
-    pending deadline, and when the watermark passes it the group's
-    call evicts exactly the txns whose own deadline is below the
-    watermark.  Which txns a watermark evicts is still a function of
-    the input alone, so evictions stay replay-deterministic.
-
-    ``watermark`` is the lateness allowance on the unioned input —
-    state size is bounded by (timeout + watermark) × arrival rate,
-    the same budget arithmetic the stream-stream join form uses.
-    """
-    merged = (
-        unioned_input(requests, events)
-        .withWatermark("ts", watermark)
-        .withColumn("_kg", key_group(F.col("txn_id")))
-    )
-    return merged.groupBy("_kg").applyInPandasWithState(
-        _correlate_event_time,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

@@ -56,6 +56,10 @@ RETRYING = "RETRYING"
 #: the driver holds at once
 MAX_BATCH_ROWS = 256
 
+#: epochs between two sweeps of :class:`RetryingIncrementalPipeline`'s
+#: retry backlog store: tombstoned keys are erased and history vacuumed
+CLEANUP_EVERY = 16
+
 
 class IncrementalPipeline:
     """Streaming execution of the staged pipeline, one bounded
@@ -156,9 +160,8 @@ class RetryingIncrementalPipeline:
     ``Retry`` block (``serverless.yml:80-85``: S3DataPreconditionError,
     IntervalSeconds 1, BackoffRate 1, MaxAttempts 3 — a CONSTANT
     one-second retry interval) realized on micro-batches.  The
-    interval maps to ``backoff_epochs`` trigger units and the rate to
-    ``backoff_rate``; the defaults reproduce the reference's constant
-    schedule, ``backoff_rate=2`` gives the classic exponential curve.
+    interval maps to ``backoff_epochs`` trigger units; the schedule is
+    constant, as the reference's BackoffRate 1 makes it.
 
     The racing read the reference retries is modeled as an EXTERNAL
     side input: ``side_input()`` returns the current side table
@@ -184,9 +187,8 @@ class RetryingIncrementalPipeline:
        the reference CATCHES errors and publishes FAILED without
        retrying (``aprocess.js:78-82``); FAILED with no fault = a
        precondition miss → RETRYING with ``attempts + 1`` and
-       ``retry_after = epoch + backoff_epochs * backoff_rate^(attempts-1)``
-       (IntervalSeconds×BackoffRate^n in trigger units; the reference's
-       BackoffRate is 1, so the default schedule is CONSTANT) while
+       ``retry_after = epoch + backoff_epochs`` (IntervalSeconds in
+       trigger units; BackoffRate 1 keeps it CONSTANT) while
        ``attempts < max_attempts``, else terminal FAILED — MaxAttempts
        exhaustion (T9 routing);
     4. MERGE every row into the state store (idempotent keyed upsert)
@@ -214,29 +216,22 @@ class RetryingIncrementalPipeline:
         on_events: Optional[Callable[[DataFrame, int], None]] = None,
         max_attempts: int = 3,
         backoff_epochs: int = 1,
-        backoff_rate: float = 1.0,
-        pending_sink: Optional[KeyedUpsertSink] = None,
-        cleanup_every: int = 16,
     ):
         import os
 
         if max_attempts < 1:
             raise ValueError("max_attempts must be >= 1")
-        if backoff_rate < 1.0:
-            raise ValueError("backoff_rate must be >= 1 (ASL BackoffRate)")
         self.state_sink = state_sink
         self.steps = list(steps)
         self.side_input = side_input
         self.on_events = on_events
         self.max_attempts = max_attempts
         self.backoff_epochs = backoff_epochs
-        self.backoff_rate = float(backoff_rate)
         # nested under the state dir ("_pending" matches neither the
         # v<N> nor d<N> version patterns, so the parent scan skips it)
-        self.pending_sink = pending_sink or KeyedUpsertSink(
+        self.pending_sink = KeyedUpsertSink(
             state_sink.spark, os.path.join(state_sink.path, "_pending")
         )
-        self.cleanup_every = cleanup_every
 
     def _requeue(self, epoch_id: int) -> Optional[DataFrame]:
         cur = self.pending_sink.current()
@@ -260,7 +255,7 @@ class RetryingIncrementalPipeline:
         RETRYING rows live (with their next-eligible epoch), rows that
         went terminal AFTER having retried are tombstoned (``done``)
         so the next requeue read skips them; first-try terminals never
-        enter the store at all.  Every ``cleanup_every`` epochs the
+        enter the store at all.  Every :data:`CLEANUP_EVERY` epochs the
         tombstoned keys are physically erased (bounded store ==
         the live backlog plus one cleanup window of tombstones)."""
         moved = out.filter(
@@ -282,7 +277,7 @@ class RetryingIncrementalPipeline:
         evaluated (forget_keys rewrites the delta directories in
         place; an in-flight lazy plan re-evaluated after the rewrite
         would chase the pre-rewrite file listing)."""
-        if not self.cleanup_every or int(epoch_id) % self.cleanup_every != 0:
+        if int(epoch_id) % CLEANUP_EVERY != 0:
             return
         cur = self.pending_sink.current()
         if cur is not None:
@@ -336,19 +331,7 @@ class RetryingIncrementalPipeline:
             {
                 "attempts": tries,
                 "retry_after": F.when(
-                    retrying,
-                    F.lit(int(epoch_id))
-                    + (
-                        # reference default: BackoffRate 1 → constant
-                        # interval; rate > 1 → exponential schedule
-                        F.lit(self.backoff_epochs)
-                        if self.backoff_rate == 1.0
-                        else F.lit(self.backoff_epochs)
-                        * F.pow(
-                            F.lit(self.backoff_rate),
-                            (tries - 1).cast("double"),
-                        ).cast("long")
-                    ),
+                    retrying, F.lit(int(epoch_id) + self.backoff_epochs)
                 ).cast("long"),
                 "status": F.when(retrying, F.lit(RETRYING)).otherwise(
                     F.col("status")

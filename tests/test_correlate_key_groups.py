@@ -48,8 +48,7 @@ class PerTxnModel:
     per-key timer rule: a pending txn with no rows in a batch is
     evicted once its deadline is below the clock."""
 
-    def __init__(self, event_time: bool):
-        self.event_time = event_time
+    def __init__(self):
         self.pending: dict[str, tuple[int, int]] = {}  # txn -> (submitted_ms, deadline_ms)
 
     def batch(self, rows: list[dict], clock: int) -> list[tuple]:
@@ -61,13 +60,7 @@ class PerTxnModel:
             pending = self.pending.pop(txn, None)
             for r in sorted(txn_rows, key=lambda r: r["ts"]):
                 if r["kind"] == "request":
-                    if self.event_time:
-                        deadline = r["ts"] + r["timeout_ms"]
-                        if deadline <= clock:
-                            deadline = clock + 1
-                    else:
-                        deadline = clock + r["timeout_ms"]
-                    pending = (r["ts"], deadline)
+                    pending = (r["ts"], clock + r["timeout_ms"])
                 elif pending is not None:
                     out.append((txn, "matched", r["status"], _http_code(r["status"]),
                                 max(r["ts"] - pending[0], 0)))
@@ -90,8 +83,7 @@ class GroupedRun:
     and kept as the call leaves it; a removed state without a timer is
     dropped."""
 
-    def __init__(self, event_time: bool, groups: int):
-        self.event_time = event_time
+    def __init__(self, groups: int):
         self.groups = groups
         self.store: dict[int, tuple[Row | None, int]] = {}  # group -> (state, timer)
 
@@ -112,11 +104,10 @@ class GroupedRun:
         state = GroupState(
             optionalValue=value,
             batchProcessingTimeMs=clock,
-            eventTimeWatermarkMs=clock if self.event_time else GroupState.NO_TIMESTAMP,
-            timeoutConf=(GroupStateTimeout.EventTimeTimeout if self.event_time
-                         else GroupStateTimeout.ProcessingTimeTimeout),
+            eventTimeWatermarkMs=GroupState.NO_TIMESTAMP,
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
             hasTimedOut=rows is None,
-            watermarkPresent=self.event_time,
+            watermarkPresent=False,
             defined=value is not None,
             updated=False,
             removed=False,
@@ -139,7 +130,7 @@ class GroupedRun:
             )
         out = [
             tuple(None if pd.isna(v) else v for v in rec)
-            for df in _correlate_key_group(iter([pdf]), state, self.event_time)
+            for df in _correlate_key_group((g,), iter([pdf]), state)
             for rec in df.astype(object).itertuples(index=False)
         ]
         props = json.loads(state.json())
@@ -171,8 +162,8 @@ _row = st.fixed_dictionaries(
 )
 
 
-def _run(batches, groups: int, event_time: bool) -> None:
-    model, grouped = PerTxnModel(event_time), GroupedRun(event_time, groups)
+def _run(batches, groups: int) -> None:
+    model, grouped = PerTxnModel(), GroupedRun(groups)
     clock = T0_MS
     for step, rows in batches:
         clock += step
@@ -203,17 +194,7 @@ def _run(batches, groups: int, event_time: bool) -> None:
     groups=st.integers(1, 3),
 )
 def test_group_body_equals_per_txn_model_processing_time(batches, groups):
-    _run(batches, groups, event_time=False)
-
-
-# the watermark may stand still between batches
-@settings(max_examples=300, deadline=None)
-@given(
-    batches=st.lists(st.tuples(st.integers(0, 40), st.lists(_row, max_size=10)), min_size=1, max_size=8),
-    groups=st.integers(1, 3),
-)
-def test_group_body_equals_per_txn_model_event_time(batches, groups):
-    _run(batches, groups, event_time=True)
+    _run(batches, groups)
 
 
 def test_key_group_is_pinned(spark):

@@ -655,6 +655,40 @@ def test_crashed_arrow_commit_is_never_read_on_restart(spark, tmp_path, monkeypa
     assert {r.k: r.val for r in resumed.current().collect()} == {"a": 1, "b": 2}
 
 
+def test_crashed_spark_commit_is_never_read_on_restart(spark, tmp_path, monkeypatch):
+    """The Spark commit path publishes the same way: a write that dies
+    after Spark has written the delta, before the publishing rename,
+    leaves only a hidden directory, which a restarted sink neither
+    reads nor counts as a version."""
+    import os
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / "st")
+    sink = KeyedUpsertSink(spark, path, key_col="k")
+    sink.apply_batch(spark.createDataFrame([("a", 1)], "k string, val int"), 0)
+    real_parquet = DataFrameWriter.parquet
+
+    def write_then_crash(self, where, *args, **kw):
+        real_parquet(self, where, *args, **kw)
+        raise OSError("crash after the delta write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_crash)
+    with pytest.raises(OSError, match="crash"):
+        sink.apply_batch(spark.createDataFrame([("ghost", 9)], "k string, val int"), 1)
+    monkeypatch.undo()
+    assert sorted(os.listdir(path)) == [".d2", "d1"]
+
+    resumed = KeyedUpsertSink(spark, path, key_col="k")
+    assert resumed.version == 1
+    assert resumed.lookup("ghost") is None
+    assert {r.k for r in resumed.current().collect()} == {"a"}
+    resumed.apply_batch(spark.createDataFrame([("b", 2)], "k string, val int"), 1)
+    assert resumed.version == 2 and sorted(os.listdir(path)) == ["d1", "d2"]
+    assert {r.k: r.val for r in resumed.current().collect()} == {"a": 1, "b": 2}
+
+
 def test_crashed_compaction_is_never_read_on_restart(spark, tmp_path, monkeypatch):
     """A compaction that dies mid-write leaves only a hidden ``.v{N}``:
     the commit before it stays readable, a reopened sink removes the

@@ -233,7 +233,7 @@ def test_results_partitioning_independent(spark):
 def test_round3_operators_handle_empty_input(spark):
     """Round-3 operators on zero rows: stable schemas, no raise —
     global_rank/global_cumsum (empty bucket table), guard_all_pairs
-    (0 <= any limit), failover_resolve (no timeouts)."""
+    (0 <= any limit)."""
     from pyspark.sql import functions as F
 
     from sfs3_kinesis_spark.operators.scale import (
@@ -241,15 +241,9 @@ def test_round3_operators_handle_empty_input(spark):
         global_rank,
         guard_all_pairs,
     )
-    from sfs3_kinesis_spark.streaming.correlate import OUTPUT_SCHEMA, failover_resolve
-
     df = spark.range(0).select(F.col("id"), (F.col("id") % 3).alias("v"))
     gr = global_rank(df, ["-v", "id"], n_buckets=4)
     assert gr.count() == 0 and "rnk" in gr.columns
     gc = global_cumsum(df, ["v", "id"], {"v": "cv"}, n_buckets=4)
     assert gc.count() == 0 and "cv" in gc.columns
     assert guard_all_pairs(df, op="t", scale_twin="x", max_rows=10).count() == 0
-
-    empty_out = spark.createDataFrame([], OUTPUT_SCHEMA)
-    state = spark.createDataFrame([("a", "SUCCEEDED")], "txn_id string, status string")
-    assert failover_resolve(empty_out, state).count() == 0

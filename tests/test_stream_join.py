@@ -75,43 +75,3 @@ def test_stream_stream_join_matches(spark, tmp_path):
     assert rows["a"]["http_code"] == 200
     assert rows["b"]["http_code"] == 400
     assert rows["a"]["latency_ms"] == 4000
-
-
-def test_stream_outer_join_emits_timeout_rows(spark, tmp_path):
-    """Left-outer stream-stream join: the unmatched request emits a
-    NULL-status timeout row once both watermarks pass its join
-    window — the declarative form of the 20 s request timeout
-    (no user-managed timer state)."""
-    from sfs3_kinesis_spark.streaming.join import correlate_join_outer
-
-    req_dir, ev_dir = tmp_path / "req", tmp_path / "ev"
-    req_dir.mkdir(), ev_dir.mkdir()
-    _requests(spark, [("a", ts(0)), ("b", ts(1))]).coalesce(1).write.mode("append").parquet(
-        str(req_dir)
-    )
-    _events(spark, [("a", "SUCCEEDED", ts(4))]).coalesce(1).write.mode("append").parquet(
-        str(ev_dir)
-    )
-    req_s = spark.readStream.schema("txn_id string, submitted_at timestamp").parquet(str(req_dir))
-    ev_s = spark.readStream.schema(
-        "txn_id string, status string, event_time timestamp"
-    ).parquet(str(ev_dir))
-    out = correlate_join_outer(req_s, ev_s, within="20 seconds")
-    q = out.writeStream.format("memory").queryName("outer_join").outputMode("append").start()
-    try:
-        q.processAllAvailable()
-        # push BOTH watermarks far past b's window upper bound
-        _requests(spark, [("wm1", ts(600))]).coalesce(1).write.mode("append").parquet(
-            str(req_dir)
-        )
-        _events(spark, [("wm2", "SUCCEEDED", ts(600))]).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(ev_dir))
-        q.processAllAvailable()
-        q.processAllAvailable()
-        rows = {r["txn_id"]: r for r in spark.sql("SELECT * FROM outer_join").collect()}
-        assert rows["a"]["outcome"] == "matched" and rows["a"]["http_code"] == 200
-        assert rows["b"]["outcome"] == "timeout" and rows["b"]["http_code"] == 400
-        assert rows["b"]["status"] is None
-    finally:
-        q.stop()

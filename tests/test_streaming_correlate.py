@@ -130,6 +130,8 @@ def test_correlation_timeout_and_late_orphan(spark, tmp_path):
     outcomes = {(r["txn_id"], r["outcome"]) for r in rows}
     assert ("t-slow", "timeout") in outcomes
     assert ("t-slow", "orphan") in outcomes
+    # the evicted request can never be completed twice
+    assert ("t-slow", "matched") not in outcomes
 
 
 def test_correlation_throughput_smoke(spark, tmp_path):
@@ -315,251 +317,5 @@ def test_kinesis_stream_feeds_correlation_end_to_end(spark, tmp_path):
         assert len(by_txn) == 12
         assert by_txn["0x0000"].http_code == 400  # FAILED -> 400
         assert by_txn["0x0001"].http_code == 200
-    finally:
-        q.stop()
-
-
-def test_failover_event_path_silent_poller_completes(spark, tmp_path):
-    """The polling↔events handoff (svckinesis.js:70-78,126-152,
-    r02 verdict next-round #6): the event path never delivers, the
-    request times out and is evicted, the POLLING path completes it
-    from the process-state store with the same 200 routing — and the
-    late event stays an accountable orphan, never a double-complete."""
-    import datetime as dt
-
-    from sfs3_kinesis_spark.engine import Engine
-    from sfs3_kinesis_spark.streaming.correlate import failover_resolve
-
-    # 1. the pipeline itself finishes the txn (state store says
-    # SUCCEEDED) — only the EVENT DELIVERY to the correlator is down
-    eng = Engine(spark, str(tmp_path / "eng"))
-    q_pipe = eng.start()
-    try:
-        txn = eng.submit('{"foo": true}')
-        assert eng.await_completion(txn, timeout_s=60) == "SUCCEEDED"
-    finally:
-        q_pipe.stop()
-
-    # 2. the correlator sees the request but no event within budget
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    stream_dir = tmp_path / "in"
-    stream_dir.mkdir()
-    req = unioned_input(
-        _requests_df(spark, [(txn, t0, 700)]),  # 0.7 s budget
-        _events_df(spark, []),
-    )
-    req.write.mode("append").parquet(str(stream_dir))
-    stream = spark.readStream.schema(req.schema).parquet(str(stream_dir))
-    q = run_stateful_to_memory(_correlated(stream), "corr_failover")
-    try:
-        n = wait_for_rows(spark, "SELECT count(*) FROM corr_failover", 1, timeout_s=60)
-        assert n >= 1, "timeout row never emitted"
-
-        # 3. the handoff: timeout rows + state store -> completed poll
-        out = spark.sql("SELECT * FROM corr_failover")
-        resolved = {r["txn_id"]: r for r in failover_resolve(out, eng._sink.current()).collect()}
-        assert resolved[txn]["outcome"] == "failover"
-        assert resolved[txn]["status"] == "SUCCEEDED"
-        assert resolved[txn]["http_code"] == 200
-
-        # a txn the pipeline has NOT finished stays timeout
-        ghost = spark.createDataFrame(
-            [("t-ghost", "timeout", None, None, None)], out.schema
-        )
-        unresolved = failover_resolve(ghost, eng._sink.current()).collect()[0]
-        assert unresolved["outcome"] == "timeout" and unresolved["status"] is None
-
-        # 4. the late event is an orphan in the correlate output —
-        # the evicted entry can never double-complete
-        late = unioned_input(
-            _requests_df(spark, []),
-            _events_df(spark, [(txn, "SUCCEEDED", t0 + dt.timedelta(seconds=2))]),
-        )
-        late.write.mode("append").parquet(str(stream_dir))
-        wait_for_rows(spark, "SELECT count(*) FROM corr_failover", 2, timeout_s=60)
-        outcomes = {
-            (r["txn_id"], r["outcome"])
-            for r in spark.sql("SELECT * FROM corr_failover").collect()
-        }
-        assert (txn, "timeout") in outcomes
-        assert (txn, "orphan") in outcomes
-        assert (txn, "matched") not in outcomes
-    finally:
-        q.stop()
-
-
-def test_failover_running_state_carries_no_http_code(spark):
-    """http_code belongs to RESOLVED rows only (ADVICE r03): a txn
-    whose state store row is still non-terminal (RUNNING) stays
-    outcome='timeout' with a NULL http_code — identical routing to a
-    txn with no state row at all; only SUCCEEDED/FAILED map to
-    200/400."""
-    from sfs3_kinesis_spark.streaming.correlate import OUTPUT_SCHEMA, failover_resolve
-
-    timeouts = spark.createDataFrame(
-        [
-            ("t-run", "timeout", None, None, None),
-            ("t-none", "timeout", None, None, None),
-            ("t-ok", "timeout", None, None, None),
-            ("t-bad", "timeout", None, None, None),
-        ],
-        OUTPUT_SCHEMA,
-    )
-    state = spark.createDataFrame(
-        [("t-run", "RUNNING"), ("t-ok", "SUCCEEDED"), ("t-bad", "FAILED")],
-        "txn_id string, status string",
-    )
-    rows = {r["txn_id"]: r for r in failover_resolve(timeouts, state).collect()}
-    assert rows["t-run"]["outcome"] == "timeout" and rows["t-run"]["http_code"] is None
-    assert rows["t-none"]["outcome"] == "timeout" and rows["t-none"]["http_code"] is None
-    assert rows["t-ok"]["outcome"] == "failover" and rows["t-ok"]["http_code"] == 200
-    assert rows["t-bad"]["outcome"] == "failover" and rows["t-bad"]["http_code"] == 400
-
-
-def test_correlate_event_time_deterministic_eviction(spark, tmp_path):
-    """Event-time timers (W5 deepened): the request's deadline is
-    submitted_at + timeout on the EVENT-TIME axis and fires when the
-    WATERMARK crosses it — wall-clock independent, so the eviction
-    set is a pure function of the input data.  A later event for the
-    evicted txn is an accountable orphan; an in-budget event matches
-    normally."""
-    import datetime as dt
-
-    from sfs3_kinesis_spark.streaming.correlate import correlate_event_time
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    stream_dir = tmp_path / "in"
-    stream_dir.mkdir()
-
-    # batch 1: two requests with a 5 s event-time budget, plus an
-    # in-budget event for t-fast (matches) — watermark still early
-    b1 = unioned_input(
-        _requests_df(spark, [("t-fast", t0, 5_000), ("t-slow", t0, 5_000)]),
-        _events_df(spark, [("t-fast", "SUCCEEDED", t0 + dt.timedelta(seconds=2))]),
-    )
-    b1.write.mode("append").parquet(str(stream_dir))
-
-    stream = spark.readStream.schema(b1.schema).parquet(str(stream_dir))
-    out = correlate_event_time(
-        stream.filter(F.col("kind") == "request").select(
-            "txn_id", F.col("ts").alias("submitted_at"), "timeout_ms"
-        ),
-        stream.filter(F.col("kind") == "event").select(
-            "txn_id", "status", F.col("ts").alias("event_time")
-        ),
-        watermark="1 second",
-    )
-    q = run_stateful_to_memory(out, "corr_evt")
-    try:
-        wait_for_rows(spark, "SELECT count(*) FROM corr_evt", 1, timeout_s=60)
-
-        # batch 2: an unrelated far-future event pushes the watermark
-        # past t0+5s — t-slow's deadline fires DATA-driven, no sleep
-        # arithmetic involved
-        b2 = unioned_input(
-            _requests_df(spark, []),
-            _events_df(spark, [("t-other", "SUCCEEDED", t0 + dt.timedelta(seconds=120))]),
-        )
-        b2.write.mode("append").parquet(str(stream_dir))
-        wait_for_rows(
-            spark,
-            "SELECT count(*) FROM corr_evt WHERE outcome = 'timeout'",
-            1,
-            timeout_s=60,
-        )
-
-        # batch 3: the late event for the evicted txn -> orphan
-        b3 = unioned_input(
-            _requests_df(spark, []),
-            _events_df(spark, [("t-slow", "SUCCEEDED", t0 + dt.timedelta(seconds=121))]),
-        )
-        b3.write.mode("append").parquet(str(stream_dir))
-        # two orphans total: t-other (batch 2, no pending request) and
-        # t-slow's late event after its eviction
-        wait_for_rows(
-            spark,
-            "SELECT count(*) FROM corr_evt WHERE outcome = 'orphan'",
-            2,
-            timeout_s=60,
-        )
-        rows = spark.sql("SELECT * FROM corr_evt").collect()
-    finally:
-        q.stop()
-
-    outcomes = {(r["txn_id"], r["outcome"]) for r in rows}
-    assert ("t-fast", "matched") in outcomes
-    # regression (pandas GroupState bridge): a matched request's
-    # already-armed timer must NOT produce a spurious eviction row
-    assert ("t-fast", "timeout") not in outcomes
-    assert ("t-slow", "timeout") in outcomes
-    assert ("t-slow", "orphan") in outcomes
-    assert ("t-slow", "matched") not in outcomes
-    # t-other's own event is an orphan too (no pending request)
-    assert ("t-other", "orphan") in outcomes
-
-
-def test_correlate_event_time_backfill_request_behind_watermark(spark, tmp_path):
-    """Backfill hazard: a request whose event-time deadline is ALREADY
-    below the eviction watermark (the watermark advanced by more than
-    the budget between batches — exactly the replay/backfill scenario
-    event-time timers exist for).  setTimeoutTimestamp raises on a
-    deadline at/under the watermark; the operator must clamp to the
-    next watermark tick and evict the stale request as a timeout
-    instead of killing the query."""
-    import datetime as dt
-
-    from sfs3_kinesis_spark.streaming.correlate import correlate_event_time
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    stream_dir = tmp_path / "in"
-    stream_dir.mkdir()
-
-    # batch 1: a far-future event drives the watermark way past t0
-    b1 = unioned_input(
-        _requests_df(spark, []),
-        _events_df(spark, [("t-wm", "SUCCEEDED", t0 + dt.timedelta(seconds=600))]),
-    )
-    b1.write.mode("append").parquet(str(stream_dir))
-
-    stream = spark.readStream.schema(b1.schema).parquet(str(stream_dir))
-    out = correlate_event_time(
-        stream.filter(F.col("kind") == "request").select(
-            "txn_id", F.col("ts").alias("submitted_at"), "timeout_ms"
-        ),
-        stream.filter(F.col("kind") == "event").select(
-            "txn_id", "status", F.col("ts").alias("event_time")
-        ),
-        watermark="1 second",
-    )
-    q = run_stateful_to_memory(out, "corr_backfill")
-    try:
-        wait_for_rows(spark, "SELECT count(*) FROM corr_backfill", 1, timeout_s=60)
-
-        # batch 2: a BACKFILLED request stamped hundreds of seconds
-        # behind the watermark with a 5 s budget — its deadline is
-        # long past; pre-clamp this crashed the query with
-        # INVALID_TIMEOUT_TIMESTAMP
-        b2 = unioned_input(
-            _requests_df(spark, [("t-stale", t0, 5_000)]),
-            _events_df(spark, []),
-        )
-        b2.write.mode("append").parquet(str(stream_dir))
-        q.processAllAvailable()
-        assert q.exception() is None, q.exception()
-
-        # batch 3: any event advances the watermark one more tick and
-        # fires the clamped timer -> the stale request times out
-        b3 = unioned_input(
-            _requests_df(spark, []),
-            _events_df(spark, [("t-wm2", "SUCCEEDED", t0 + dt.timedelta(seconds=700))]),
-        )
-        b3.write.mode("append").parquet(str(stream_dir))
-        wait_for_rows(
-            spark,
-            "SELECT count(*) FROM corr_backfill"
-            " WHERE outcome = 'timeout' AND txn_id = 't-stale'",
-            1,
-            timeout_s=60,
-        )
     finally:
         q.stop()

@@ -358,40 +358,14 @@ def test_retry_epoch_replay_does_not_double_increment(spark, tmp_path):
     assert st["t9"]["status"] == "FAILED" and st["t9"]["attempts"] == 3
 
 
-def test_retry_backoff_epochs_delay_retries(spark, tmp_path):
-    """Exponential backoff in trigger units (the ASL BackoffRate>1
-    curve — the reference itself uses BackoffRate 1, tested below):
-    with backoff_epochs=2, backoff_rate=2 a row that failed at epoch 0
-    is not retried before epoch 2, and the next wait doubles — tries
-    land at epochs 0, 2, 6."""
-    pipe, sink, events, arrive, batch = _retry_fixture(
-        spark, tmp_path, backoff_epochs=2, backoff_rate=2
-    )
-
-    batch(["b1"], 0)
-    for epoch in range(1, 8):
-        batch([], epoch)
-        row = sink.current().filter(F.col("txn_id") == "b1").collect()[0]
-        if epoch < 2:
-            assert row["attempts"] == 1, f"retried too early at {epoch}"
-        elif epoch < 6:
-            assert row["attempts"] == 2, f"epoch {epoch}"
-        else:
-            assert row["attempts"] == 3 and row["status"] == "FAILED"
-
-
 def test_retry_constant_interval_is_the_reference_default(spark, tmp_path):
     """The reference's actual Retry block is IntervalSeconds 1 /
     BackoffRate 1 / MaxAttempts 3 (serverless.yml:80-85) — a CONSTANT
-    interval, not exponential.  The default ``backoff_rate=1.0``
-    reproduces it: with backoff_epochs=2 the waits never grow, so
-    tries land at epochs 0, 2, 4 (vs 0, 2, 6 for rate 2)."""
-    import pytest
-
+    interval, not exponential.  With backoff_epochs=2 the waits never
+    grow, so tries land at epochs 0, 2, 4."""
     pipe, sink, events, arrive, batch = _retry_fixture(
         spark, tmp_path, backoff_epochs=2
     )
-    assert pipe.backoff_rate == 1.0
 
     batch(["c1"], 0)
     for epoch in range(1, 6):
@@ -403,13 +377,6 @@ def test_retry_constant_interval_is_the_reference_default(spark, tmp_path):
             assert row["attempts"] == 2, f"epoch {epoch}"
         else:
             assert row["attempts"] == 3 and row["status"] == "FAILED"
-
-    from sfs3_kinesis_spark.streaming.incremental import RetryingIncrementalPipeline
-
-    with pytest.raises(ValueError, match="backoff_rate"):
-        RetryingIncrementalPipeline(
-            sink, [], lambda: None, backoff_rate=0.5
-        )
 
 
 def test_retry_faults_are_terminal_not_retried(spark, tmp_path):
@@ -441,20 +408,18 @@ def test_retry_faults_are_terminal_not_retried(spark, tmp_path):
     assert st["ok"]["status"] == "SUCCEEDED"
 
 
-def test_retry_backlog_store_is_bounded_by_live_backlog(spark, tmp_path):
+def test_retry_backlog_store_is_bounded_by_live_backlog(spark, tmp_path, monkeypatch):
     """The requeue source is the dedicated pending store, NOT a merge
     of the whole state store (O(backlog) per trigger, not O(all txns
     ever)): first-try terminals never enter it, resolved retriers are
     tombstoned immediately and physically erased by the periodic
     forget_keys sweep."""
-    from sfs3_kinesis_spark.operators.pipeline import Step, reference_steps
-    from sfs3_kinesis_spark.sources.sinks import KeyedUpsertSink
-    from sfs3_kinesis_spark.streaming.incremental import RetryingIncrementalPipeline
+    from sfs3_kinesis_spark.streaming import incremental
 
     pipe, sink, events, arrive, batch = _retry_fixture(
         spark, tmp_path, backoff_epochs=0
     )
-    pipe.cleanup_every = 2
+    monkeypatch.setattr(incremental, "CLEANUP_EVERY", 2)
 
     arrive(["ok0"])                      # ok0 resolves on first try
     batch(["ok0", "slow", "dead"], 0)
@@ -596,7 +561,7 @@ def test_retry_pending_store_soak_bounded_files_and_requeue(spark, tmp_path):
 
     per_epoch, retriers = 10, 1  # 10% retry rate
     # 80 epochs = 2.5 full compaction cycles (compact_every=32) + 5
-    # cleanup windows (cleanup_every=16): an O(epochs) dir/row-growth
+    # cleanup windows (CLEANUP_EVERY=16): an O(epochs) dir/row-growth
     # regression trips the windowed bounds below well before epoch 80,
     # exactly as it did at the original 200 (r11: the 200-epoch soak
     # alone cost 9 of the suite's 38 minutes and is what pushed the
@@ -624,7 +589,7 @@ def test_retry_pending_store_soak_bounded_files_and_requeue(spark, tmp_path):
     c = reference_steps()[2]
     steps = [Step(c.name, c.output_col, c.result, gate_on=("side_doc",))]
     sink = KeyedUpsertSink(spark, str(tmp_path / "store"), compact_every=32)
-    pipe = RetryingIncrementalPipeline(sink, steps, side_input, cleanup_every=16)
+    pipe = RetryingIncrementalPipeline(sink, steps, side_input)
     pending_dir = str(tmp_path / "store" / "_pending")
 
     max_dirs = 0
@@ -666,7 +631,7 @@ def test_retry_pending_store_soak_bounded_files_and_requeue(spark, tmp_path):
     # requeue read = live backlog only (eligible, not-yet-tombstoned)
     assert max_requeue <= retriers * 2, max_requeue
     # dirs: one base snapshot + <= compact_every deltas (8) + the
-    # <= cleanup_every epochs (16) of deltas since the last vacuum
+    # <= CLEANUP_EVERY epochs (16) of deltas since the last vacuum
     assert max_dirs <= 1 + 8 + 16 + 4, max_dirs
     # rows: live backlog + <= one cleanup window of tombstones
     assert max_rows <= retriers * (16 + 2), max_rows
