@@ -18,6 +18,11 @@ Each query is fully materialized through the noop sink — ``count()``
 would let Catalyst prune every unreferenced expression column, so
 narrow projections would measure the parquet row count instead of the
 actual compute.
+
+``load_table`` infers each fixture's schema once per session and file
+stamp ``(path, st_ino, st_mtime_ns, st_size)``, so only a table's
+first load in the run pays that job.  The cache holds metadata, not
+results: every cold and warm run still scans and computes in full.
 """
 
 from __future__ import annotations

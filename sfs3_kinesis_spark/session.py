@@ -9,6 +9,15 @@ Scale posture: these confs are chosen to survive a 1000-executor /
 UTC session time zone so results are comparable across engines, and
 non-ANSI evaluation so expression semantics match the permissive
 JSON world of the reference (`aprocess.js` never range-checks).
+
+Python workers fork from the engine's own daemon module
+(``worker_daemon``).  pyspark's worker calls
+``importlib.invalidate_caches()`` before every task, and up to CPython
+3.12 that re-reads ``pyspark.zip``'s whole central directory once per
+cached zip importer (about 16 per task); 3.13 makes the re-read lazy.
+The daemon re-reads an archive only when its stamp changes.  The
+workers get the package root on ``PYTHONPATH`` so the daemon, and
+every UDF pickled by reference, import whatever the caller's cwd.
 """
 
 from __future__ import annotations
@@ -17,6 +26,8 @@ import os
 import tempfile
 
 from pyspark.sql import SparkSession
+
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -71,6 +82,8 @@ def get_spark(app_name: str = "sfs3_kinesis_spark", *, shuffle_partitions: int |
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "sfs3_kinesis_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         # reliable-checkpoint files are reclaimed when their RDD is GC'd
         # (otherwise every lineage_pin call leaks a checkpoint dir)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")

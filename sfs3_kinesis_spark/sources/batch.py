@@ -10,16 +10,32 @@ stage — SURVEY.md §4.1).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import sfs3_kinesis_spark as pkg
 
 
+@functools.lru_cache(maxsize=256)
+def _parquet_schema(spark: SparkSession, path: str, ino: int, mtime_ns: int, size: int) -> T.StructType:
+    """Spark's inferred schema of ``path``; the stat fields only key
+    the cache, so a rewritten or replaced file is inferred again."""
+    return spark.read.parquet(path).schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one fixture table (pushdown-capable).
+
+    The schema is inferred (one Spark job) once per session and file
+    stamp ``(path, st_ino, st_mtime_ns, st_size)``, then passed to the
+    reader, so later loads of an unchanged file run no job.  The cache
+    holds schemas only, never data or results.  A path that cannot be
+    stat'ed (missing, or not on the local file system) takes the plain
+    inferring read, which raises Spark's own error for a missing one.
 
     ``events.ts`` has shipped as TIMESTAMP(NANOS) (round-1 fixtures)
     and TIMESTAMP(MICROS, not UTC-adjusted) (round-2): the former
@@ -33,7 +49,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     created sessions read the fixtures identically."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+    except OSError:
+        df = spark.read.parquet(path)
+    else:
+        schema = _parquet_schema(spark, path, st.st_ino, st.st_mtime_ns, st.st_size)
+        df = spark.read.schema(schema).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -1,13 +1,70 @@
-"""Source-layer tests: schema-fixed JSON documents (reference S1)
-and rate-limited file-stream batching (reference S6/W8)."""
+"""Source-layer tests: parquet fixture tables with cached schemas,
+schema-fixed JSON documents (reference S1) and rate-limited
+file-stream batching (reference S6/W8)."""
 
 from __future__ import annotations
 
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sfs3_kinesis_spark.sources.batch import read_json_documents
+from sfs3_kinesis_spark.sources.batch import load_table, read_json_documents
 from sfs3_kinesis_spark.sources.stream import stream_from_batch
+
+
+def _load_counting_jobs(spark, sf_dir, name):
+    """``load_table`` plus the number of Spark jobs it ran (status
+    tracker, under a job group of its own)."""
+    sc = spark.sparkContext
+    group = f"load_table-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_table")
+    try:
+        df = load_table(spark, str(sf_dir), name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_a_file_schema_once(spark, tmp_path):
+    """The first load of a fixture runs the one schema-inference job;
+    a second load of the unchanged file runs none and reads the same
+    rows."""
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]}), str(tmp_path / "t.parquet"))
+    first, jobs_first = _load_counting_jobs(spark, tmp_path, "t")
+    second, jobs_second = _load_counting_jobs(spark, tmp_path, "t")
+    assert (jobs_first, jobs_second) == (1, 0)
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_load_table_reinfers_a_rewritten_or_replaced_file(spark, tmp_path):
+    """A file rewritten in place, or replaced by another at the same
+    path, comes back with its new columns, not the cached schema."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["k"]
+
+    pq.write_table(pa.table({"k": [1, 2], "extra": ["x", "y"]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert sorted(df.collect()) == [(1, "x"), (2, "y")]
+
+    pq.write_table(pa.table({"k": [3], "extra": ["z"], "more": [0.5]}), path + ".new")
+    os.replace(path + ".new", path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "extra", "more"]
+    assert df.collect() == [(3, "z", 0.5)]
+
+
+def test_load_table_missing_path_raises_spark_error(spark, tmp_path):
+    with pytest.raises(AnalysisException):
+        load_table(spark, str(tmp_path), "absent")
 
 
 def test_read_json_documents_schema_fixed(spark, tmp_path):
