@@ -93,20 +93,13 @@ def shingles(docs: DataFrame, n: int = 3, out_col: str = "shingles") -> DataFram
     return docs.withColumn(out_col, F.expr(expr))
 
 
-def banded_keys(
-    docs_with_shingles: DataFrame, *, num_hashes: int = 32, bands: int = 8
-) -> DataFrame:
-    """(doc_id, band_id, band_hash) LSH bucket keys from a shingle
-    table — the narrow projection both the batch pair-join and the
-    streaming delta-index share.
-
-    Each band hash is computed DIRECTLY from its own rows_per_band
-    minhash functions (one narrow union branch per band) rather than
-    slicing a materialized signature column through posexplode:
-    Catalyst inlines column aliases into the Generate, re-evaluating
-    the full num_hashes-pass signature once per exploded row — a
-    ``bands×`` blowup of the dominant xxhash cost.  The union form
-    evaluates exactly num_hashes transforms."""
+def minhash_bands(*, num_hashes: int = 32, bands: int = 8) -> F.Column:
+    """``array<bigint>`` of a document's ``bands`` LSH band hashes,
+    computed from its ``shingles`` column in one projection.  Band b
+    hashes the comma-joined minima of minhash functions
+    ``xxhash64(s, h)`` for h in [b*r, (b+1)*r), r = num_hashes // bands.
+    A band index written by :func:`banded_keys` stores these values,
+    so the expression must not change."""
     rows_per_band = num_hashes // bands
 
     def band_hash(b: int) -> str:
@@ -116,19 +109,55 @@ def banded_keys(
         )
         return f"xxhash64(concat_ws(',', {mins}))"
 
-    from functools import reduce
+    return F.array(*[F.expr(band_hash(b)) for b in range(bands)])
 
-    return reduce(
-        DataFrame.unionByName,
-        [
-            docs_with_shingles.select(
-                "doc_id",
-                F.lit(b).alias("band_id"),
-                F.expr(band_hash(b)).alias("band_hash"),
-            )
-            for b in range(bands)
-        ],
+
+def explode_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_hash): one row per element of the
+    ``bands`` array column, band_id (int) its position.
+
+    ``posexplode_outer``, not ``posexplode``: for a plain generator
+    Catalyst infers a ``size(bands) > 0`` filter below the Generate,
+    and when the array is an unmaterialized projection that filter
+    holds a second copy of every band expression, doubling the
+    hashing.  Band arrays are never empty, so the rows are the same."""
+    return sig.select(
+        "doc_id", F.posexplode_outer("bands").alias("band_id", "band_hash")
     )
+
+
+def band_candidates(sig: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: the distinct document pairs that
+    share at least one band, from an equi-join on (band_id, band_hash)
+    of :func:`explode_bands` with itself.  Catalyst shuffles it on the
+    bucket key, so only colliding documents ever meet, and only the
+    narrow (doc_id, band_id, band_hash) rows enter the shuffle."""
+    keys = explode_bands(sig)
+    return (
+        keys.alias("a")
+        .join(
+            keys.alias("b"),
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
+def banded_keys(
+    docs_with_shingles: DataFrame, *, num_hashes: int = 32, bands: int = 8
+) -> DataFrame:
+    """(doc_id, band_id, band_hash) LSH bucket keys from a shingle
+    table: the :func:`minhash_bands` projection, then
+    :func:`explode_bands`.  The streaming near-dup index stores these
+    rows, and the batch pair join builds its candidates the same way,
+    so the two cannot drift."""
+    sig = docs_with_shingles.select(
+        "doc_id", minhash_bands(num_hashes=num_hashes, bands=bands).alias("bands")
+    )
+    return explode_bands(sig)
 
 
 def minhash_lsh_pairs(
@@ -141,44 +170,26 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH.
 
-    Plan shape (the scale path): signature is a narrow projection;
-    candidate generation explodes ``bands`` rows per doc and
-    self-joins on (band_id, band_hash) — an equi-join Catalyst
-    shuffles on the bucket key, so only colliding docs ever meet.
-    Verification computes true shingle Jaccard on candidates only.
+    One signature table ``(doc_id, shingles, bands)`` holds each
+    document's shingle set and its :func:`minhash_bands` array, and is
+    pinned through the keyed LRU, so every band is hashed once per
+    document, not once per join side per run.  Candidates come from
+    :func:`band_candidates` over the pinned ``bands`` column; the
+    verify joins read ``shingles`` from the same table and compute the
+    true shingle Jaccard on candidates only.  Above the pin's size
+    guard the table is recomputed per consumer: four corpus scans,
+    each band expression evaluated once per candidate-join side.
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
     """
-    rows_per_band = num_hashes // bands
-    # The shingle table is the one shared intermediate (feeds band
-    # hashing AND both sides of the verify join) — persist it.  At
-    # cluster scale this is the "signature table" you would write to
-    # storage once and reuse; recomputing it per consumer would scan
-    # the corpus five times.
-    sh = pin_shared(
-        shingles(docs, n=shingle_n).select("doc_id", "shingles"), tag="lsh_shingles"
+    sig = pin_shared(
+        shingles(docs, n=shingle_n)
+        .select("doc_id", "shingles")
+        .withColumn("bands", minhash_bands(num_hashes=num_hashes, bands=bands)),
+        tag="lsh_signature",
     )
-    banded = banded_keys(sh, num_hashes=num_hashes, bands=bands)
-    # Candidate generation stays NARROW: only (doc_id, band_id,
-    # band_hash) ever enters the self-join shuffle.  Shipping the
-    # shingle arrays through the band join would multiply shuffle
-    # bytes by bands × avg-shingle-size — the difference between a
-    # bucket join and a corpus broadcast at 100 TB.
-    left = banded.alias("a")
-    right = banded.alias("b")
-    cand = (
-        left.join(
-            right,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    # Verification tier: re-join the (narrow) candidate pairs against
-    # the shingle sets — candidates, not the corpus, drive this cost.
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    cand = band_candidates(sig)
+    sh_a = sig.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sh_b = sig.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     jac = F.expr(
         "size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))"
     )

@@ -1152,6 +1152,39 @@ def _mhx_min(h: int) -> str:
     return f"((x % {_MHX_M}) * {a} + {b}) % {_MHX_M}"
 
 
+def _mhx_sig(spark: SparkSession, sf_dir: str):
+    """(doc_id, shingles, m0..m15, bands): the md5-grid signature table
+    of dedup_minhash_exact, dedup_minhash_bbit and dedup_lsh_s_curve,
+    pinned once for all three.  ``bands`` holds the ``_MHX_BANDS`` band
+    keys md5(concat_ws(',', m_{b*r}, ..., m_{b*r+r-1})), r = 4, the
+    keys of the oracle's ``bands`` CTE."""
+    from sfs3_kinesis_spark.operators.dedup import shingles
+
+    # ONE md5 pass per shingle; the 16 minhash fns re-hash ints only
+    base = "CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)"
+    rpb = _MHX_HASHES // _MHX_BANDS
+    sh = shingles(t_nonnull(spark, sf_dir, "documents", "text"), n=3).select("doc_id", "shingles")
+    sig = sh.select(
+        "doc_id",
+        "shingles",
+        *[
+            F.expr(
+                f"array_min(transform(transform(shingles, s -> {base}), "
+                f"x -> {_mhx_min(h)}))"
+            ).alias(f"m{h}")
+            for h in range(_MHX_HASHES)
+        ],
+    )
+    band_keys = [
+        "md5(concat_ws(',', "
+        + ", ".join(f"CAST(m{h} AS STRING)" for h in range(b * rpb, (b + 1) * rpb))
+        + "))"
+        for b in range(_MHX_BANDS)
+    ]
+    sig = sig.withColumn("bands", F.array(*[F.expr(k) for k in band_keys]))
+    return pin_shared(sig, tag="mhx_sig")
+
+
 def _mhx_ctes() -> str:
     """The shared md5 shingle→signature→band→verify CTE chain, used
     by BOTH the pair oracle (dedup_minhash_exact) and the clustering
@@ -1229,51 +1262,8 @@ def _mhx_oracle() -> str:
     ),
 )
 def dedup_minhash_exact(spark: SparkSession, sf_dir: str):
-    from functools import reduce
-
-    from pyspark.sql import DataFrame
-
-    from sfs3_kinesis_spark.operators.dedup import shingles
-
-    base = "CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)"
-    rpb = _MHX_HASHES // _MHX_BANDS
-    sh = shingles(t_nonnull(spark, sf_dir, "documents", "text"), n=3).select("doc_id", "shingles")
-    # ONE md5 pass per shingle; the 16 minhash fns re-hash ints only
-    sig = sh.select(
-        "doc_id",
-        "shingles",
-        *[
-            F.expr(
-                f"array_min(transform(transform(shingles, s -> {base}), "
-                f"x -> {_mhx_min(h)}))"
-            ).alias(f"m{h}")
-            for h in range(_MHX_HASHES)
-        ],
-    )
-    sig = pin_shared(sig, tag="mhx_sig")
-
-    def band_df(bnd: int):
-        mins = ", ".join(
-            f"CAST(m{h} AS STRING)" for h in range(bnd * rpb, (bnd + 1) * rpb)
-        )
-        return sig.select(
-            "doc_id",
-            F.lit(bnd).alias("band_id"),
-            F.expr(f"md5(concat_ws(',', {mins}))").alias("band_key"),
-        )
-
-    bands = reduce(DataFrame.unionByName, [band_df(b) for b in range(_MHX_BANDS)])
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    sig = _mhx_sig(spark, sf_dir)
+    cand = dedup.band_candidates(sig)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb"))
     return (
@@ -2271,51 +2261,9 @@ def _bbit_oracle() -> str:
     ),
 )
 def dedup_minhash_bbit(spark: SparkSession, sf_dir: str):
-    from functools import reduce
-
-    from pyspark.sql import DataFrame
-
-    from sfs3_kinesis_spark.operators.dedup import shingles
-
-    base = "CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)"
-    rpb = _MHX_HASHES // _MHX_BANDS
     n = _MHX_HASHES
-    sh = shingles(t_nonnull(spark, sf_dir, "documents", "text"), n=3).select("doc_id", "shingles")
-    sig = sh.select(
-        "doc_id",
-        "shingles",
-        *[
-            F.expr(
-                f"array_min(transform(transform(shingles, s -> {base}), "
-                f"x -> {_mhx_min(h)}))"
-            ).alias(f"m{h}")
-            for h in range(_MHX_HASHES)
-        ],
-    )
-    sig = pin_shared(sig, tag="mhx_sig")
-
-    def band_df(bnd: int):
-        mins = ", ".join(
-            f"CAST(m{h} AS STRING)" for h in range(bnd * rpb, (bnd + 1) * rpb)
-        )
-        return sig.select(
-            "doc_id",
-            F.lit(bnd).alias("band_id"),
-            F.expr(f"md5(concat_ws(',', {mins}))").alias("band_key"),
-        )
-
-    bands = reduce(DataFrame.unionByName, [band_df(b) for b in range(_MHX_BANDS)])
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    sig = _mhx_sig(spark, sf_dir)
+    cand = dedup.band_candidates(sig)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         F.col("shingles").alias("sha"),
@@ -2637,10 +2585,6 @@ def _scurve_theo_sql(decile: str, wide_cast: str, floordiv: str) -> str:
     ),
 )
 def dedup_lsh_s_curve(spark: SparkSession, sf_dir: str):
-    from functools import reduce
-
-    from pyspark.sql import DataFrame
-
     from sfs3_kinesis_spark.operators.dedup import jaccard_pairs_exact, shingles
 
     d = t_nonnull(spark, sf_dir, "documents", "text")
@@ -2648,44 +2592,9 @@ def dedup_lsh_s_curve(spark: SparkSession, sf_dir: str):
     truth = jaccard_pairs_exact(sh, threshold_bp=3000).select(
         "doc_a", "doc_b", "jaccard_bp"
     )
-    # md5-grid band candidates — the same signature/band construction
-    # as dedup_minhash_exact, shared through the bounded LRU
-    base = "CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)"
-    rpb = _MHX_HASHES // _MHX_BANDS
-    sig = sh.select(
-        "doc_id",
-        *[
-            F.expr(
-                f"array_min(transform(transform(shingles, s -> {base}), "
-                f"x -> {_mhx_min(h)}))"
-            ).alias(f"m{h}")
-            for h in range(_MHX_HASHES)
-        ],
-    )
-    sig = pin_shared(sig, tag="scurve_sig")
-
-    def band_df(bnd: int):
-        mins = ", ".join(
-            f"CAST(m{h} AS STRING)" for h in range(bnd * rpb, (bnd + 1) * rpb)
-        )
-        return sig.select(
-            "doc_id",
-            F.lit(bnd).alias("band_id"),
-            F.expr(f"md5(concat_ws(',', {mins}))").alias("band_key"),
-        )
-
-    bands = reduce(DataFrame.unionByName, [band_df(b) for b in range(_MHX_BANDS)])
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .withColumn("caught", F.lit(1))
+    # md5-grid band candidates: dedup_minhash_exact's signature table
+    cand = dedup.band_candidates(_mhx_sig(spark, sf_dir)).withColumn(
+        "caught", F.lit(1)
     )
     hit = truth.join(cand, ["doc_a", "doc_b"], "left").select(
         "jaccard_bp", F.coalesce("caught", F.lit(0)).alias("caught")

@@ -48,6 +48,7 @@ seam — pass ``endpoint_url=`` to the wrappers), falling back to
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
 import os
 import re
@@ -276,11 +277,26 @@ def _shard_batch_path(root: str, stream_name: str, shard, batch_id: int) -> str:
     )
 
 
-def _shard_lines(root: str, stream_name: str, shard) -> list[str]:
-    """A shard's records in order: the legacy/direct-append file
-    first (test fixtures seed it), then one file per committed sink
-    epoch in batch-id order — per-epoch files are what makes a
-    replayed ``commit`` idempotent (atomic overwrite, not append)."""
+def _file_lines(path: str) -> list[str]:
+    with open(path, "r", encoding="utf-8") as fh:
+        return [ln for ln in fh.read().splitlines() if ln.strip()]
+
+
+@functools.lru_cache(maxsize=4096)
+def _line_count(path: str, mtime_ns: int, size: int) -> int:
+    """Records in one shard file, cached per file stamp: a closed
+    epoch file is opened to count it once, and a file that is
+    appended to or replaced is counted again."""
+    return len(_file_lines(path))
+
+
+def _shard_files(root: str, stream_name: str, shard) -> list[tuple[str, int]]:
+    """(path, record count) of a shard's files in record order: the
+    legacy/direct-append file first (test fixtures seed it), then one
+    file per committed sink epoch in batch-id order — per-epoch files
+    are what makes a replayed ``commit`` idempotent (atomic overwrite,
+    not append).  Listing and stat-ing them opens no file that was
+    counted before."""
     d = _stream_dir(root, stream_name)
     paths = []
     legacy = _shard_path(root, stream_name, shard)
@@ -293,10 +309,24 @@ def _shard_lines(root: str, stream_name: str, shard) -> list[str]:
             for f in sorted(os.listdir(d))
             if f.startswith(prefix) and f.endswith(".jsonl")
         )
-    lines: list[str] = []
+    files = []
     for p in paths:
-        with open(p, "r", encoding="utf-8") as fh:
-            lines.extend(ln for ln in fh.read().splitlines() if ln.strip())
+        st = os.stat(p)
+        files.append((p, _line_count(p, st.st_mtime_ns, st.st_size)))
+    return files
+
+
+def _read_lines(files: list[tuple[str, int]], lo: int, hi: int) -> list[str]:
+    """A shard's records ``lo`` .. ``hi - 1``, opening only the files
+    that hold them."""
+    lines: list[str] = []
+    base = 0
+    for path, n in files:
+        if base >= hi:
+            break
+        if base + n > lo:
+            lines.extend(_file_lines(path)[max(lo - base, 0) : hi - base])
+        base += n
     return lines
 
 
@@ -313,7 +343,7 @@ class _StubStreamReader(SimpleDataSourceStreamReader):
         shards = {}
         for s in describe_stream(self.root, self.stream):
             shards[s["id"]] = (
-                len(_shard_lines(self.root, self.stream, s["id"]))
+                sum(n for _, n in _shard_files(self.root, self.stream, s["id"]))
                 if pos == "LATEST"
                 else 0
             )
@@ -322,9 +352,9 @@ class _StubStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self):
         return self._initial
 
-    def _rows(self, shard: str, lines: list[str], lo: int, hi: int):
-        for seq in range(lo, min(hi, len(lines))):
-            rec = json.loads(lines[seq])
+    def _rows(self, shard: str, files: list[tuple[str, int]], lo: int, hi: int):
+        for seq, line in enumerate(_read_lines(files, lo, hi), start=lo):
+            rec = json.loads(line)
             yield (
                 rec["data"],
                 self.stream,
@@ -348,13 +378,13 @@ class _StubStreamReader(SimpleDataSourceStreamReader):
         rows = []
         for s in describe_stream(self.root, self.stream):
             sid = s["id"]
-            lines = _shard_lines(self.root, self.stream, sid)
-            ends[sid] = len(lines)
+            files = _shard_files(self.root, self.stream, sid)
+            ends[sid] = sum(n for _, n in files)
             lo = int(cursors.get(sid, 0))
             hi = lo
             if all(int(cursors.get(p, 0)) >= ends[p] for p in s["parents"]):
-                hi = len(lines) if self.limit is None else min(len(lines), lo + self.limit)
-                rows.extend(self._rows(sid, lines, lo, hi))
+                hi = ends[sid] if self.limit is None else min(ends[sid], lo + self.limit)
+                rows.extend(self._rows(sid, files, lo, hi))
             cursors[sid] = hi
         return (iter(rows), {"shards": cursors})
 
@@ -374,8 +404,8 @@ class _StubStreamReader(SimpleDataSourceStreamReader):
         ):
             lo = int(start.get("shards", {}).get(sid, 0))
             hi = int(end.get("shards", {}).get(sid, 0))
-            lines = _shard_lines(self.root, self.stream, sid)
-            rows.extend(self._rows(sid, lines, lo, hi))
+            files = _shard_files(self.root, self.stream, sid)
+            rows.extend(self._rows(sid, files, lo, hi))
         return iter(rows)
 
 

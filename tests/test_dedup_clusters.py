@@ -106,6 +106,66 @@ def test_cluster_table_invariants(spark, lsh_pairs):
     out.unpersist()
 
 
+def test_banded_keys_match_the_per_band_union_form(spark):
+    """``banded_keys`` computes every band in one array projection and
+    explodes it.  Its rows must equal the per-band form (one select per
+    band, band_id a literal) row for row, so a streaming band index
+    written before the kernel changed still matches after a restart."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the sleepy dog"),
+            (3, "two words"),
+            (4, None),
+            (5, "a a a a a a"),
+        ],
+        "doc_id long, text string",
+    )
+    sh = dedup.shingles(docs).select("doc_id", "shingles")
+
+    def band_hash(b: int) -> str:
+        mins = ", ".join(
+            f"cast(array_min(transform(shingles, s -> xxhash64(s, {h}))) as string)"
+            for h in range(b * 4, (b + 1) * 4)
+        )
+        return f"xxhash64(concat_ws(',', {mins}))"
+
+    union = reduce(
+        DataFrame.unionByName,
+        [
+            sh.select("doc_id", F.lit(b).alias("band_id"), F.expr(band_hash(b)).alias("band_hash"))
+            for b in range(8)
+        ],
+    )
+    got = dedup.banded_keys(sh, num_hashes=32, bands=8)
+    assert got.dtypes == union.dtypes
+    assert sorted(got.collect()) == sorted(union.collect())
+    assert got.count() == 5 * 8
+
+
+#: ``dedup_minhash_lsh`` at SF_SMOKE: (doc_a, doc_b, jaccard)
+_LSH_ROWS_SMOKE = [
+    (0, 50, 0.9524), (0, 82, 0.9545), (5, 450, 0.9756), (8, 12, 0.9737),
+    (8, 120, 0.9865), (8, 360, 0.9867), (12, 120, 0.9605), (12, 360, 0.9868),
+    (16, 369, 0.9882), (26, 176, 0.9885), (33, 436, 0.8889), (45, 487, 0.9643),
+    (50, 82, 0.9091), (56, 157, 0.9815), (77, 459, 0.9872), (89, 114, 0.9286),
+    (99, 174, 0.9881), (110, 467, 0.9891), (119, 425, 0.9714), (120, 360, 0.9733),
+    (144, 161, 0.9886), (211, 404, 0.9846), (229, 263, 0.9565), (260, 391, 0.9888),
+    (270, 329, 0.9881), (328, 428, 0.9744), (349, 411, 0.9808), (474, 498, 0.9894),
+]
+
+
+def test_dedup_minhash_lsh_rows_at_smoke_scale(spark):
+    from sfs3_kinesis_spark.plans import REGISTRY
+
+    rows = REGISTRY["dedup_minhash_lsh"].spark(spark, SF).collect()
+    assert sorted(tuple(r) for r in rows) == _LSH_ROWS_SMOKE
+
+
 def test_simhash_multiprobe_recall_vs_brute_force(spark):
     """Rotation-table probing (Manku et al.) must recover >= 85% of
     true hamming<=8 pairs where single-prefix bucketing finds ~16%,

@@ -76,12 +76,68 @@ def test_events_scan_pushes_event_type(spark):
     assert "EqualTo(event_type,click)" in plan
 
 
-@pytest.mark.parametrize("name", ["dedup_minhash_lsh", "similarity_lsh_pairs"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_minhash_lsh",
+        "dedup_minhash_exact",
+        "dedup_minhash_bbit",
+        "similarity_lsh_pairs",
+    ],
+)
 def test_lsh_candidate_joins_are_equi(spark, name):
     # LSH pruning only works if the bucket join is a hash equi-join
     plan = _plan(spark, name)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+#: each MinHash banding's outer band-key expression and band count
+_BAND_KEYS = {
+    "dedup_minhash_lsh": ("xxhash64(concat_ws(", 8),
+    "dedup_minhash_exact": ("md5(cast(concat_ws(", 4),
+    "dedup_minhash_bbit": ("md5(cast(concat_ws(", 4),
+}
+
+
+def _band_join_sides(plan):
+    """Both children of every join on ``band_id`` in an optimized
+    logical plan, as tree strings."""
+    sides, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "Join" and "band_id" in node.condition().toString():
+            sides += [node.left().treeString(), node.right().treeString()]
+        children = node.children()
+        stack += [children.apply(i) for i in range(children.size())]
+    return sides
+
+
+@pytest.mark.parametrize("pinned", [True, False], ids=["pinned", "guarded_out"])
+@pytest.mark.parametrize("name", sorted(_BAND_KEYS))
+def test_band_keys_hashed_once_per_join_side(spark, monkeypatch, name, pinned):
+    # every banding explodes one band-key array: no Union of per-band
+    # branches, and each band expression once per candidate-join side,
+    # whether the signature table is pinned or recomputed per consumer
+    # (a plain posexplode copies the array into an inferred Filter)
+    from sfs3_kinesis_spark.operators import scale
+
+    scale.clear_keyed_cache()
+    if not pinned:
+        monkeypatch.setattr(scale, "_PIN_MAX_EST_BYTES", -1)
+    df = REGISTRY[name].spark(spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    sides = _band_join_sides(plan)
+    assert len(sides) == 2
+    band_key, bands = _BAND_KEYS[name]
+    for side in sides:
+        assert "Union" not in side
+        assert side.count(band_key) == bands, side
+        assert ("InMemoryRelation" in side) == pinned
+    if not pinned:
+        # the corpus is scanned once per join side and verify side
+        assert len(re.findall(r"(?<!InMemory)Relation \[", plan.toString())) <= 4
+    scale.clear_keyed_cache()
 
 
 @pytest.mark.parametrize(

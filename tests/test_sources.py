@@ -414,8 +414,9 @@ def test_kinesis_stub_replayed_commit_is_idempotent(spark, tmp_path):
     from pyspark.sql.types import StructType
 
     from sfs3_kinesis_spark.sources.kinesis_stub import (
+        _read_lines,
         _RowsMessage,
-        _shard_lines,
+        _shard_files,
         _StubStreamWriter,
     )
 
@@ -432,10 +433,9 @@ def test_kinesis_stub_replayed_commit_is_idempotent(spark, tmp_path):
     import json as _json
 
     def shard_records(s):
-        return [
-            (r["partitionKey"], r["data"])
-            for r in map(_json.loads, _shard_lines(root, "replay-stream", s))
-        ]
+        files = _shard_files(root, "replay-stream", s)
+        lines = _read_lines(files, 0, sum(n for _, n in files))
+        return [(r["partitionKey"], r["data"]) for r in map(_json.loads, lines)]
 
     w.commit([_RowsMessage(rows)], batchId=0)
     first = {s: shard_records(s) for s in range(2)}
@@ -456,6 +456,60 @@ def test_kinesis_stub_replayed_commit_is_idempotent(spark, tmp_path):
     assert recs[-1] == ("t-0", "payload-0b")  # epoch order kept
     other = 1 - shard
     assert shard_records(other) == first[other]
+
+
+def test_kinesis_stub_batch_opens_only_new_files(tmp_path, monkeypatch):
+    """A micro-batch opens only the shard files that hold records at or
+    after its cursor, plus each new file once to count it: the number
+    of files a batch opens stays flat while epoch files accumulate.
+    Offsets keep the ``{"shards": {id: cursor}}`` form, and a replay
+    of the whole range returns the rows the batches returned (shard by
+    shard, so in another order)."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sfs3_kinesis_spark.sources import kinesis_stub
+    from sfs3_kinesis_spark.sources.kinesis_stub import (
+        _RowsMessage,
+        _StubStreamReader,
+        _StubStreamWriter,
+    )
+
+    options = {
+        "kinesis.streamName": "flat-stream",
+        "kinesis.region": "us-east-1",
+        "kinesis.endpointUrl": str(tmp_path / "kin"),
+        "kinesis.startingPosition": "TRIM_HORIZON",
+    }
+    schema = StructType(
+        [StructField("partitionKey", StringType()), StructField("data", StringType())]
+    )
+    writer = _StubStreamWriter(options, schema)
+    reader = _StubStreamReader(options)
+    opened = []
+
+    def counting_open(path, *args, **kwargs):
+        opened.append(path)
+        return open(path, *args, **kwargs)
+
+    monkeypatch.setattr(kinesis_stub, "open", counting_open, raising=False)
+    start = offset = reader.initialOffset()
+    got, opens = [], []
+    for epoch in range(40):
+        writer.commit(
+            [_RowsMessage([(f"k{epoch}-{i}", f"d{epoch}-{i}") for i in range(4)])],
+            batchId=epoch,
+        )
+        opened.clear()
+        rows, offset = reader.read(offset)
+        opens.append(sum(p.endswith(".jsonl") for p in opened))
+        got.extend(rows)
+    assert set(offset) == {"shards"} and sum(offset["shards"].values()) == 160
+    assert sorted(r[0] for r in got) == sorted(
+        f"d{e}-{i}" for e in range(40) for i in range(4)
+    )
+    # two shards: at most one new file each, opened to count and to read
+    assert max(opens) <= 4, opens
+    assert sorted(reader.readBetweenOffsets(start, offset)) == sorted(got)
 
 
 def test_kinesis_stub_reshard_split_merge_restart(spark, tmp_path):

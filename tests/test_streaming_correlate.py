@@ -292,7 +292,10 @@ def test_kinesis_stream_feeds_correlation_end_to_end(spark, tmp_path):
         qw.processAllAvailable()
     finally:
         qw.stop()
-    assert all(kinesis_stub._shard_lines(root, "status-events", s) for s in ("0", "1"))
+    assert all(
+        sum(n for _, n in kinesis_stub._shard_files(root, "status-events", s))
+        for s in ("0", "1")
+    )
 
     event_stream = parse_status_events(
         kinesis_stream(
